@@ -64,11 +64,17 @@ object GroupedStats {
   def withDrawdown(sf: SeriesFrame): SeriesFrame = {
     val w = sf.runWindow
     val step1 = sf.df.withColumn("__wealth", product(sf.r + lit(1.0)).over(w))
-    val step2 = step1.withColumn("__dd",
-      when(sf.r.isNull, lit(null))
-        .otherwise(least(fdiv(col("__wealth"), max("__wealth").over(w)) - lit(1.0), lit(0.0))))
+    val step2 = step1.withColumn("__dd", drawdown(sf.r, col("__wealth"), w))
     sf.copy(df = step2)
   }
+
+  /** Clipped drawdown of return `r` from its running `wealth` (Π(1+r) over
+    * the running window `w`): wealth ÷ running peak − 1, at most 0; null
+    * where `r` is null.
+    */
+  def drawdown(r: Column, wealth: Column, w: WindowSpec): Column =
+    when(r.isNull, lit(null))
+      .otherwise(least(fdiv(wealth, max(wealth).over(w)) - lit(1.0), lit(0.0)))
 
   /** max_drawdown / ulcer_index / recovery_factor (+ any extra metric
     * expressions over the raw returns) in ONE aggregation over the

@@ -29,7 +29,7 @@ object Exprs {
     element_at(transform(array(value), body), 1)
 
   /** Bit-exact, allocation-free replacement for `round(x, 0).cast("long")`
-    * on a DoubleType column with |x| < 2^51 and finite (the exact-cents
+    * on a DoubleType column with |x| ≤ 2^53 and finite (the exact-cents
     * quantization idiom of the fact queries).
     *
     * Spark's Round on doubles evaluates
@@ -47,8 +47,12 @@ object Exprs {
     * shortest-repr subtlety of Double.toString cannot flip a boundary:
     * every k.5 with k < 2^51 is exactly representable, so a double
     * strictly below it prints strictly below it. HALF_UP rounds negatives
-    * away from zero, hence the sign peel. Equality to `round(x, 0)` is
-    * property-tested on boundary and random vectors (ExprsRoundSpec).
+    * away from zero, hence the sign peel. The argument above is for
+    * |x| < 2^51; up to 2^53 the result still matches, because there every
+    * double is an integer or an exact k.5 and the inexact `a + 0.5` and
+    * `t − 0.5` round half to even, which the carry correction undoes.
+    * Equality to `round(x, 0)` is property-tested on boundary and random
+    * vectors up to 2^53 (ExprsRoundSpec).
     */
   def roundHalfUpLong(x: Column): Column = {
     val a = abs(x)

@@ -31,3 +31,12 @@ final case class NoTemporalColumnError()
   */
 final case class NoReturnColumnError()
     extends GraftError("No return column found in benchmark frame.")
+
+/** A report over zero rows: the returns frame is empty or, with a
+  * benchmark, shares no rows with it after the date match. (No reference
+  * counterpart: the reference fails later, inside a metric.)
+  */
+final case class EmptyReturnsError(withBenchmark: Boolean)
+    extends GraftError(
+      if (withBenchmark) "The returns frame, or its overlap with the benchmark, is empty."
+      else "The returns frame is empty.")

@@ -75,8 +75,9 @@ object ExtQueries {
   /** A/B toggle (tools/AbOverlap, round-13 verdict item 9): when the
     * session conf `graft.queries.sequentialCheckpoints` is "true", the
     * queries that normally submit independent eager checkpoint builds from
-    * a thread pool (q216/q218/q240) run them inline instead, so the
-    * overlap's worth is measurable on demand. Defaults to concurrent.
+    * a thread pool (q218/q240) run them inline instead, so the overlap's
+    * worth is measurable on demand. Defaults to concurrent. q216 builds its
+    * checkpoints sequentially always and does not consult it.
     */
   private[queries] def sequentialCheckpoints(spark: SparkSession): Boolean =
     try spark.conf.get("graft.queries.sequentialCheckpoints", "false") == "true"

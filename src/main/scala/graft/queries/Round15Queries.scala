@@ -18,10 +18,10 @@ import graft.reports.Reports
   * formatting (×100 percent rows, round-half-even-on-the-exact-binary-double
   * to 2 places, NaN/±Inf→"-", 0→"0", shortest-repr rendering). q229 runs the
   * same gate over a MULTI-STRATEGY report (3 pivoted assets + benchmark, 70
-  * rows × 4 metric columns) so the report's column-BATCHED passes — one wide
-  * aggregation / one stacked long-format pass per metric family for ALL
-  * columns, the SURVEY §3 restructure the job-count specs pin — are verified
-  * on their VALUES, not just their job counts. Both oracles come from one
+  * rows × 4 metric columns) so the report's column-BATCHED passes — one
+  * per-asset aggregation and one calendar pass over a long-format view of
+  * ALL columns, the SURVEY §3 restructure the job-count and plan-size specs
+  * pin — are verified on their VALUES, not just their job counts. Both oracles come from one
   * column-list-parameterized SQL builder.
   *
   * Formatting parity: Java's `BigDecimal(d).setScale(2, HALF_EVEN)` operates
@@ -59,9 +59,9 @@ object Round15Queries {
 
   /** Multi-strategy report: the three per-asset return series pivoted wide
     * (A, N, R) plus the market benchmark — 70 rows × 4 metric columns. Every
-    * cell of every column rides the SAME batched passes (one wide scalar
-    * aggregation, one stacked per-family pass, one bucket pass per
-    * granularity), so this gate proves the batching computes per-column
+    * cell of every column rides the SAME batched passes (one per-asset
+    * aggregation and one calendar pass over the long-format view), so this
+    * gate proves the batching computes per-column
     * numbers identical to the reference's one-column-at-a-time semantics.
     */
   def q229ReportMulti(spark: SparkSession, sfDir: String): DataFrame = {

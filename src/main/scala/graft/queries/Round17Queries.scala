@@ -149,7 +149,7 @@ object Round17Queries {
       catch {
         case t: Throwable =>
           try Await.ready(exactF, Duration.Inf)
-          catch { case _: InterruptedException => () }
+          catch { case _: InterruptedException => Thread.currentThread().interrupt() }
           throw t
       }
     val nCorpus = corpus.count()

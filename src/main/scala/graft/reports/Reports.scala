@@ -1,15 +1,16 @@
 package graft.reports
 
 import java.sql.{Date, Timestamp}
-import java.time.LocalDate
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.api.{GroupedStats, SeriesFrame}
-import graft.core.{Dist, Exprs, ReturnsFrame}
+import graft.api.GroupedStats
+import graft.core.{Dist, EmptyReturnsError, Exprs, ReturnsFrame}
 import graft.core.Exprs.fdiv
 import graft.functions.GraftProduct.product
 import graft.stats.Smart
@@ -28,22 +29,25 @@ import graft.stats.Smart
   *  - exact row orders: basic 36 / full 70 (tests/test_quantstats_parity.py:57-167).
   *
   * Execution is restructured Spark-first (SURVEY.md §3 note): instead of the
-  * reference's ~40 sequential one-metric queries per column, metrics are
-  * batched into a fixed number of aggregation passes whose count does NOT
-  * grow with the column count: one wide scalar pass, one stacked long-format
-  * pass each for drawdown stats (+ autocorr penalties), episodes, and
-  * streaks — all with windows partitioned by asset, never a global
-  * single-partition window — plus one calendar-bucket pass per bucket
-  * granularity and one benchmark pass. A full 10-asset report is ~9 jobs.
-  *
-  * Those passes are mutually independent once the two cached frames (the
-  * zero-filled wide frame and the melted drawdown frame) are materialized,
-  * so they are SUBMITTED CONCURRENTLY from a small driver-side pool: the
-  * report's wall-clock is the slowest single pass, not the sum of ~9
-  * scheduler floors. On a real cluster this is the same win — concurrent
-  * jobs pipeline into free executor slots. The frames are count()-forced
-  * BEFORE forking so concurrent consumers share one cache materialization
-  * instead of racing to compute it.
+  * reference's ~40 sequential one-metric queries per column, the prepared
+  * frame is cached once and melted into the long format of
+  * [[graft.api.GroupedStats]] — one row per (date, asset), the benchmark
+  * return riding along on every row — and every metric is a per-asset
+  * aggregate over that view. A report is three passes whose plans do not
+  * grow with the column count:
+  *  - P0, one driver round trip: row count, latest date and the null-aware
+  *    start/end date per asset (the latest date fixes the trailing-window
+  *    literals of the next pass);
+  *  - the per-asset pass: ONE `groupBy(asset)` over asset-partitioned
+  *    windows (drawdown, episode islands, sign runs, lag-1 pairs) computes
+  *    the scalar, drawdown, episode, streak and benchmark metrics — one
+  *    exchange, never a global single-partition window;
+  *  - the calendar pass: ONE grouping-sets aggregation keyed on
+  *    (asset, year, month) / (asset, year, quarter) / (asset, year), then
+  *    one per-asset aggregation of the bucket returns.
+  * The per-asset and calendar passes are independent, so the calendar pass
+  * is submitted from a small driver-side pool while the per-asset pass runs
+  * on the caller's thread; both read the cache P0 has already built.
   */
 object Reports {
 
@@ -114,302 +118,80 @@ object Reports {
       outputNames = benchmarkTitle +: strategyOut
     }
     frame = frame.cache()
-
-    val ord: Column = temporal.map(col).getOrElse(monotonically_increasing_id())
-    val names = outputNames
-
-    // ---- P0: start/end dates per column + max date (raw temporal scalar:
-    // time-of-day must survive for the trailing-window boundaries) ----
-    val (startDates, endDates, maxRawOpt): (Map[String, Any], Map[String, Any], Option[Any]) =
-      temporal match {
-        case None => (Map.empty, Map.empty, None)
-        case Some(t) =>
-          val aggs = names.flatMap(n => Seq(
-            min(when(col(n).isNotNull, col(t))).as(s"__s_$n"),
-            max(when(col(n).isNotNull, col(t))).as(s"__e_$n"))) :+ max(col(t)).as("__mx")
-          val row = frame.agg(aggs.head, aggs.tail: _*).head()
-          val s = names.map(n => n -> row.getAs[Any](s"__s_$n")).toMap
-          val e = names.map(n => n -> row.getAs[Any](s"__e_$n")).toMap
-          (s, e, Option(row.getAs[Any]("__mx")))
+    try {
+      val rows = metricRows(frame, temporal, outputNames, benchName, rf, full, sep,
+        compounded, periodsPerYear, pct)
+      val out = buildOutput(spark, rows, outputNames)
+      if (!display) out
+      else {
+        // reference parity: display=True PRINTS the table and returns None
+        // (alphastats/reports.py:287-290) — here, an empty frame of the same
+        // schema as the None-equivalent
+        out.show(rows.size, truncate = false)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out.schema)
       }
+    } finally frame.unpersist()
+  }
 
-    // ---- zero-filled metric frame (reports.py:378) ----
-    val zf = frame.select(
-      (temporal.map(col).toSeq :+ ord.as("__ord")) ++
-        names.map(n => coalesce(col(n).cast("double"), lit(0.0)).as(n)): _*).cache()
-
-    /** max(ts) shifted by calendar months/years, same temporal type —
-      * matches the reference's offset_by (keeps time-of-day on timestamps).
-      */
-    def boundary(mx: Any, months: Int, years: Int): Column =
-      lit(graft.stats.Calendar.shift(mx, months, years))
-
-    // ---- P1: one wide scalar-aggregate pass ----
-    case class P1(n: String) {
-      val c: Column = col(n)
-      def x: Column = Exprs.excess(c, rf)
-      def condProd(cond: Column): Column =
-        product(when(cond, c + lit(1.0)).otherwise(lit(1.0))) - lit(1.0)
-      def condCagr(cond: Column): Column =
-        pow(product(when(cond, c + lit(1.0)).otherwise(lit(1.0))),
-          lit(periodsPerYear.toDouble) / sum(when(cond, 1).otherwise(0))) - lit(1.0)
-      def exprs: Seq[Column] = {
-        val t = temporal.map(col).orNull
-        val base = Seq(
-          Exprs.exposure(c).as(s"exposure__$n"),
-          Exprs.comp(c).as(s"comp__$n"),
-          sum(c).as(s"sum__$n"),
-          Exprs.cagr(c, rf, compounded, periodsPerYear).as(s"cagr__$n"),
-          Exprs.cagr(c, 0.0, compounded, periodsPerYear).as(s"cagr0__$n"),
-          Exprs.sharpe(c, rf, periodsPerYear, annualize = true).as(s"sharpe__$n"),
-          // PSR base: NO rf here — the reference's probabilistic_sharpe_ratio
-          // uses a no-rf Sharpe and subtracts rf once in the CDF argument
-          // (alphastats/stats.py:277,295)
-          Exprs.sharpe(c, 0.0, periodsPerYear, annualize = false).as(s"sharpe_na__$n"),
-          Exprs.sortino(c, rf, periodsPerYear, annualize = true).as(s"sortino__$n"),
-          Exprs.omega(c, 0.0).as(s"omega__$n"),
-          Exprs.gainToPain(c, rf).as(s"g2p__$n"),
-          Exprs.payoffRatio(c).as(s"payoff__$n"),
-          Exprs.profitFactor(c).as(s"pf__$n"),
-          Exprs.commonSenseRatio(c).as(s"csr__$n"),
-          Exprs.cpcIndex(c).as(s"cpc__$n"),
-          Exprs.tailRatio(c, 0.95).as(s"tail__$n"),
-          Exprs.outlierWinRatio(c, 0.99).as(s"owr__$n"),
-          Exprs.outlierLossRatio(c, 0.01).as(s"olr__$n"),
-          Exprs.skew(c).as(s"skew__$n"),
-          Exprs.kurtosis(c).as(s"kurt__$n"),
-          Exprs.expectedReturn(c).as(s"expd__$n"),
-          Exprs.kellyCriterion(c).as(s"kelly__$n"),
-          Exprs.riskOfRuin(c).as(s"ror__$n"),
-          Exprs.valueAtRisk(c, 1.0, 0.95).as(s"var__$n"),
-          Exprs.volatility(c, periodsPerYear, annualize = true).as(s"vol__$n"),
-          Exprs.winRate(c).as(s"windays__$n"),
-          max(c).as(s"best__$n"),
-          min(c).as(s"worst__$n"),
-          count(c).as(s"count__$n"))
-        val windows = (temporal, maxRawOpt) match {
-          case (Some(_), Some(mx)) =>
-            val (my, mm) = graft.stats.Calendar.yearMonth(mx)
-            Seq(
-              condProd(year(t) === my && month(t) === mm).as(s"mtd__$n"),
-              condProd(t >= boundary(mx, -3, 0)).as(s"m3__$n"),
-              condProd(t >= boundary(mx, -6, 0)).as(s"m6__$n"),
-              condProd(year(t) === my).as(s"ytd__$n"),
-              condProd(t >= boundary(mx, 0, -1)).as(s"y1__$n"),
-              condCagr(t >= boundary(mx, 0, -3)).as(s"y3__$n"),
-              condCagr(t >= boundary(mx, 0, -5)).as(s"y5__$n"),
-              condCagr(t >= boundary(mx, 0, -10)).as(s"y10__$n"))
-          case _ => Nil
-        }
-        base ++ windows
-      }
-    }
-    // ---- concurrent pass submission: materialize the shared caches ONCE on
-    // this thread, then submit every independent aggregation pass from a
-    // bounded pool — the report costs max(pass), not sum(passes) ----
-    zf.count()
-    implicit val passEc: scala.concurrent.ExecutionContext = Reports.passEc
-    def await[T](f: scala.concurrent.Future[T]): T =
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-
-    val p1Exprs = names.flatMap(n => P1(n).exprs)
-    val p1F = scala.concurrent.Future { zf.agg(p1Exprs.head, p1Exprs.tail: _*).head() }
-    lazy val p1 = await(p1F)
-    def g(k: String, n: String): Double = {
-      val i = p1.fieldIndex(s"${k}__$n")
-      if (p1.isNullAt(i)) Double.NaN else p1.getAs[Any](i) match {
-        case d: Double => d
-        case l: java.lang.Long => l.toDouble
-      }
-    }
-
-    // ---- stacked long format: the multi-pass families (drawdown stats +
-    // autocorr penalties, episodes, streaks) melt the zero-filled frame ONCE
-    // into (asset, __ord, r) and run key-partitioned windows — one
-    // aggregation per family for ALL columns, no per-column jobs and no
-    // global single-partition windows (this is Reports' internal use of the
-    // GroupedStats scale core).
-    val stacked = zf.select(col("__ord"), explode(map(
-      names.flatMap(n => Seq(lit(n), zf(n))): _*)).as(Seq("__asset", "__r")))
-    val ddf = GroupedStats.withDrawdown(
-      SeriesFrame(stacked, Seq("__asset"), "__ord", "__r")).df.cache()
-    // materialize before forking P2/P3/P4 — three concurrent consumers must
-    // share one cache build, not race to compute the window three times
-    ddf.count()
-    val rr = col("__r")
-    val ddc = col("__dd")
-
-    // ---- P2: drawdown pass (max dd, ulcer, recovery, serenity, cvar) for
-    // all columns in one aggregation; in full mode the smart-ratio lag pairs
-    // ride along on the same asset partitioning ----
-    val z05 = Dist.invCdf(0.05)
-    val wholeA = Window.partitionBy(col("__asset"))
-    val prevW = Window.partitionBy(col("__asset")).orderBy(col("__ord"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val s3 = ddf
-      .withColumn("__ddvar", avg(ddc).over(wholeA) + lit(z05) * stddev_samp(ddc).over(wholeA))
-      .withColumn("__rvar", avg(rr).over(wholeA) + lit(z05) * stddev_samp(rr).over(wholeA))
-      .withColumn("__prev",
-        if (full) last(rr, ignoreNulls = true).over(prevW) else lit(null))
-    val ddCvar = coalesce(avg(when(ddc < col("__ddvar"), ddc)), first(col("__ddvar")))
-    val ulcer = sqrt(sum(ddc * ddc) / (count(rr) - lit(1)))
-    val p2df = s3.groupBy(col("__asset")).agg(
-      min(ddc).as("maxdd"),
-      ulcer.as("ulcer"),
-      fdiv(abs(sum(rr) - lit(0.0)), abs(min(ddc))).as("recovery"),
-      fdiv(sum(rr) - lit(rf), ulcer * fdiv(-ddCvar, stddev_samp(rr))).as("serenity"),
-      coalesce(avg(when(rr < col("__rvar"), rr)), first(col("__rvar"))).as("cvar"),
-      count(rr).as("n"),
-      corr(col("__prev"), rr).as("rho"))
-    val p2rowsF = scala.concurrent.Future {
-      p2df.collect().map(r => r.getAs[String]("__asset") -> r).toMap
-    }
-    lazy val p2rows: Map[String, Row] = await(p2rowsF)
-    def g2(k: String, n: String): Double = {
-      val row = p2rows(n)
-      val i = row.fieldIndex(k)
-      if (row.isNullAt(i)) Double.NaN else row.getDouble(i)
-    }
-
-    // ---- P3/P4: episodes + streaks, all columns per pass (row-count
-    // semantics, because the reference passes bare series — reports.py:397-414) ----
-    val wA = Window.partitionBy(col("__asset")).orderBy(col("__ord"))
-    val wIn = Window.partitionBy(col("__asset"), col("__in")).orderBy(col("__ord"))
-    val episodeRowsF = scala.concurrent.Future { ddf
-      .withColumn("__in", ddc.isNotNull && ddc < 0)
-      .withColumn("__island", row_number().over(wA) - row_number().over(wIn))
-      .filter(col("__in"))
-      .groupBy(col("__asset"), col("__island"))
-      .agg(count(lit(1)).as("__len"), min(ddc).as("__depth"))
-      .groupBy(col("__asset"))
-      .agg(max("__len").as("maxlen"), avg("__len").as("avglen"),
-        avg("__depth").as("avgdepth"))
-      .collect()
-      .map(r => r.getAs[String]("__asset") ->
-        ((r.getAs[Long]("maxlen"), r.getAs[Double]("avglen"), r.getAs[Double]("avgdepth"))))
-      .toMap
-    }
-    lazy val episodeRows: Map[String, (Long, Double, Double)] = await(episodeRowsF)
-    // an asset with no drawdown episodes has no aggregate row — zeros, as the
-    // reference's empty-episode frame yields
-    def episode(n: String): (Long, Double, Double) =
-      episodeRows.getOrElse(n, (0L, 0.0, 0.0))
-
-    val streakRowsF = scala.concurrent.Future {
-      if (!full) Map.empty[String, (Long, Long)]
-      else GroupedStats.streaks(SeriesFrame(ddf, Seq("__asset"), "__ord", "__r"))
-        .collect()
-        .map(r => r.getAs[String]("__asset") ->
-          ((r.getAs[Long]("consecutive_wins"), r.getAs[Long]("consecutive_losses"))))
-        .toMap
-    }
-    lazy val streakRows: Map[String, (Long, Long)] = await(streakRowsF)
-
-    // ---- P5: ONE calendar pass for all three bucket granularities ----
-    // r13 (optimization guide §2.3/§2.4): the monthly/quarterly/yearly
-    // bucket families each scanned zf separately (three jobs, three full
-    // scans at cluster scale). GROUPING SETS ((y,m),(y,q),(y)) computes
-    // every grain's bucket values in one scan — the Expand triples rows
-    // before the partial aggregate, but the exchange still carries only
-    // bucket-level rows — and the per-grain finals run as ONE aggregation
-    // over the bounded keyed frame, each final fed `when(gid = grain)` so
-    // it sees exactly its grain's rows (every final is a null-skipping
-    // aggregate: product/sum/avg/min/max/conditional counts). Bucket
-    // values per grain are the identical Π(1+r)/Σr over the identical row
-    // sets the per-grain groupBys produced.
+  /** The report's (label, per-column value) rows over the cached, prepared
+    * frame: `names` are its metric columns (benchmark first, if any).
+    */
+  private def metricRows(frame: DataFrame, temporal: Option[String], names: Seq[String],
+      benchName: Option[String], rf: Double, full: Boolean, sep: Boolean,
+      compounded: Boolean, periodsPerYear: Int, pct: Double): Seq[(String, Map[String, Any])] = {
     val t = temporal.map(col).orNull
-    // grouping-set ids for grouping columns (__y, __m, __q):
-    // (y,m) -> q aggregated -> 1; (y,q) -> m aggregated -> 2; (y) -> 3
-    val monthlyFinals: Seq[(String, Column => Column, Boolean)] =
-      ("g2p1m", (c: Column) => Exprs.gainToPain(c, rf), false) +: (if (full) Seq(
-        ("expm", Exprs.expectedReturn: Column => Column, true),
-        ("bestm", (c: Column) => max(c), true),
-        ("worstm", (c: Column) => min(c), true),
-        ("avgup", Exprs.avgWin: Column => Column, true),
-        ("avgdown", Exprs.avgLoss: Column => Column, true),
-        ("winm", Exprs.winRate: Column => Column, true)) else Nil)
-    val yearlyFinals: Seq[(String, Column => Column, Boolean)] =
-      if (!full) Nil else Seq(
-        ("expy", Exprs.expectedReturn: Column => Column, true),
-        ("besty", (c: Column) => max(c), true),
-        ("worsty", (c: Column) => min(c), true),
-        ("winy", Exprs.winRate: Column => Column, true))
-    val quarterlyFinals: Seq[(String, Column => Column, Boolean)] =
-      if (!full) Nil else Seq(("winq", Exprs.winRate: Column => Column, true))
-    val calendarRowF = scala.concurrent.Future {
-      temporal.map { _ =>
-        val allFinals = monthlyFinals ++ yearlyFinals ++ quarterlyFinals
-        val bucketVals =
-          (if (allFinals.exists(_._3)) names.map(n => Exprs.comp(zf(n)).as(s"__c__$n")) else Nil) ++
-            (if (allFinals.exists(!_._3)) names.map(n => sum(zf(n)).as(s"__s__$n")) else Nil)
-        val zb = zf.withColumn("__y", year(t)).withColumn("__m", month(t))
-          .withColumn("__q", quarter(t))
-        val sets: Seq[Seq[Column]] =
-          Seq(Seq(col("__y"), col("__m"))) ++
-            (if (full) Seq(Seq(col("__y"), col("__q")), Seq(col("__y"))) else Nil)
-        val keyed = zb.groupingSets(sets, col("__y"), col("__m"), col("__q"))
-          .agg(grouping_id().as("__gid"), bucketVals: _*)
-        def grainExprs(gid: Int,
-            finals: Seq[(String, Column => Column, Boolean)]): Seq[Column] =
-          names.flatMap(n => finals.map { case (k, f, compounded) =>
-            f(when(col("__gid") === gid,
-              keyed(if (compounded) s"__c__$n" else s"__s__$n"))).as(s"${k}__$n")
-          })
-        val aggExprs = grainExprs(1, monthlyFinals) ++
-          grainExprs(2, quarterlyFinals) ++ grainExprs(3, yearlyFinals)
-        keyed.agg(aggExprs.head, aggExprs.tail: _*).head()
-      }
-    }
-    // all three grain views read the SAME combined row (field names are
-    // disjoint across grains); basic mode never looks at yearly/quarterly
-    lazy val monthly = await(calendarRowF)
-    lazy val yearly = if (full) await(calendarRowF) else None
-    lazy val quarterly = if (full) await(calendarRowF) else None
+    val ord: Column = temporal.map(col).getOrElse(monotonically_increasing_id())
 
-    def gb(m: Option[Row], k: String, n: String): Any = m match {
-      case None => "-"
-      case Some(row) =>
-        val i = row.fieldIndex(s"${k}__$n")
-        if (row.isNullAt(i)) Double.NaN else row.getAs[Any](i)
-    }
+    // ---- the long view: one row per (date, asset) with the raw return
+    // `__x`, its zero-filled twin `__r` (reports.py:378) and the zero-filled
+    // benchmark return `__b` (a typed null without a benchmark). Not cached:
+    // it is a projection of the cached frame ----
+    val long = frame.select(temporal.map(col).toSeq ++ Seq(
+      ord.as("__ord"),
+      benchName.fold(lit(null).cast("double"))(bn =>
+        coalesce(col(bn).cast("double"), lit(0.0))).as("__b"),
+      explode(map(names.flatMap(n => Seq(lit(n), col(n).cast("double"))): _*))
+        .as(Seq("__asset", "__x"))): _*)
+      .withColumn("__r", coalesce(col("__x"), lit(0.0)))
 
-    // ---- P8: benchmark metrics pass ----
-    val benchRowF = scala.concurrent.Future { benchName.map { bn =>
-      val b = col(bn)
-      val exprs = strategyOut.flatMap { n =>
-        val c = col(n)
-        val beta = fdiv(covar_samp(c, b), var_samp(b))
-        val corrC = corr(c, b)
-        val active = c - b
-        Seq(
-          (corrC * corrC).as(s"r2__$n"),
-          fdiv(avg(active), stddev_samp(active)).as(s"ir__$n"),
-          beta.as(s"beta__$n"),
-          // the reference's Alpha row calls stats.greeks with its DEFAULT
-          // periods=252 regardless of periods_per_year (reports.py _greek) —
-          // preserve the quirk
-          ((avg(c) - beta * avg(b)) * 252).as(s"alpha__$n"),
-          corrC.as(s"corr__$n"),
-          fdiv(Exprs.comp(c) - lit(rf), beta).as(s"treynor__$n"))
-      }
-      zf.agg(exprs.head, exprs.tail: _*).head()
-    } }
-    lazy val benchRow: Option[Row] = await(benchRowF)
-    def gbm(k: String, n: String): Any =
-      if (benchName.contains(n)) "-"
-      else benchRow.map { row =>
-        val i = row.fieldIndex(s"${k}__$n")
-        if (row.isNullAt(i)) Double.NaN else row.getDouble(i)
-      }.getOrElse("-")
+    // ---- P0: row count, latest date and the start/end dates per asset
+    // (the raw temporal scalar: time-of-day must survive for the trailing-
+    // window boundaries) ----
+    val p0 = byAsset(long, count(lit(1)).as("rows") +: temporal.toSeq.flatMap(_ => Seq(
+      max(t).as("mx"),
+      min(when(col("__x").isNotNull, t)).as("start"),
+      max(when(col("__x").isNotNull, t)).as("end"))))
+    // every asset has a group of all the frame's rows, so a zero-row frame
+    // has none
+    if (p0.isEmpty) throw EmptyReturnsError(benchName.isDefined)
+    val maxRawOpt: Option[Any] =
+      if (temporal.isEmpty) None else Option(p0.head._2.getAs[Any]("mx"))
+
+    // the two passes are independent: the calendar pass runs from the pool
+    // while the per-asset pass runs here, and it is joined on every path so
+    // a failed per-asset pass never leaves it running against the cache
+    val calendarF = Future(calendarPass(long, t, temporal, rf, full))(passEc)
+    val main =
+      try perAssetPass(long, t, maxRawOpt, benchName, rf, full, compounded, periodsPerYear)
+      finally Await.ready(calendarF, Duration.Inf)
+    val calendar = Await.result(calendarF, Duration.Inf)
+
+    def field(row: Row, k: String): Any = {
+      val i = row.fieldIndex(k)
+      if (row.isNullAt(i)) Double.NaN else row.get(i)
+    }
+    def g(k: String, n: String): Double = field(main(n), k) match {
+      case d: Double => d
+      case l: Long => l.toDouble
+    }
+    def gLong(k: String, n: String): Long = main(n).getAs[Long](k)
+    def gb(k: String, n: String): Any = calendar.fold[Any]("-")(rows => field(rows(n), k))
+    def gbm(k: String, n: String): Any = if (benchName.contains(n)) "-" else field(main(n), k)
+    def date(k: String, n: String): Any = if (temporal.isEmpty) null else p0(n).getAs[Any](k)
 
     // ---- autocorr penalties (full mode): the lag-1 corr was collected in
-    // the P2 aggregation; only the closed-form decay sum runs driver-side ----
-    def penalty(n: String): Double = {
-      val row = p2rows(n)
-      val i = row.fieldIndex("rho")
-      Smart.penaltyOf(row.getAs[Long]("n"),
-        if (row.isNullAt(i)) None else Some(row.getDouble(i)))
-    }
+    // the per-asset pass; only the closed-form decay sum runs driver-side ----
+    def penalty(n: String): Double = Smart.penaltyOf(gLong("count", n), Some(g("rho", n)))
 
     // ---- assemble rows ----
     val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Map[String, Any])]
@@ -433,8 +215,8 @@ object Reports {
       Dist.cdf((b - rf) / sigma)
     }
 
-    add("Start Period", n => fmtDate(startDates.getOrElse(n, null)))
-    add("End Period", n => fmtDate(endDates.getOrElse(n, null)))
+    add("Start Period", n => fmtDate(date("start", n)))
+    add("End Period", n => fmtDate(date("end", n)))
     add("Risk-Free Rate", _ => rf * pct)
     add("Time in Market", n => g("exposure", n) * pct)
     addSep()
@@ -451,8 +233,8 @@ object Reports {
     if (full) add("Smart Sortino/√2", n => g("sortino", n) / penalty(n) / math.sqrt(2.0))
     add("Omega", n => g("omega", n))
     addSep()
-    add("Max Drawdown", n => g2("maxdd", n) * pct)
-    add("Longest DD Days", n => episode(n)._1)
+    add("Max Drawdown", n => g("maxdd", n) * pct)
+    add("Longest DD Days", n => gLong("maxlen", n))
     if (full) {
       addSep()
       add("Volatility (ann.)", n => g("vol", n) * pct)
@@ -461,24 +243,24 @@ object Reports {
         add("Information Ratio", n => gbm("ir", n))
       }
       add("Calmar", n => {
-        val mdd = math.abs(g2("maxdd", n))
+        val mdd = math.abs(g("maxdd", n))
         if (mdd == 0) Double.NaN else g("cagr0", n) / mdd
       })
       add("Skew", n => g("skew", n))
       add("Kurtosis", n => g("kurt", n))
       add("Expected Daily", n => g("expd", n) * pct)
-      add("Expected Monthly", n => numOrDash(gb(monthly, "expm", n), pct))
-      add("Expected Yearly", n => numOrDash(gb(yearly, "expy", n), pct))
+      add("Expected Monthly", n => numOrDash(gb("expm", n), pct))
+      add("Expected Yearly", n => numOrDash(gb("expy", n), pct))
       add("Kelly Criterion", n => g("kelly", n) * pct)
       add("Risk of Ruin", n => g("ror", n))
       add("Daily Value-at-Risk", n => g("var", n) * pct)
-      add("Expected Shortfall (cVaR)", n => g2("cvar", n) * pct)
-      add("Max Consecutive Wins", n => streakRows(n)._1)
-      add("Max Consecutive Losses", n => streakRows(n)._2)
+      add("Expected Shortfall (cVaR)", n => g("cvar", n) * pct)
+      add("Max Consecutive Wins", n => gLong("wins", n))
+      add("Max Consecutive Losses", n => gLong("losses", n))
     }
     addSep()
     add("Gain/Pain Ratio", n => g("g2p", n))
-    add("Gain/Pain (1M)", n => numOrDash(gb(monthly, "g2p1m", n), 1.0))
+    add("Gain/Pain (1M)", n => numOrDash(gb("g2p1m", n), 1.0))
     addSep()
     add("Payoff Ratio", n => g("payoff", n))
     add("Profit Factor", n => g("pf", n))
@@ -503,25 +285,25 @@ object Reports {
       addSep()
       add("Best Day", n => g("best", n) * pct)
       add("Worst Day", n => g("worst", n) * pct)
-      add("Best Month", n => numOrDash(gb(monthly, "bestm", n), pct))
-      add("Worst Month", n => numOrDash(gb(monthly, "worstm", n), pct))
-      add("Best Year", n => numOrDash(gb(yearly, "besty", n), pct))
-      add("Worst Year", n => numOrDash(gb(yearly, "worsty", n), pct))
+      add("Best Month", n => numOrDash(gb("bestm", n), pct))
+      add("Worst Month", n => numOrDash(gb("worstm", n), pct))
+      add("Best Year", n => numOrDash(gb("besty", n), pct))
+      add("Worst Year", n => numOrDash(gb("worsty", n), pct))
     }
     addSep()
-    add("Avg. Drawdown", n => episode(n)._3 * pct)
-    add("Avg. Drawdown Days", n => episode(n)._2)
-    add("Recovery Factor", n => g2("recovery", n))
-    add("Ulcer Index", n => g2("ulcer", n))
-    add("Serenity Index", n => g2("serenity", n))
+    add("Avg. Drawdown", n => g("avgdepth", n) * pct)
+    add("Avg. Drawdown Days", n => g("avglen", n))
+    add("Recovery Factor", n => g("recovery", n))
+    add("Ulcer Index", n => g("ulcer", n))
+    add("Serenity Index", n => g("serenity", n))
     if (full) {
       addSep()
-      add("Avg. Up Month", n => numOrDash(gb(monthly, "avgup", n), pct))
-      add("Avg. Down Month", n => numOrDash(gb(monthly, "avgdown", n), pct))
+      add("Avg. Up Month", n => numOrDash(gb("avgup", n), pct))
+      add("Avg. Down Month", n => numOrDash(gb("avgdown", n), pct))
       add("Win Days", n => g("windays", n) * pct)
-      add("Win Month", n => numOrDash(gb(monthly, "winm", n), pct))
-      add("Win Quarter", n => numOrDash(gb(quarterly, "winq", n), pct))
-      add("Win Year", n => numOrDash(gb(yearly, "winy", n), pct))
+      add("Win Month", n => numOrDash(gb("winm", n), pct))
+      add("Win Quarter", n => numOrDash(gb("winq", n), pct))
+      add("Win Year", n => numOrDash(gb("winy", n), pct))
       if (benchName.isDefined) {
         addSep()
         add("Beta", n => gbm("beta", n))
@@ -537,25 +319,193 @@ object Reports {
       }
     }
 
-    // every pass future must be complete before the caches go away — a pass
-    // that was never awaited during row assembly (e.g. the benchmark pass in
-    // basic mode) would otherwise still be running against an unpersisting
-    // frame (correct but recomputes), and its failure would be swallowed
-    Seq[scala.concurrent.Future[Any]](p1F, p2rowsF, episodeRowsF, streakRowsF,
-      calendarRowF, benchRowF).foreach(await)
-    frame.unpersist()
-    zf.unpersist()
-    ddf.unpersist()
-    val out = buildOutput(spark, rows.toSeq, names)
-    if (!display) out
-    else {
-      // reference parity: display=True PRINTS the table and returns None
-      // (alphastats/reports.py:287-290) — here, an empty frame of the same
-      // schema as the None-equivalent
-      out.show(rows.size, truncate = false)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out.schema)
-    }
+    rows.toSeq
   }
+
+  /** max(ts) shifted by calendar months/years, same temporal type —
+    * matches the reference's offset_by (keeps time-of-day on timestamps).
+    */
+  private def boundary(mx: Any, months: Int, years: Int): Column =
+    lit(graft.stats.Calendar.shift(mx, months, years))
+
+  /** Every non-calendar metric of every asset in ONE aggregation: the
+    * windows below all partition by asset, so the long view is exchanged
+    * once and the `groupBy(asset)` reuses that partitioning. Row counts,
+    * not calendar days, measure episodes and streaks (reports.py:397-414).
+    */
+  private def perAssetPass(long: DataFrame, t: Column, maxRawOpt: Option[Any],
+      benchName: Option[String], rf: Double, full: Boolean, compounded: Boolean,
+      periodsPerYear: Int): Map[String, Row] = {
+    val r = col("__r")
+    val dd = col("__dd")
+    val b = col("__b")
+    val wA = Window.partitionBy(col("__asset")).orderBy(col("__ord"))
+    val upTo = wA.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // the whole series, on wA's ordering so that it shares wA's operators
+    val whole = wA.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val z05 = Dist.invCdf(0.05)
+    def sign(x: Column): Column = when(x > 0, 1).when(x < 0, -1).otherwise(0)
+    def withCols(df: DataFrame, cols: Column*): DataFrame = df.select(col("*") +: cols: _*)
+
+    // The windows come in dependency layers, one select each: a select's
+    // windows over one partitioning and ordering run as ONE window operator,
+    // so the pass sorts once by (asset, ord) and once by (asset, episode).
+    val layer1 = withCols(long,
+      product(r + lit(1.0)).over(upTo).as("__wealth"),
+      (avg(r).over(whole) + lit(z05) * stddev_samp(r).over(whole)).as("__rvar"),
+      row_number().over(wA).as("__rn"),
+      // the previous return (`r` has no nulls, so it is also the previous
+      // non-null one): the smart ratios' lag-1 pairs and the sign runs
+      lag(r, 1).over(wA).as("__prev"))
+    val layer2 = withCols(layer1,
+      GroupedStats.drawdown(r, col("__wealth"), upTo).as("__dd"),
+      // streaks: the row number where the current run of equal signs began
+      max(when(col("__prev").isNull || sign(col("__prev")) =!= sign(r), col("__rn")))
+        .over(upTo).as("__runStart"))
+    // drawdown episodes: islands of dd < 0, numbered by a running count of
+    // their first rows
+    val layer3 = withCols(layer2,
+      (avg(dd).over(whole) + lit(z05) * stddev_samp(dd).over(whole)).as("__ddvar"),
+      (dd < 0 && !coalesce(lag(dd, 1).over(wA) < 0, lit(false))).as("__epStart"),
+      (col("__rn") - col("__runStart") + 1).cast("long").as("__runPos"))
+    val layer4 = withCols(layer3, sum(col("__epStart").cast("long")).over(upTo).as("__ep"))
+    val episode = Window.partitionBy(col("__asset"), col("__ep"))
+    val rows = withCols(layer4,
+      sum((dd < 0).cast("long")).over(episode).as("__epLen"),
+      min(when(dd < 0, dd)).over(episode).as("__epDepth"))
+
+    def condProd(cond: Column): Column =
+      product(when(cond, r + lit(1.0)).otherwise(lit(1.0))) - lit(1.0)
+    def condCagr(cond: Column): Column =
+      pow(product(when(cond, r + lit(1.0)).otherwise(lit(1.0))),
+        lit(periodsPerYear.toDouble) / sum(when(cond, 1).otherwise(0))) - lit(1.0)
+    val scalars = Seq(
+      Exprs.exposure(r).as("exposure"),
+      Exprs.comp(r).as("comp"),
+      sum(r).as("sum"),
+      Exprs.cagr(r, rf, compounded, periodsPerYear).as("cagr"),
+      Exprs.cagr(r, 0.0, compounded, periodsPerYear).as("cagr0"),
+      Exprs.sharpe(r, rf, periodsPerYear, annualize = true).as("sharpe"),
+      // PSR base: NO rf here — the reference's probabilistic_sharpe_ratio
+      // uses a no-rf Sharpe and subtracts rf once in the CDF argument
+      // (alphastats/stats.py:277,295)
+      Exprs.sharpe(r, 0.0, periodsPerYear, annualize = false).as("sharpe_na"),
+      Exprs.sortino(r, rf, periodsPerYear, annualize = true).as("sortino"),
+      Exprs.omega(r, 0.0).as("omega"),
+      Exprs.gainToPain(r, rf).as("g2p"),
+      Exprs.payoffRatio(r).as("payoff"),
+      Exprs.profitFactor(r).as("pf"),
+      Exprs.commonSenseRatio(r).as("csr"),
+      Exprs.cpcIndex(r).as("cpc"),
+      Exprs.tailRatio(r, 0.95).as("tail"),
+      Exprs.outlierWinRatio(r, 0.99).as("owr"),
+      Exprs.outlierLossRatio(r, 0.01).as("olr"),
+      Exprs.skew(r).as("skew"),
+      Exprs.kurtosis(r).as("kurt"),
+      Exprs.expectedReturn(r).as("expd"),
+      Exprs.kellyCriterion(r).as("kelly"),
+      Exprs.riskOfRuin(r).as("ror"),
+      Exprs.valueAtRisk(r, 1.0, 0.95).as("var"),
+      Exprs.volatility(r, periodsPerYear, annualize = true).as("vol"),
+      Exprs.winRate(r).as("windays"),
+      max(r).as("best"),
+      min(r).as("worst"),
+      count(r).as("count"))
+    val trailing = maxRawOpt.toSeq.flatMap { mx =>
+      val (my, mm) = graft.stats.Calendar.yearMonth(mx)
+      Seq(
+        condProd(year(t) === my && month(t) === mm).as("mtd"),
+        condProd(t >= boundary(mx, -3, 0)).as("m3"),
+        condProd(t >= boundary(mx, -6, 0)).as("m6"),
+        condProd(year(t) === my).as("ytd"),
+        condProd(t >= boundary(mx, 0, -1)).as("y1"),
+        condCagr(t >= boundary(mx, 0, -3)).as("y3"),
+        condCagr(t >= boundary(mx, 0, -5)).as("y5"),
+        condCagr(t >= boundary(mx, 0, -10)).as("y10"))
+    }
+    val ddCvar = coalesce(avg(when(dd < col("__ddvar"), dd)), first(col("__ddvar")))
+    val ulcer = sqrt(sum(dd * dd) / (count(r) - lit(1)))
+    val drawdowns = Seq(
+      min(dd).as("maxdd"),
+      ulcer.as("ulcer"),
+      fdiv(abs(sum(r) - lit(0.0)), abs(min(dd))).as("recovery"),
+      fdiv(sum(r) - lit(rf), ulcer * fdiv(-ddCvar, stddev_samp(r))).as("serenity"),
+      coalesce(avg(when(r < col("__rvar"), r)), first(col("__rvar"))).as("cvar"),
+      // an asset with no drawdown episode gets zeros, as the reference's
+      // empty-episode frame yields
+      coalesce(max(when(col("__epStart"), col("__epLen"))), lit(0L)).as("maxlen"),
+      coalesce(avg(when(col("__epStart"), col("__epLen"))), lit(0.0)).as("avglen"),
+      coalesce(avg(when(col("__epStart"), col("__epDepth"))), lit(0.0)).as("avgdepth"))
+    val fullOnly = if (!full) Nil else Seq(
+      corr(col("__prev"), r).as("rho"),
+      coalesce(max(when(sign(r) === 1, col("__runPos"))), lit(0L)).as("wins"),
+      coalesce(max(when(sign(r) === -1, col("__runPos"))), lit(0L)).as("losses"))
+    val benchmarked = if (benchName.isEmpty) Nil else {
+      val beta = fdiv(covar_samp(r, b), var_samp(b))
+      val corrC = corr(r, b)
+      val active = r - b
+      Seq(
+        (corrC * corrC).as("r2"),
+        fdiv(avg(active), stddev_samp(active)).as("ir"),
+        beta.as("beta"),
+        // the reference's Alpha row calls stats.greeks with its DEFAULT
+        // periods=252 regardless of periods_per_year (reports.py _greek) —
+        // preserve the quirk
+        ((avg(r) - beta * avg(b)) * 252).as("alpha"),
+        corrC.as("corr"),
+        fdiv(Exprs.comp(r) - lit(rf), beta).as("treynor"))
+    }
+    byAsset(rows, scalars ++ trailing ++ drawdowns ++ fullOnly ++ benchmarked)
+  }
+
+  /** The calendar family — monthly, quarterly and yearly bucket returns and
+    * their per-asset finals — for every asset in one grouping-sets pass
+    * plus one per-asset aggregation. `None` without a time axis.
+    */
+  private def calendarPass(long: DataFrame, t: Column, temporal: Option[String], rf: Double,
+      full: Boolean): Option[Map[String, Row]] = temporal.map { _ =>
+    // (name, final over the bucket returns, compounded buckets?)
+    val monthlyFinals: Seq[(String, Column => Column, Boolean)] =
+      ("g2p1m", (c: Column) => Exprs.gainToPain(c, rf), false) +: (if (full) Seq(
+        ("expm", Exprs.expectedReturn: Column => Column, true),
+        ("bestm", (c: Column) => max(c), true),
+        ("worstm", (c: Column) => min(c), true),
+        ("avgup", Exprs.avgWin: Column => Column, true),
+        ("avgdown", Exprs.avgLoss: Column => Column, true),
+        ("winm", Exprs.winRate: Column => Column, true)) else Nil)
+    val quarterlyFinals: Seq[(String, Column => Column, Boolean)] =
+      if (!full) Nil else Seq(("winq", Exprs.winRate: Column => Column, true))
+    val yearlyFinals: Seq[(String, Column => Column, Boolean)] =
+      if (!full) Nil else Seq(
+        ("expy", Exprs.expectedReturn: Column => Column, true),
+        ("besty", (c: Column) => max(c), true),
+        ("worsty", (c: Column) => min(c), true),
+        ("winy", Exprs.winRate: Column => Column, true))
+    // grouping ids over (asset, y, m, q): (asset, y, m) -> 1,
+    // (asset, y, q) -> 2, (asset, y) -> 3; each final reads only its
+    // grain's buckets through `when(gid = grain)` (every final skips nulls)
+    val finals = Seq(1 -> monthlyFinals, 2 -> quarterlyFinals, 3 -> yearlyFinals)
+    val all = finals.flatMap(_._2)
+    val r = col("__r")
+    val bucketVals =
+      (if (all.exists(_._3)) Seq(Exprs.comp(r).as("__c")) else Nil) ++
+        (if (all.exists(!_._3)) Seq(sum(r).as("__s")) else Nil)
+    val (asset, y, m, q) = (col("__asset"), col("__y"), col("__m"), col("__q"))
+    val sets = Seq(Seq(asset, y, m)) ++ (if (full) Seq(Seq(asset, y, q), Seq(asset, y)) else Nil)
+    val buckets = long.withColumn("__y", year(t)).withColumn("__m", month(t))
+      .withColumn("__q", quarter(t))
+      .groupingSets(sets, asset, y, m, q)
+      .agg(grouping_id().as("__gid"), bucketVals: _*)
+    val aggs = finals.flatMap { case (gid, fs) => fs.map { case (k, f, comp) =>
+      f(when(col("__gid") === gid, col(if (comp) "__c" else "__s"))).as(k)
+    } }
+    byAsset(buckets, aggs)
+  }
+
+  /** One aggregation grouped by `__asset`, collected as asset → row. */
+  private def byAsset(df: DataFrame, aggs: Seq[Column]): Map[String, Row] =
+    df.groupBy(col("__asset")).agg(aggs.head, aggs.tail: _*).collect()
+      .map(row => row.getAs[String]("__asset") -> row).toMap
 
   private def numOrDash(v: Any, mult: Double): Any = v match {
     case d: Double => d * mult

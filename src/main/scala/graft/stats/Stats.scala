@@ -94,10 +94,7 @@ object Stats {
     val withVar = melted(rfm).df.withColumn("__var",
       avg(r).over(Window.partitionBy(col("__asset"))) +
         lit(z * sigma) * stddev_samp(r).over(Window.partitionBy(col("__asset"))))
-    val piv = withVar.groupBy(col("__asset"))
-      .agg(coalesce(avg(when(r < col("__var"), r)), first(col("__var"))).as("__v"))
-      .groupBy().pivot("__asset", rfm.numericCols).agg(first(col("__v")))
-    piv.select(rfm.numericCols.map(c => piv(c).as(c)): _*)
+    perAsset(rfm, withVar, coalesce(avg(when(r < col("__var"), r)), first(col("__var"))))
   }
 
   // ---- trade stats --------------------------------------------------------
@@ -197,37 +194,22 @@ object Stats {
     }.toSeq: _*)
   }
 
-  def maxDrawdown(returns: DataFrame): DataFrame = {
-    val rfm = ReturnsFrame(returns)
-    val (ddDf, ddName) = withDrawdownCols(rfm)
-    ddDf.select(rfm.numericCols.map(c => min(col(ddName(c))).as(c)): _*)
-  }
+  def maxDrawdown(returns: DataFrame): DataFrame =
+    drawdownAgg(ReturnsFrame(returns))((_, dd) => min(dd))
 
-  /** CAGR / |maxDD|; one aggregation over the dd-augmented frame
-    * (reference: alphastats/stats.py:474-506).
-    */
+  /** CAGR / |maxDD| (reference: alphastats/stats.py:474-506). */
   def calmar(returns: DataFrame, periods: Int = 252): DataFrame = {
     val rfm = ReturnsFrame(returns)
     rfm.requireTemporal
-    val (ddDf, ddName) = withDrawdownCols(rfm)
-    ddDf.select(rfm.numericCols.map { c =>
-      fdiv(Exprs.cagr(col(c), 0.0, compound = true, periods), abs(min(col(ddName(c))))).as(c)
-    }: _*)
+    drawdownAgg(rfm)((r, dd) =>
+      fdiv(Exprs.cagr(r, 0.0, compound = true, periods), abs(min(dd))))
   }
 
-  def ulcerIndex(returns: DataFrame): DataFrame = {
-    val rfm = ReturnsFrame(returns)
-    val (ddDf, ddName) = withDrawdownCols(rfm)
-    ddDf.select(rfm.numericCols.map(c =>
-      Exprs.ulcerIndex(col(ddName(c)), col(c)).as(c)): _*)
-  }
+  def ulcerIndex(returns: DataFrame): DataFrame =
+    drawdownAgg(ReturnsFrame(returns))((r, dd) => Exprs.ulcerIndex(dd, r))
 
-  def recoveryFactor(returns: DataFrame, rf: Double = 0.0): DataFrame = {
-    val rfm = ReturnsFrame(returns)
-    val (ddDf, ddName) = withDrawdownCols(rfm)
-    ddDf.select(rfm.numericCols.map(c =>
-      Exprs.recoveryFactor(col(c), col(ddName(c)), rf).as(c)): _*)
-  }
+  def recoveryFactor(returns: DataFrame, rf: Double = 0.0): DataFrame =
+    drawdownAgg(ReturnsFrame(returns))((r, dd) => Exprs.recoveryFactor(r, dd, rf))
 
   /** Serenity = (Σr − rf) / (ulcer · pitfall), pitfall = −CVaR(dd)/σ(r)
     * (reference: alphastats/stats.py:1549-1567). Computed over the melted
@@ -245,10 +227,7 @@ object Stats {
       avg(ddc).over(wholeA) + lit(z) * stddev_samp(ddc).over(wholeA))
     val ddCvar = coalesce(avg(when(ddc < col("__ddvar"), ddc)), first(col("__ddvar")))
     val pitfall = fdiv(-ddCvar, stddev_samp(r))
-    val serenity = fdiv(sum(r) - lit(rf), Exprs.ulcerIndex(ddc, r) * pitfall)
-    val piv = withVar.groupBy(col("__asset")).agg(serenity.as("__v"))
-      .groupBy().pivot("__asset", rfm.numericCols).agg(first(col("__v")))
-    piv.select(rfm.numericCols.map(c => piv(c).as(c)): _*)
+    perAsset(rfm, withVar, fdiv(sum(r) - lit(rf), Exprs.ulcerIndex(ddc, r) * pitfall))
   }
 
   // ---- internals ----------------------------------------------------------
@@ -268,12 +247,30 @@ object Stats {
     graft.api.SeriesFrame(stacked, Seq("__asset"), "__ord", "__r")
   }
 
-  /** Appends `__dd_<c>` drawdown columns for every numeric column via the
-    * melted frame: per-asset partitioned windows compute the drawdowns (N
-    * columns = N partitions, no single-partition global window), then a
-    * pivot on the row ordinal restores the wide shape.
+  /** One aggregate per asset over a melted frame, pivoted back to the
+    * reference's 1-row wide shape: only the N per-asset results cross the
+    * pivot, never the rows.
     */
-  private[graft] def withDrawdownCols(rfm: ReturnsFrame): (DataFrame, String => String) = {
+  private def perAsset(rfm: ReturnsFrame, long: DataFrame, metric: Column): DataFrame = {
+    val piv = long.groupBy(col("__asset")).agg(metric.as("__v"))
+      .groupBy().pivot("__asset", rfm.numericCols).agg(first(col("__v")))
+    piv.select(rfm.numericCols.map(c => piv(c).as(c)): _*)
+  }
+
+  /** A per-asset aggregate of (returns, drawdown) over the melted frame,
+    * whose asset-partitioned windows compute the drawdowns (N columns = N
+    * partitions, no single-partition global window).
+    */
+  private def drawdownAgg(rfm: ReturnsFrame)(metric: (Column, Column) => Column): DataFrame =
+    perAsset(rfm, graft.api.GroupedStats.withDrawdown(melted(rfm)).df,
+      metric(col("__r"), col("__dd")))
+
+  /** Appends `__dd_<c>` drawdown columns for every numeric column via the
+    * melted frame, then a pivot on the row ordinal restores the wide shape
+    * (the row-level form [[toDrawdowns]] returns; aggregates use
+    * [[drawdownAgg]] instead of pivoting every row).
+    */
+  private def withDrawdownCols(rfm: ReturnsFrame): (DataFrame, String => String) = {
     val dd = graft.api.GroupedStats.withDrawdown(melted(rfm)).df
     val pivoted = dd.groupBy(col("__ord"))
       .pivot("__asset", rfm.numericCols)

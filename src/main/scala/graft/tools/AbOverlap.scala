@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** A/B evidence for the r13 checkpoint-overlap pattern (round-13 verdict
   * item 9): times a registered query min-of-2 warm with the concurrent
   * checkpoint submission as shipped, and again with
-  * `graft.queries.sequentialCheckpoints=true` (the queries consult this
-  * session-local conf and await each eager build inline). Prints both.
+  * `graft.queries.sequentialCheckpoints=true` (q218 and q240 consult this
+  * session-local conf and await each eager build inline; for any other
+  * query both timings run the same code). Prints both.
   *
   * Usage: sbt "runMain graft.tools.AbOverlap [sfDir] names..."
   */

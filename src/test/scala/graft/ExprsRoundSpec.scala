@@ -6,7 +6,7 @@ import graft.core.Exprs
 
 /** r14: `Exprs.roundHalfUpLong` must be bit-identical to Spark's
   * `round(x, 0).cast("long")` (BigDecimal-on-shortest-repr HALF_UP) over
-  * its documented domain |x| < 2^51 — boundary vectors first (exact k.5,
+  * its documented domain |x| ≤ 2^53 — boundary vectors first (exact k.5,
   * within-half-ulp-below-k.5 where the floor(x+0.5) carry correction
   * fires, shortest-repr oddities), then a deterministic random sweep at
   * the magnitudes the cents/milli quantizations produce.
@@ -33,6 +33,23 @@ class ExprsRoundSpec extends SparkSpec {
     val base = halves ++ belowHalves ++ aboveHalves ++ reprOddities ++
       Seq(0.0, -0.0, 1.0, 123456789.987, (1L << 50).toDouble + 0.25)
     check(base ++ base.map(-_))
+  }
+
+  test("vectors in [2^51, 2^53], the range q225's m_same/m_adj summands reach") {
+    // [2^51, 2^52): the ulp is 0.5, so every non-integer is an exact k.5 tie;
+    // [2^52, 2^53]: the ulp is 1, so x + 0.5 is itself a tie that the FP
+    // addition rounds to even before floor() sees it
+    val (p51, p52, p53) = ((1L << 51).toDouble, (1L << 52).toDouble, (1L << 53).toDouble)
+    val edges = Seq(p51, p52, p53).flatMap(p => Seq(Math.nextDown(p), p, Math.nextUp(p)))
+      .filter(_ <= p53)
+    val near = Seq(p51 + 0.5, p51 + 1.0, p51 + 1.5, p52 - 1.5, p52 - 1.0, p52 - 0.5,
+      p52 + 1.0, p52 + 2.0, p52 + 3.0, p53 - 3.0, p53 - 2.0, p53 - 1.0)
+    val rnd = new scala.util.Random(51L)
+    val low = Seq.fill(10000)(p51 + rnd.nextLong(1L << 51) + 0.5 * rnd.nextInt(2))
+    val high = Seq.fill(10000)(p52 + rnd.nextLong((1L << 52) + 1))
+    val xs = edges ++ near ++ low ++ high
+    assert(xs.forall(x => x >= Math.nextDown(p51) && x <= p53))
+    check(xs ++ xs.map(-_))
   }
 
   test("deterministic random sweep at cents magnitudes") {
