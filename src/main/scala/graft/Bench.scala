@@ -3,7 +3,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val pool = sys.env.getOrElse("SPARK_GRAFT_BENCH_POOL", "8").toInt
     // Optional name filter (comma-separated, same contract as Verify's):
     // lets magnitude sweeps time exactly the subset whose inputs grow at a
@@ -20,15 +19,17 @@ object Bench {
           SparkEntry.queries.filter { case (k, _) => names.contains(k) }
         case _ => SparkEntry.queries
       }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
+    // Every error is recorded, never timed: a query that throws in any
+    // pass is left out of the per-query map and the totals, named in the
+    // JSON line, and fails the run's exit code.
+    val failures = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def attempt[T](name: String)(body: => T): Option[T] =
+      try Some(body)
+      catch { case e: Throwable =>
+        if (failures.add(name)) System.err.println(s"[bench] $name failed: $e")
+        None
+      }
     // ---- host-load evidence (round-11 verdict: a contended-box artifact
     // must be self-identifying). Three independent signals, captured
     // before the warm-up and again after the timed passes:
@@ -77,16 +78,15 @@ object Bench {
     // compilation), and so the shared per-(session, sf) cached frames are
     // all populated before any concurrency (their TrieMap getOrElseUpdate
     // could otherwise double-build under a race).
-    benchQueries.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
-    }
+    benchQueries.foreach { case (name, fn) => attempt(name)(fn(spark, sfDir).count()) }
     // Cache-attribution hygiene: the warm-up populated the shared cached
     // frames, but running the whole suite can EVICT early entries; a frame
     // rebuilt at first touch lands its materialization on whichever timed
     // query reaches it first (q96 absorbed the shared edge frame in the
     // round-8 artifact). Re-touch every registered cache so the timed
     // passes measure plans, not cache (re)materialization.
-    val warmed = graft.queries.ExtQueries.warmCaches(spark)
+    val (warmed, failedCaches) = graft.queries.ExtQueries.warmCaches(spark)
+    failedCaches.foreach(c => failures.add(s"cache:$c"))
     // Two timed views, because they answer different questions:
     //   - per-query seconds come from SEQUENTIAL passes (each query alone
     //     on the box) — the isolated steady-state plan cost, comparable
@@ -101,18 +101,19 @@ object Bench {
     //     per-query times would be contention-inflated (~2.5x observed at
     //     pool=8), which is why they are NOT the published map.
     def sequentialPass(): Map[String, Double] =
-      benchQueries.map { case (name, fn) =>
+      benchQueries.flatMap { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+        attempt(name)(fn(spark, sfDir).count())
+          .map(_ => name -> (System.nanoTime() - t0) / 1e9)
       }
     def parallelWall(): Double = {
+      // its own pool, not Eager's: these threads run queries that fork
+      // through Eager.all, and nesting on one bounded pool can deadlock
       val exec = java.util.concurrent.Executors.newFixedThreadPool(pool)
       val t0 = System.nanoTime()
-      val futures = benchQueries.toSeq.map { case (_, fn) =>
+      val futures = benchQueries.toSeq.map { case (name, fn) =>
         exec.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit =
-            try { fn(spark, sfDir).count(); () } catch { case _: Throwable => () }
+          def call(): Unit = attempt(name)(fn(spark, sfDir).count())
         })
       }
       futures.foreach(_.get())
@@ -121,8 +122,10 @@ object Bench {
     }
     val p1 = sequentialPass()
     val p2 = sequentialPass()
-    val results = p1.map { case (k, v) => k -> math.min(v, p2.getOrElse(k, v)) }
     val wall = math.min(parallelWall(), parallelWall())
+    val results = p1.collect { case (k, v) if p2.contains(k) && !failures.contains(k) =>
+      k -> math.min(v, p2(k)) }
+    val failedNames = failures.toArray(Array.empty[String]).toSeq.sorted
     val loadPost = loadavg1()
     val calibPost = calibMs()
     val statPost = procStat()
@@ -180,7 +183,8 @@ object Bench {
         else "unknown"
       } else head.take(12)
     } catch { case _: Exception => "unknown" }
-    def line(m: Map[String, Double]): String = {
+    def names(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def line(m: Map[String, Double], failed: Seq[String] = failedNames): String = {
       val qs = m.toSeq.sortBy(-_._2)
         .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
@@ -191,7 +195,9 @@ object Bench {
       val filt =
         if (filterActive) s""","filter":true,"filter_n":${benchQueries.size}"""
         else ""
-      s"""{"metric":"total","value":${fmt(results.values.sum)},"unit":"sec","mode":"sequential_min2","git_head":"$gitHead"$filt,"parallel_wall":${fmt(wall)},"parallel_pool":$pool,"per_query_sum":${fmt(results.values.sum)},"non_audit_total":${fmt(nonAuditTotal)},"audit_total":${fmt(auditTotal)},"warmed_caches":$warmed,$loadJson,"queries":$qs$shown,"sf":"$sfDir"}"""
+      val failedShown =
+        if (failed.size < failedNames.size) s""","failed_shown":${failed.size}""" else ""
+      s"""{"metric":"total","value":${fmt(results.values.sum)},"unit":"sec","mode":"sequential_min2","git_head":"$gitHead"$filt,"failed":${failedNames.size},"failed_names":${names(failed)}$failedShown,"parallel_wall":${fmt(wall)},"parallel_pool":$pool,"per_query_sum":${fmt(results.values.sum)},"non_audit_total":${fmt(nonAuditTotal)},"audit_total":${fmt(auditTotal)},"warmed_caches":$warmed,$loadJson,"queries":$qs$shown,"sf":"$sfDir"}"""
     }
     val full = line(results)
     // The driver keeps the LAST 2000 CHARACTERS of stdout and parses the
@@ -211,7 +217,7 @@ object Bench {
         .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
       val filt = if (filterActive) s""","filter":true""" else ""
-      s"""{"metric":"per_query_seq_min2","total":${fmt(results.values.sum)},"unit":"sec","git_head":"$gitHead"$filt,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"per_query_seq_min2","total":${fmt(results.values.sum)},"unit":"sec","git_head":"$gitHead"$filt,"failed":${failedNames.size},"failed_names":${names(failedNames)},"queries":$qs,"sf":"$sfDir"}"""
     }
     // Filtered runs must NOT overwrite the canonical whole-suite artifacts
     // (a subset total committed as BENCH_LATEST.json would read as a huge
@@ -239,13 +245,15 @@ object Bench {
     // within the driver's measured 2000-char window (1800-byte budget
     // leaves headroom for a trailing newline + key-length drift)
     val sorted = results.toSeq.sortBy(-_._2)
-    // fallback is the ZERO-query headline (strictly shorter than any k>=1
-    // line) — a take(10) fallback would be longer than the 1-query line that
-    // just failed the budget, guaranteeing the truncation this loop prevents
-    val finalLine = (sorted.length to 1 by -1).view
-      .map(k => line(sorted.take(k).toMap))
+    // queries are dropped first, down to the ZERO-query headline; only then
+    // is the failed-names list cut (self-describing via failed_shown), so
+    // the line stays parseable however many queries fail
+    val finalLine = ((sorted.length to 0 by -1).view.map(k => line(sorted.take(k).toMap)) ++
+      (failedNames.size - 1 to 0 by -1).view.map(j => line(Map.empty, failedNames.take(j))))
       .find(_.length <= 1800)
-      .getOrElse(line(Map.empty))
+      .getOrElse(line(Map.empty, Nil))
     println(finalLine)
+    System.out.flush()
+    if (failedNames.nonEmpty) sys.exit(1)
   }
 }

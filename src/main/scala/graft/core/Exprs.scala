@@ -35,8 +35,8 @@ object Exprs {
     * Spark's Round on doubles evaluates
     * `BigDecimal(Double.toString(x)).setScale(0, HALF_UP)` — a BigDecimal
     * plus a String allocation PER ROW even inside whole-stage codegen;
-    * tools/ScanFloor measures it at ~0.5 s per 600k rows on one core, which
-    * dominates the single-row-group fact scans at fixture scale. For scale
+    * measured at ~0.5 s per 600k rows on one core, which dominates the
+    * single-row-group fact scans at fixture scale. For scale
     * 0 the identical value is `floor(|x| + 0.5)` with one carry correction:
     * when |x| lies within half an ulp BELOW a k.5 boundary, the FP addition
     * rounds up across it (floor then yields k+1 where HALF_UP yields k).

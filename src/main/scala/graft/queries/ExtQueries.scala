@@ -21,8 +21,9 @@ object ExtQueries {
   private[queries] def cached(spark: SparkSession, sfDir: String, name: String)(
       build: => DataFrame): DataFrame =
     tableCache.getOrElseUpdate((spark, sfDir, name), build.cache())
-  /** Re-materialize every shared cached frame registered for `spark` and
-    * return how many were touched. Bench calls this BETWEEN its untimed
+  /** Re-materialize every shared cached frame registered for `spark`;
+    * returns how many were touched and the names of those whose
+    * materialization failed. Bench calls this BETWEEN its untimed
     * warm-up and the timed passes: the warm-up populates the caches, but
     * the churn of running every query can evict earlier entries, and a
     * rebuilt-at-first-touch frame then lands its materialization cost on
@@ -30,10 +31,9 @@ object ExtQueries {
     * frame in the round-8 artifact) — muddying per-query attribution.
     * Touching each frame here makes the timed numbers measure plans.
     */
-  private[graft] def warmCaches(spark: SparkSession): Int = {
-    val mine = tableCache.collect { case ((s, _, _), df) if s eq spark => df }
-    mine.foreach(df => try df.count() catch { case _: Throwable => () })
-    mine.size
+  private[graft] def warmCaches(spark: SparkSession): (Int, Seq[String]) = {
+    val mine = tableCache.toSeq.collect { case ((s, _, name), df) if s eq spark => name -> df }
+    (mine.size, mine.collect { case (name, df) if scala.util.Try(df.count()).isFailure => name })
   }
 
   // non-DataFrame reusable artifacts (e.g. a benchmark Bloom filter)
@@ -71,17 +71,6 @@ object ExtQueries {
       targetRowsPerTask: Long): Int =
     math.max(1L, math.min(sessionParallelism(spark).toLong,
       estRows / targetRowsPerTask)).toInt
-
-  /** A/B toggle (tools/AbOverlap, round-13 verdict item 9): when the
-    * session conf `graft.queries.sequentialCheckpoints` is "true", the
-    * queries that normally submit independent eager checkpoint builds from
-    * a thread pool (q218/q240) run them inline instead, so the overlap's
-    * worth is measurable on demand. Defaults to concurrent. q216 builds its
-    * checkpoints sequentially always and does not consult it.
-    */
-  private[queries] def sequentialCheckpoints(spark: SparkSession): Boolean =
-    try spark.conf.get("graft.queries.sequentialCheckpoints", "false") == "true"
-    catch { case _: Exception => false }
 
   private[queries] def docs(spark: SparkSession, sfDir: String): DataFrame =
     cached(spark, sfDir, "documents")(

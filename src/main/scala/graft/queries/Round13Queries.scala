@@ -194,9 +194,9 @@ object Round13Queries {
     // and its encode chain must not re-execute per consumer.
     // r14 (round-13 verdict item 9): the r13 concurrent submission of the
     // two eager checkpoint builds (ADC shortlist, exact-distance frame) was
-    // A/B-measured SLOWER here and REMOVED — tools/AbOverlap, min-of-3
-    // warm at sf0.1: concurrent 1.37 s vs sequential 1.10 s (r13 same-box
-    // saw the same direction, 1.54 → 1.80 s). Both builds are full scans
+    // A/B-measured SLOWER here and REMOVED — min-of-3 warm at sf0.1:
+    // concurrent 1.37 s vs sequential 1.10 s (r13 same-box saw the same
+    // direction, 1.54 → 1.80 s). Both builds are full scans
     // of the same cached embeddings frame, so overlapping them just makes
     // the two scans contend for the same cores; q218/q240 keep their
     // overlap (A/B-measured faster there). Builds run inline, which also

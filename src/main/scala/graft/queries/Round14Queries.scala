@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Eager
 import graft.ext.{Dedup, Incremental, Layout, Similarity}
 
 /** Round-14 queries: the warehouse-operations layer — zone-map pruning
@@ -108,21 +109,12 @@ object Round14Queries {
         .withColumn("layout", lit(name))
     // the four layout ranks are independent eager pipelines (fileAssign's
     // range-shuffle → localCheckpoint → per-partition-count collect each
-    // submit 2 driver-blocking jobs): submit them CONCURRENTLY so the audit
-    // pays the slowest layout, not the sum of four (optimization guide
-    // §2.6 — r13: measured 4.7 s → after; the checkpointed `base` all four
-    // read is already materialized above, so there is no cache race)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val zmEc: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val zmF = Seq(("nk", "nat"), ("dk", "date"), ("zk", "z"), ("hk", "hilbert"))
-      .map { case (k, nm) =>
-        if (ExtQueries.sequentialCheckpoints(spark)) // AbOverlap toggle
-          Future.successful(zm(k, nm))
-        else Future(scala.concurrent.blocking { zm(k, nm) })
-      }
-    val zms = Await.result(Future.sequence(zmF), Duration.Inf)
+    // submit 2 driver-blocking jobs): run them at once so the audit pays
+    // the slowest layout, not the sum of four (optimization guide §2.6;
+    // the checkpointed `base` all four read is already materialized above,
+    // so there is no cache race)
+    val zms = Eager.all(Seq(("nk", "nat"), ("dk", "date"), ("zk", "z"), ("hk", "hilbert"))
+      .map { case (k, nm) => () => zm(k, nm) }: _*)
       .reduce(_.unionByName(_))
 
     // the 24-predicate workload, exact integer quarter boundaries

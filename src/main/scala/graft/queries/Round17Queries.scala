@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Eager
 import graft.ext.{Dedup, Pq}
 import graft.queries.ExtQueries.emb
 
@@ -101,26 +102,30 @@ object Round17Queries {
     import spark.implicits._
     val probes = broadcast(probeRows.toDF("query_id", "qi", "list"))
 
-    // one corpus pass: PQ codes (m=16 fused rounded argmin) + IVF list
-    // (the SAME fused expression with an m=1, k=8, subDim=64 codebook —
-    // a flat rounded-argmin over the coarse centroids). Bounded frame
-    // (n x 16 ints + 1 int), materialized once for scan + ceiling audit.
-    // r13 (optimization guide §2.6): the corpus encode and the exact
-    // ground-truth frame (below) are independent eager checkpoints —
-    // submitted concurrently, the audit pays the slower build, not the sum.
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.duration.Duration
-    implicit val ckptEc: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    // AbOverlap toggle: inline (sequential) eager builds when requested
-    def eagerly[T](body: => T): Future[T] =
-      if (ExtQueries.sequentialCheckpoints(spark)) Future.successful(body)
-      else Future(blocking(body))
-    val corpusF = eagerly {
-      e.select(col("vec_id").as("neighbor_id"),
+    // r13 (optimization guide §2.6): the corpus encode → count → probed-
+    // candidate chain and the exact ground-truth frame (below) are
+    // independent eager checkpoints — run at once, the audit pays the
+    // slower build, not the sum.
+    def corpusChain(): (DataFrame, Long, DataFrame) = {
+      // one corpus pass: PQ codes (m=16 fused rounded argmin) + IVF list
+      // (the SAME fused expression with an m=1, k=8, subDim=64 codebook —
+      // a flat rounded-argmin over the coarse centroids). Bounded frame
+      // (n x 16 ints + 1 int), materialized once for scan + ceiling audit.
+      val corpus = e.select(col("vec_id").as("neighbor_id"),
         Pq.encodeRounded(col("v"), cb).as("codes"),
         element_at(Pq.encodeRounded(col("v"), coarseCb), 1).as("list"))
         .localCheckpoint()
+      val nCorpus = corpus.count()
+      // the pruned scan: probed-list candidates only, each paying exactly
+      // its own query's ADC (PqAdcSelect), never the full query batch
+      val cand = corpus.join(probes, "list")
+        .filter(col("neighbor_id") =!= col("query_id"))
+        .select(col("query_id"), col("neighbor_id"),
+          round(graft.functions.VectorExprs.pqAdcSelect(col("codes"), col("qi"),
+            luts), 4).as("adc"))
+        .localCheckpoint() // bounded (~ nProbe/nLists x n x queries rows);
+      //   feeds n_scanned, the stage-1 recall audit, and the shortlist
+      (corpus, nCorpus, cand)
     }
 
     // exact audit frame (ground truth + re-rank distances): the q216
@@ -128,7 +133,7 @@ object Round17Queries {
     val queryArr = array(queries.map { case (qid, qv) =>
       struct(lit(qid).as("qid"), typedLit(qv).as("qv"))
     }: _*)
-    val exactF = eagerly {
+    def exactFrame(): DataFrame =
       e.select(col("vec_id").as("neighbor_id"), col("v"), explode(queryArr).as("q"))
         .select(col("q.qid").as("query_id"), col("neighbor_id"),
           round((0 until Round13Queries.PqM).map(s =>
@@ -136,33 +141,7 @@ object Round17Queries {
               Round13Queries.PqSubDim)).reduce(_ + _), 4).as("d2"))
         .filter(col("neighbor_id") =!= col("query_id"))
         .localCheckpoint()
-    }
-    // r14 (round-13 advice): if the corpus build fails, JOIN the sibling
-    // exact-frame future before rethrowing — a lone Await.result(corpusF)
-    // that throws would leave exactF's eager localCheckpoint job running
-    // unobserved on the cluster. Await.ready joins it (success or failure)
-    // without discarding the primary error; the success path keeps the
-    // r13 overlap (exactF is awaited only after the cand/shortlist work
-    // that does not depend on it is submitted).
-    val corpus =
-      try Await.result(corpusF, Duration.Inf)
-      catch {
-        case t: Throwable =>
-          try Await.ready(exactF, Duration.Inf)
-          catch { case _: InterruptedException => Thread.currentThread().interrupt() }
-          throw t
-      }
-    val nCorpus = corpus.count()
-
-    // the pruned scan: probed-list candidates only, each paying exactly
-    // its own query's ADC (PqAdcSelect), never the full query batch
-    val cand = corpus.join(probes, "list")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(graft.functions.VectorExprs.pqAdcSelect(col("codes"), col("qi"),
-          luts), 4).as("adc"))
-      .localCheckpoint() // bounded (~ nProbe/nLists x n x queries rows);
-    //   feeds n_scanned, the stage-1 recall audit, and the shortlist
+    val ((corpus, nCorpus, cand), exact) = Eager.both(corpusChain(), exactFrame())
     val nsc = cand.groupBy("query_id").agg(count(lit(1)).as("n_scanned"))
       .withColumn("scanned_frac",
         round(col("n_scanned") * lit(1.0) / lit(nCorpus.toDouble), 6))
@@ -174,7 +153,6 @@ object Round17Queries {
         IvfShortlist).as("__top"))
       .select(col("query_id"), explode(col("__top")).as("__e"))
       .select(col("query_id"), col("__e.id").as("neighbor_id"))
-    val exact = Await.result(exactF, Duration.Inf)
     val we = Window.partitionBy("query_id").orderBy(col("d2"), col("neighbor_id"))
     val exactTop = exact.withColumn("rank", row_number().over(we))
       .filter(col("rank") <= Round13Queries.PqTopK)

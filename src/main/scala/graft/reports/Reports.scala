@@ -1,8 +1,6 @@
 package graft.reports
 
 import java.sql.{Date, Timestamp}
-import scala.concurrent.{Await, Future}
-import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -10,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.api.GroupedStats
-import graft.core.{Dist, EmptyReturnsError, Exprs, ReturnsFrame}
+import graft.core.{Dist, Eager, EmptyReturnsError, Exprs, ReturnsFrame}
 import graft.core.Exprs.fdiv
 import graft.functions.GraftProduct.product
 import graft.stats.Smart
@@ -45,28 +43,10 @@ import graft.stats.Smart
   *  - the calendar pass: ONE grouping-sets aggregation keyed on
   *    (asset, year, month) / (asset, year, quarter) / (asset, year), then
   *    one per-asset aggregation of the bucket returns.
-  * The per-asset and calendar passes are independent, so the calendar pass
-  * is submitted from a small driver-side pool while the per-asset pass runs
-  * on the caller's thread; both read the cache P0 has already built.
+  * The per-asset and calendar passes are independent, so they run at once
+  * ([[graft.core.Eager]]); both read the cache P0 has already built.
   */
 object Reports {
-
-  /** Shared driver-side pool for concurrent pass submission — bounded at 8
-    * across ALL in-flight metrics() calls (a bench pool of parallel report
-    * queries shares it rather than multiplying threads), daemon so it never
-    * blocks JVM exit, and process-lifetime so there is no per-call shutdown
-    * path to leak on a failed pass.
-    */
-  private lazy val passEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(8,
-        new java.util.concurrent.ThreadFactory {
-          private val n = new java.util.concurrent.atomic.AtomicInteger(0)
-          def newThread(r: Runnable): Thread = {
-            val t = new Thread(r, s"graft-report-pass-${n.getAndIncrement()}")
-            t.setDaemon(true); t
-          }
-        }))
 
   def metrics(
       returns: DataFrame,
@@ -167,14 +147,10 @@ object Reports {
     val maxRawOpt: Option[Any] =
       if (temporal.isEmpty) None else Option(p0.head._2.getAs[Any]("mx"))
 
-    // the two passes are independent: the calendar pass runs from the pool
-    // while the per-asset pass runs here, and it is joined on every path so
-    // a failed per-asset pass never leaves it running against the cache
-    val calendarF = Future(calendarPass(long, t, temporal, rf, full))(passEc)
-    val main =
-      try perAssetPass(long, t, maxRawOpt, benchName, rf, full, compounded, periodsPerYear)
-      finally Await.ready(calendarF, Duration.Inf)
-    val calendar = Await.result(calendarF, Duration.Inf)
+    // the two passes are independent, so they run at once
+    val (main, calendar) = Eager.both(
+      perAssetPass(long, t, maxRawOpt, benchName, rf, full, compounded, periodsPerYear),
+      calendarPass(long, t, temporal, rf, full))
 
     def field(row: Row, k: String): Any = {
       val i = row.fieldIndex(k)

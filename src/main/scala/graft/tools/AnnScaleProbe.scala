@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
@@ -22,13 +22,7 @@ object AnnScaleProbe {
     val clusters = math.max(20, n / 500)
     // SRP planes sized so the bucket count tracks corpus size (~2^p buckets)
     val planes = if (n <= 200000) 10 else 12
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cores)
     println(s"n=$n dim=$dim clusters=$clusters planes=$planes cores=$cores")
 
     // vector = cluster center (hash-derived uniform [-1,1] per component)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the temporal-join family: [[graft.core.AsOfJoin.backward]]
@@ -31,14 +30,7 @@ object AsOfScaleProbe {
     val users = if (args.length > 1) args(1).toLong else 20000L
     val versions = if (args.length > 2) args(2).toInt else 5
     val cpus = if (args.length > 3) args(3).toInt else 16
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-asof-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(cpus)
 
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

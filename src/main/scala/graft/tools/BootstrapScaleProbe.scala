@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Poisson-bootstrap scale probe: the q200 shape — explode every row into
@@ -22,12 +21,7 @@ object BootstrapScaleProbe {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(64)
     val cores = args.drop(2).headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cores)
     println(s"n=$n B=$reps cores=$cores")
 
     // synthetic per-row values: hash-uniform cents in [0, 1e6)

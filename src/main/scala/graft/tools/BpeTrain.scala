@@ -2,7 +2,6 @@ package graft.tools
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Offline BPE trainer (run once; output embedded in [[graft.ext.Bpe]]).
@@ -25,14 +24,7 @@ object BpeTrain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val nMerges = args.lift(1).map(_.toInt).getOrElse(32)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("bpe-train")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(8)
 
     val freqRows = spark.read.parquet(s"$dir/documents.parquet")
       .select(explode(graft.ext.Bpe.preTokens(col("text"))).as("w"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.Dedup
@@ -19,13 +18,7 @@ import graft.ext.Dedup
 object DedupScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(100000)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val tokensPerDoc = 80
     val vocab = 50000

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the distributed graph family: BFS frontier loop,
@@ -20,14 +19,7 @@ object GraphScaleProbe {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val chords = if (args.length > 1) args(1).toInt else 2
     val cpus = if (args.length > 2) args(2).toInt else 16
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-graph-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(cpus)
 
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

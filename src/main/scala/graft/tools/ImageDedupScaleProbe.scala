@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Multimodal}
@@ -17,13 +16,7 @@ object ImageDedupScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(100000)
     val cores = args.drop(1).headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cores)
     import spark.implicits._
 
     def timed[T](label: String)(f: => T): T = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Pq, Similarity}
@@ -46,13 +46,7 @@ object IvfPqScaleProbe {
     // them. (Production sizing rule: L ≳ the expected ADC-tie cohort.)
     val shortlist = 600
     val nQueries = 50
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cores)
     import spark.implicits._
 
     def secs[T](label: String)(f: => T): T = {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.LangId
@@ -33,13 +32,8 @@ object LangSketchScaleProbe {
     val n = args.headOption.map(_.toLong).getOrElse(2000000L)
     val m = args.drop(1).headOption.map(_.toLong).getOrElse(20000000L)
     val cores = args.drop(2).headOption.map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", (2 * cores).toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cores)
+    spark.conf.set("spark.sql.shuffle.partitions", 2L * cores)
 
     // ---- 1. language ID ---------------------------------------------------
     // doc i: language = hash-pick, text = 3 consecutive seed sentences of

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.Layout
@@ -29,13 +29,7 @@ object LayoutWriteProbe {
     val cores = args.drop(1).headOption.map(_.toInt).getOrElse(8)
     val files = 64
     val levels = 4096
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cores)
     println(s"rows=$rows files=$files cores=$cores")
 
     val base = spark.range(rows).select(

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.{NgramLm, QualityModel}
@@ -35,13 +34,8 @@ object LmLrScaleProbe {
     val nDocs = args.headOption.map(_.toLong).getOrElse(2000000L)
     val nRows = args.drop(1).headOption.map(_.toLong).getOrElse(10000000L)
     val cores = args.drop(2).headOption.map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", (2 * cores).toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cores)
+    spark.conf.set("spark.sql.shuffle.partitions", 2L * cores)
     println(s"nDocs=$nDocs nRows=$nRows cores=$cores")
 
     def secs[T](label: String)(f: => T): T = {

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.Incremental
@@ -35,13 +34,7 @@ object MaintenanceScaleProbe {
     val cores = args.drop(1).headOption.map(_.toInt).getOrElse(8)
     val keys = 1000
     val deltaRows = rows / 100
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cores)
     println(s"rows=$rows delta=$deltaRows keys=$keys cores=$cores")
 
     val dir = java.nio.file.Files.createTempDirectory("maint_probe").toString

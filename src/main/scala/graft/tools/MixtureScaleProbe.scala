@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,12 +28,7 @@ object MixtureScaleProbe {
     val domains = args.headOption.map(_.toInt).getOrElse(1000000)
     val rows = args.drop(1).headOption.map(_.toInt).getOrElse(10000000)
     val cores = args.drop(2).headOption.map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cores)
     println(s"domains=$domains rows=$rows cores=$cores")
 
     def time[T](label: String)(f: => T): T = {

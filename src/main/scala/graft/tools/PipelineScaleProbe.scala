@@ -13,7 +13,7 @@ import graft.ext.{Curation, Dedup}
   * decontamination → quality-ordered token budget — run END TO END at n
   * docs (default 10M, 2000× the sf0.1 gate corpus), with per-stage wall
   * times and LISTENER-ASSERTED shuffle volumes. The per-operator probes
-  * (DedupScaleProbe, BloomBuiltinProbe, …) each bound one stage; this probe
+  * (DedupScaleProbe, …) each bound one stage; this probe
   * proves the claim they cannot: that the COMPOSITION stays
   * linear-shuffle-per-stage when each stage consumes the previous stage's
   * materialized survivors rather than a fresh synthetic input.
@@ -54,13 +54,8 @@ object PipelineScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
     val cores = args.drop(1).headOption.map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", (2 * cores).toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cores)
+    spark.conf.set("spark.sql.shuffle.partitions", 2L * cores)
     run(spark, n, cores)
     spark.stop()
   }

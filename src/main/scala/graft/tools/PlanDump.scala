@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Writes `explain("formatted")` output for registered queries to files —
@@ -10,8 +9,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * e.g. `runMain graft.tools.PlanDump plans/r13 before q218_zorder_pruning`.
   * Exact-name match against the SparkEntry registry (a substring match
   * could silently dump a neighbor's plan as the evidence file).
-  * Uses bench-shaped session settings (local[32], shuffle.partitions=32)
-  * so the dumped plan is the one the bench actually runs.
+  * Builds its session with [[graft.Session.local]] (cores from
+  * `SPARK_GRAFT_CPUS`), as Bench does, so the dumped plan is the one the
+  * bench runs at the same core count.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -22,16 +22,7 @@ object PlanDump {
     val (sfArgs, names) = rest.partition(_.startsWith("sf="))
     val sfDir = sfArgs.headOption.map(_.stripPrefix("sf="))
       .getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")

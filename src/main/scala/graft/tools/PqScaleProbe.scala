@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Pq, Similarity}
@@ -25,13 +25,7 @@ object PqScaleProbe {
     val shortlist = 500
     val nQueries = 50
     val clusters = math.max(20, n / 500)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cores)
     println(s"n=$n dim=$dim m=$m k=$k shortlist=$shortlist clusters=$clusters cores=$cores")
 
     def u(seed: Column, kk: Column): Column =

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.Dedup
@@ -33,14 +32,7 @@ object SharedRunsScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(100000L)
     val cpus = if (args.length > 1) args(1).toInt else 16
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-shared-runs-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(cpus)
 
     // token at (doc, pos): hex of xxhash64(doc*131 + pos) — unique-ish per
     // (doc, pos); boilerplate uses the fixed pseudo-doc 0x7fffffff so every

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,12 +21,7 @@ object TopKScaleProbe {
     val groups = args.drop(1).headOption.map(_.toInt).getOrElse(1000)
     val k = args.drop(2).headOption.map(_.toInt).getOrElse(10)
     val cores = args.drop(3).headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cores)
     println(s"n=$n groups=$groups k=$k cores=$cores (group 0 holds 50% of rows)")
 
     // half the rows land in hot group 0; scores are hash-derived doubles

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Layout}
@@ -34,13 +34,7 @@ object WarehouseScaleProbe {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toInt).getOrElse(2000000)
     val cores = args.drop(1).headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cores)
     import spark.implicits._
     println(s"rows=$rows cores=$cores")
 

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.api.{GroupedStats, SeriesFrame}
@@ -34,14 +34,7 @@ object WideAssetProbe {
     val assets = args.headOption.map(_.toLong).getOrElse(10000L)
     val steps = if (args.length > 1) args(1).toLong else 1000L
     val cpus = if (args.length > 2) args(2).toInt else 16
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-wide-asset")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(cpus)
 
     val n = assets * steps
     val df = spark.range(n).select(

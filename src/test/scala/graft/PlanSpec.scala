@@ -260,11 +260,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bucketed tables join without re-shuffling either scan (co-located join)") {
-    // the BucketDemo tool's claim, pinned: bucketBy+sortBy on the join key
-    // at write time means the join consumes the scans directly — the only
-    // exchange in the executed plan is the one above the final aggregation,
-    // never under the join. At 100 TB this is the fact-table re-shuffle
-    // saved on every downstream join.
+    // bucketBy+sortBy on the join key at write time means the join
+    // consumes the scans directly — the only exchange in the executed plan
+    // is the one above the final aggregation, never under the join. At
+    // 100 TB this is the fact-table re-shuffle saved on every downstream
+    // join.
     val tmp = java.nio.file.Files.createTempDirectory("graft-bucket-test")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {

@@ -1,0 +1,52 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Sessions are built in one place and driver threads are started in one
+  * place; a second site is how settings and join semantics drift apart. */
+class SingleSiteSpec extends AnyFunSuite {
+
+  private val root: Path = Iterator.iterate(Paths.get(sys.props("user.dir")).toAbsolutePath)(_.getParent)
+    .takeWhile(_ != null).find(d => Files.exists(d.resolve("build.sbt")))
+    .getOrElse(fail("no build.sbt above the working directory"))
+
+  private val sources: Seq[(String, Seq[String])] =
+    Seq("src/main/scala", "src/test/scala").flatMap { dir =>
+      Files.walk(root.resolve(dir)).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+        .map(p => root.relativize(p).toString ->
+          Files.readAllLines(p).asScala.toSeq)
+    }
+
+  private def sitesOf(pattern: String): Seq[String] = {
+    val re = pattern.r
+    for {
+      (file, lines) <- sources
+      (line, i) <- lines.zipWithIndex if re.findFirstIn(line).isDefined
+    } yield s"$file:${i + 1}"
+  }
+
+  private def assertOnlyIn(sites: Seq[String], files: String*): Unit = {
+    val stray = sites.filterNot(s => files.exists(f => s.startsWith(s"src/main/scala/graft/$f:")))
+    assert(stray.isEmpty, stray.mkString("\n"))
+  }
+
+  test("the scan sees the source tree") {
+    assert(sources.size > 100)
+  }
+
+  test("sessions are built only by graft.Session") {
+    assertOnlyIn(sitesOf("""SparkSession\s*\.\s*builder"""), "Session.scala")
+  }
+
+  test("driver threads are started only by graft.core.Eager") {
+    assertOnlyIn(sitesOf("""ExecutionContext\s*\.\s*global|\bFuture\s*\("""), "core/Eager.scala")
+    // Bench's harness pool runs queries that fork through Eager, so it
+    // cannot share Eager's bounded pool
+    assertOnlyIn(sitesOf("""Executors\s*\.\s*new"""), "core/Eager.scala", "Bench.scala")
+  }
+}

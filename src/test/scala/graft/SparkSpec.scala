@@ -6,15 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  // a fixed 4 cores, not SPARK_GRAFT_CPUS: job, task and plan-size budgets
+  // in the specs are measured at this width
+  lazy val spark: SparkSession = Session.local(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
