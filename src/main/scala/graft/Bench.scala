@@ -1,24 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.queries.{QuerySpec, Registry}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val pool = sys.env.getOrElse("SPARK_GRAFT_BENCH_POOL", "8").toInt
-    // Optional name filter (comma-separated, same contract as Verify's):
-    // lets magnitude sweeps time exactly the subset whose inputs grow at a
-    // synthetic SF (sf10 copies documents/embeddings/events verbatim, so
-    // timing the doc-bound queries there would measure sf0.1 twice).
-    val filterActive: Boolean =
-      sys.env.get("SPARK_GRAFT_BENCH_FILTER").exists(_.nonEmpty)
-    val benchQueries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      sys.env.get("SPARK_GRAFT_BENCH_FILTER") match {
-        case Some(f) if f.nonEmpty =>
-          val names = f.split(",").map(_.trim).filter(_.nonEmpty).toSet
-          val unknown = names -- SparkEntry.queries.keySet
-          require(unknown.isEmpty, s"unknown bench filter names: ${unknown.mkString(", ")}")
-          SparkEntry.queries.filter { case (k, _) => names.contains(k) }
-        case _ => SparkEntry.queries
-      }
+    // Optional name filter (comma-separated exact names, through
+    // Registry.select like Verify's and PlanDump's, so an unknown name fails
+    // the run): lets magnitude sweeps time exactly the subset whose inputs
+    // grow at a synthetic SF (sf10 copies documents/embeddings/events
+    // verbatim, so timing the doc-bound queries there would measure sf0.1
+    // twice).
+    val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").filter(_.nonEmpty)
+    val filterActive: Boolean = filter.isDefined
+    val benchQueries: Seq[QuerySpec] =
+      filter.fold(Registry.specs)(f => Registry.select(f.split(",").toSeq))
     val spark = Session.local()
     // Every error is recorded, never timed: a query that throws in any
     // pass is left out of the per-query map and the totals, named in the
@@ -78,7 +73,7 @@ object Bench {
     // compilation), and so the shared per-(session, sf) cached frames are
     // all populated before any concurrency (their TrieMap getOrElseUpdate
     // could otherwise double-build under a race).
-    benchQueries.foreach { case (name, fn) => attempt(name)(fn(spark, sfDir).count()) }
+    benchQueries.foreach(q => attempt(q.name)(q.run(spark, sfDir).count()))
     // Cache-attribution hygiene: the warm-up populated the shared cached
     // frames, but running the whole suite can EVICT early entries; a frame
     // rebuilt at first touch lands its materialization on whichever timed
@@ -101,19 +96,19 @@ object Bench {
     //     per-query times would be contention-inflated (~2.5x observed at
     //     pool=8), which is why they are NOT the published map.
     def sequentialPass(): Map[String, Double] =
-      benchQueries.flatMap { case (name, fn) =>
+      benchQueries.flatMap { q =>
         val t0 = System.nanoTime()
-        attempt(name)(fn(spark, sfDir).count())
-          .map(_ => name -> (System.nanoTime() - t0) / 1e9)
-      }
+        attempt(q.name)(q.run(spark, sfDir).count())
+          .map(_ => q.name -> (System.nanoTime() - t0) / 1e9)
+      }.toMap
     def parallelWall(): Double = {
       // its own pool, not Eager's: these threads run queries that fork
       // through Eager.all, and nesting on one bounded pool can deadlock
       val exec = java.util.concurrent.Executors.newFixedThreadPool(pool)
       val t0 = System.nanoTime()
-      val futures = benchQueries.toSeq.map { case (name, fn) =>
+      val futures = benchQueries.map { q =>
         exec.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = attempt(name)(fn(spark, sfDir).count())
+          def call(): Unit = attempt(q.name)(q.run(spark, sfDir).count())
         })
       }
       futures.foreach(_.get())
@@ -153,20 +148,12 @@ object Bench {
     // dominate the per-query sum as the suite grows — a regression in the
     // ~220 production queries could hide under their noise. Publish the
     // production subtotal separately so round-over-round gating can target
-    // it directly.
-    val auditQueries = Set("q203_lsh_quality_audit", "q216_pq_adc",
-      "q218_zorder_pruning", "q225_band_join", "q240_ivf_pq")
-    // a renamed audit query (or a typo here) would silently reclassify its
-    // time into non_audit_total — the regression-gating number this split
-    // exists to protect — so an unknown name fails the run loudly. Under a
-    // bench filter the audit set legitimately shrinks to the filtered names
-    // (the filter itself already rejected unknown names against the registry).
-    require(auditQueries.subsetOf(SparkEntry.queries.keySet),
-      s"auditQueries not registered: ${(auditQueries -- SparkEntry.queries.keySet).mkString(", ")}")
+    // it directly. The split is each spec's own `audit` flag.
+    val auditNames = benchQueries.filter(_.audit).map(_.name).toSet
     val nonAuditTotal =
-      results.collect { case (k, v) if !auditQueries.contains(k) => v }.sum
+      results.collect { case (k, v) if !auditNames.contains(k) => v }.sum
     val auditTotal =
-      results.collect { case (k, v) if auditQueries.contains(k) => v }.sum
+      results.collect { case (k, v) if auditNames.contains(k) => v }.sum
     // Provenance: the commit the measured classes were built from, so any
     // bench artifact — including the driver-captured compact tail — can be
     // diffed per-query against the BENCH_SEQ_LATEST.json committed at the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.api.GroupedStats
 import graft.core.Exprs
-import graft.queries.Queries
+import graft.queries.{Queries, Registry}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -21,9 +21,12 @@ object SparkEntry {
       "volatility" -> (r => Exprs.volatility(r, 252, annualize = true))))
   }
 
-  /** One entry per implemented operator family (SURVEY.md §2). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
+  /** One entry per implemented operator family (SURVEY.md §2), from
+    * [[graft.queries.Registry]]. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Registry.specs.map(s => s.name -> s.run).toMap
 
   /** DuckDB-equivalent ANSI SQL for each query (same tables, same rounding). */
-  def oracleSql: Map[String, String] = Queries.oracles
+  def oracleSql: Map[String, String] =
+    Registry.specs.map(s => s.name -> s.oracleSql).toMap
 }

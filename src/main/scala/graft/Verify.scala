@@ -1,24 +1,29 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import graft.queries.Registry
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * throws is recorded, not swallowed: every other result and the oracle
+  * file are still written, then the failed names go to stderr and the run
+  * exits 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional 3rd arg (local iteration only): comma-separated substring
-    // filters on query names (a name runs if ANY of them matches)
-    val nameFilter = args.drop(2).headOption.map(_.split(",").toSeq)
+    // optional 3rd arg (local iteration only): comma-separated exact query
+    // names; an unknown name fails the run before any query runs
+    val specs = args.lift(2).fold(Registry.specs)(f => Registry.select(f.split(",").toSeq))
     val spark = Session.local()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => nameFilter.forall(_.exists(name.contains)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val failed = specs.filterNot { s =>
+      try {
+        s.run(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${s.name}")
+        true
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] ${s.name} failed: ${e.getMessage}")
+        false
       }
-    }
+    }.map(_.name)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -31,10 +36,15 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => nameFilter.forall(_.exists(k.contains)) }
+    // keyed like SparkEntry.oracleSql, so the file lists entries in its order
+    val json = specs.map(s => s.name -> s.oracleSql).toMap
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} of ${specs.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -5259,205 +5259,104 @@ object ExtQueries {
       |  ROUND(100000.0 * pw / z / src_tokens, 6) AS oversample_factor
       |FROM w, z ORDER BY source""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q14_dedup_exact" -> (q14DedupExact _),
-    "q15_text_stats" -> (q15TextStats _),
-    "q16_quality" -> (q16Quality _),
-    "q17_langid" -> (q17LangId _),
-    "q18_minhash" -> (q18Minhash _),
-    "q19_simhash" -> (q19Simhash _),
-    "q20_ann_cosine" -> (q20AnnCosine _),
-    "q21_sessions" -> (q21Sessions _),
-    "q22_event_windows" -> (q22EventWindows _),
-    "q23_embedding_norms" -> (q23EmbeddingNorms _),
-    "q24_sliding_users" -> (q24SlidingUsers _),
-    "q26_event_props" -> (q26EventProps _),
-    "q31_media_decode" -> (q31MediaDecode _),
-    "q32_fingerprint_dedup" -> (q32FingerprintDedup _),
-    "q33_funnel" -> (q33Funnel _),
-    "q34_splits" -> (q34Splits _),
-    "q35_cohort" -> (q35Cohort _),
-    "q36_dup_groups" -> (q36DupGroups _),
-    "q37_cosine_pairs" -> (q37CosinePairs _),
-    "q38_audio_decode" -> (q38AudioDecode _),
-    "q39_token_budget" -> (q39TokenBudget _),
-    "q40_label_centroids" -> (q40LabelCentroids _),
-    "q41_repetition" -> (q41Repetition _),
-    "q42_rebalance" -> (q42Rebalance _),
-    "q43_seq_packing" -> (q43SequencePacking _),
-    "q44_decontaminate" -> (q44Decontaminate _),
-    "q45_pii_scrub" -> (q45PiiScrub _),
-    "q46_quant_error" -> (q46QuantError _),
-    "q47_span_dedup" -> (q47SpanDedup _),
-    "q48_token_entropy" -> (q48TokenEntropy _),
-    "q49_zipf" -> (q49Zipf _),
-    "q50_bloom_decontaminate" -> (q50BloomDecontaminate _),
-    "q51_attribution" -> (q51Attribution _),
-    "q52_hll_distinct" -> (q52HllDistinct _),
-    "q53_cm_heavy_hitters" -> (q53CmHeavyHitters _),
-    "q54_surprisal" -> (q54Surprisal _),
-    "q55_tfidf" -> (q55Tfidf _),
-    "q56_strat_sample" -> (q56StratSample _),
-    "q57_kmeans_assign" -> (q57KmeansAssign _),
-    "q59_transitions" -> (q59Transitions _),
-    "q60_curation_pipeline" -> (q60CurationPipeline _),
-    "q61_bm25" -> (q61Bm25 _),
-    "q62_hll_cube" -> (q62HllCube _),
-    "q63_semantic_groups" -> (q63SemanticGroups _),
-    "q65_bigram_surprisal" -> (q65BigramSurprisal _),
-    "q70_source_mixing" -> (q70SourceMixing _),
-    "q72_video_meta" -> (q72VideoMeta _),
-    "q73_curation_attribution" -> (q73CurationAttribution _),
-    "q75_perceptual_dedup" -> (q75PerceptualDedup _),
-    "q76_frame_sampling" -> (q76FrameSampling _),
-    "q77_video_neardup" -> (q77VideoNearDup _),
-    "q78_perceptual_groups" -> (q78PerceptualGroups _),
-    "q79_topk_per_group" -> (q79TopKPerGroup _),
-    "q80_source_overlap" -> (q80SourceOverlap _),
-    "q81_weighted_sample" -> (q81WeightedSample _),
-    "q82_group_representatives" -> (q82GroupRepresentatives _),
-    "q83_audio_dedup" -> (q83AudioDedup _),
-    "q84_incremental_dedup" -> (q84IncrementalDedup _),
-    "q85_session_overlap" -> (q85SessionOverlap _),
-    "q86_principal_component" -> (q86PrincipalComponent _),
-    "q87_pagerank" -> (q87PageRank _),
-    "q88_pca_scores" -> (q88PcaScores _),
-    "q89_composition_cube" -> (q89CompositionCube _),
-    "q90_collocations" -> (q90Collocations _),
-    "q91_group_split" -> (q91GroupAwareSplit _),
-    "q92_quality_calibration" -> (q92QualityCalibration _),
-    "q93_hybrid_retrieval" -> (q93HybridRetrieval _),
-    "q94_embedding_outliers" -> (q94EmbeddingOutliers _),
-    "q95_prefix_join" -> (q95PrefixJoin _),
-    "q96_triangles" -> (q96Triangles _),
-    "q97_cluster_quality" -> (q97ClusterQuality _),
-    "q98_boilerplate" -> (q98Boilerplate _),
-    "q99_fuzzy_linkage" -> (q99FuzzyLinkage _),
-    "q100_burst_detection" -> (q100BurstDetection _),
-    "q101_skew_audit" -> (q101SkewAudit _),
-    "q102_assoc_rules" -> (q102AssocRules _),
-    "q103_edit_distance_join" -> (q103EditDistanceJoin _),
-    "q104_run_intervals" -> (q104RunIntervals _),
-    "q106_ohlc" -> (q106Ohlc _),
-    "q107_trend_slopes" -> (q107TrendSlopes _),
-    "q108_profile" -> (q108Profile _),
-    "q109_revenue_concentration" -> (q109RevenueConcentration _),
-    "q110_table_checksums" -> (q110TableChecksums _),
-    "q111_benford" -> (q111Benford _),
-    "q112_distribution_drift" -> (q112DistributionDrift _),
-    "q113_weighted_median" -> (q113WeightedMedian _),
-    "q114_sample_estimates" -> (q114SampleEstimates _),
-    "q115_roc_auc" -> (q115RocAuc _),
-    "q116_seasonal_anomalies" -> (q116SeasonalAnomalies _),
-    "q117_ewma_trend" -> (q117EwmaTrend _),
-    "q118_grid_clusters" -> (q118GridClusters _),
-    "q119_ref_integrity" -> (q119RefIntegrity _),
-    "q120_cross_source_dupes" -> (q120CrossSourceDupes _),
-    "q121_shingle_novelty" -> (q121ShingleNovelty _),
-    "q122_source_divergence" -> (q122SourceDivergence _),
-    "q123_bfs_hops" -> (q123BfsHops _),
-    "q124_snapshot_diff" -> (q124SnapshotDiff _),
-    "q125_chunking" -> (q125Chunking _),
-    "q126_temperature_mix" -> (q126TemperatureMix _))
-
-  val oracles: Map[String, String] = Map(
-    "q18_minhash" -> q18Sql,
-    "q19_simhash" -> q19Sql,
-    "q14_dedup_exact" -> q14Sql,
-    "q15_text_stats" -> q15Sql,
-    "q16_quality" -> q16Sql,
-    "q17_langid" -> q17Sql,
-    "q20_ann_cosine" -> q20Sql,
-    "q21_sessions" -> q21Sql,
-    "q22_event_windows" -> q22Sql,
-    "q23_embedding_norms" -> q23Sql,
-    "q24_sliding_users" -> q24Sql,
-    "q26_event_props" -> q26Sql,
-    "q31_media_decode" -> q31Sql,
-    "q32_fingerprint_dedup" -> q32Sql,
-    "q33_funnel" -> q33Sql,
-    "q34_splits" -> q34Sql,
-    "q35_cohort" -> q35Sql,
-    "q36_dup_groups" -> q36Sql,
-    "q37_cosine_pairs" -> q37Sql,
-    "q38_audio_decode" -> q38Sql,
-    "q39_token_budget" -> q39Sql,
-    "q40_label_centroids" -> q40Sql,
-    "q41_repetition" -> q41Sql,
-    "q42_rebalance" -> q42Sql,
-    "q43_seq_packing" -> q43Sql,
-    "q44_decontaminate" -> q44Sql,
-    "q45_pii_scrub" -> q45Sql,
-    "q46_quant_error" -> q46Sql,
-    "q47_span_dedup" -> q47Sql,
-    "q48_token_entropy" -> q48Sql,
-    "q49_zipf" -> q49Sql,
-    "q50_bloom_decontaminate" -> q50Sql,
-    "q51_attribution" -> q51Sql,
-    "q52_hll_distinct" -> q52Sql,
-    "q53_cm_heavy_hitters" -> q53Sql,
-    "q54_surprisal" -> q54Sql,
-    "q55_tfidf" -> q55Sql,
-    "q56_strat_sample" -> q56Sql,
-    "q57_kmeans_assign" -> q57Sql,
-    "q59_transitions" -> q59Sql,
-    "q60_curation_pipeline" -> q60Sql,
-    "q61_bm25" -> q61Sql,
-    "q62_hll_cube" -> q62Sql,
-    "q63_semantic_groups" -> q63Sql,
-    "q65_bigram_surprisal" -> q65Sql,
-    "q70_source_mixing" -> q70Sql,
-    "q72_video_meta" -> q72Sql,
-    "q73_curation_attribution" -> q73Sql,
-    "q75_perceptual_dedup" -> q75Sql,
-    "q76_frame_sampling" -> q76Sql,
-    "q77_video_neardup" -> q77Sql,
-    "q78_perceptual_groups" -> q78Sql,
-    "q79_topk_per_group" -> q79Sql,
-    "q80_source_overlap" -> q80Sql,
-    "q81_weighted_sample" -> q81Sql,
-    "q82_group_representatives" -> q82Sql,
-    "q83_audio_dedup" -> q83Sql,
-    "q84_incremental_dedup" -> q84Sql,
-    "q85_session_overlap" -> q85Sql,
-    "q86_principal_component" -> q86Sql,
-    "q87_pagerank" -> q87Sql,
-    "q88_pca_scores" -> q88Sql,
-    "q89_composition_cube" -> q89Sql,
-    "q90_collocations" -> q90Sql,
-    "q91_group_split" -> q91Sql,
-    "q92_quality_calibration" -> q92Sql,
-    "q93_hybrid_retrieval" -> q93Sql,
-    "q94_embedding_outliers" -> q94Sql,
-    "q95_prefix_join" -> q95Sql,
-    "q96_triangles" -> q96Sql,
-    "q97_cluster_quality" -> q97Sql,
-    "q98_boilerplate" -> q98Sql,
-    "q99_fuzzy_linkage" -> q99Sql,
-    "q100_burst_detection" -> q100Sql,
-    "q101_skew_audit" -> q101Sql,
-    "q102_assoc_rules" -> q102Sql,
-    "q103_edit_distance_join" -> q103Sql,
-    "q104_run_intervals" -> q104Sql,
-    "q106_ohlc" -> q106Sql,
-    "q107_trend_slopes" -> q107Sql,
-    "q108_profile" -> q108Sql,
-    "q109_revenue_concentration" -> q109Sql,
-    "q110_table_checksums" -> q110Sql,
-    "q111_benford" -> q111Sql,
-    "q112_distribution_drift" -> q112Sql,
-    "q113_weighted_median" -> q113Sql,
-    "q114_sample_estimates" -> q114Sql,
-    "q115_roc_auc" -> q115Sql,
-    "q116_seasonal_anomalies" -> q116Sql,
-    "q117_ewma_trend" -> q117Sql,
-    "q118_grid_clusters" -> q118Sql,
-    "q119_ref_integrity" -> q119Sql,
-    "q120_cross_source_dupes" -> q120Sql,
-    "q121_shingle_novelty" -> q121Sql,
-    "q122_source_divergence" -> q122Sql,
-    "q123_bfs_hops" -> q123Sql,
-    "q124_snapshot_diff" -> q124Sql,
-    "q125_chunking" -> q125Sql,
-    "q126_temperature_mix" -> q126Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q14_dedup_exact", q14DedupExact, q14Sql),
+    QuerySpec("q15_text_stats", q15TextStats, q15Sql),
+    QuerySpec("q16_quality", q16Quality, q16Sql),
+    QuerySpec("q17_langid", q17LangId, q17Sql),
+    QuerySpec("q18_minhash", q18Minhash, q18Sql),
+    QuerySpec("q19_simhash", q19Simhash, q19Sql),
+    QuerySpec("q20_ann_cosine", q20AnnCosine, q20Sql),
+    QuerySpec("q21_sessions", q21Sessions, q21Sql),
+    QuerySpec("q22_event_windows", q22EventWindows, q22Sql),
+    QuerySpec("q23_embedding_norms", q23EmbeddingNorms, q23Sql),
+    QuerySpec("q24_sliding_users", q24SlidingUsers, q24Sql),
+    QuerySpec("q26_event_props", q26EventProps, q26Sql),
+    QuerySpec("q31_media_decode", q31MediaDecode, q31Sql),
+    QuerySpec("q32_fingerprint_dedup", q32FingerprintDedup, q32Sql),
+    QuerySpec("q33_funnel", q33Funnel, q33Sql),
+    QuerySpec("q34_splits", q34Splits, q34Sql),
+    QuerySpec("q35_cohort", q35Cohort, q35Sql),
+    QuerySpec("q36_dup_groups", q36DupGroups, q36Sql),
+    QuerySpec("q37_cosine_pairs", q37CosinePairs, q37Sql),
+    QuerySpec("q38_audio_decode", q38AudioDecode, q38Sql),
+    QuerySpec("q39_token_budget", q39TokenBudget, q39Sql),
+    QuerySpec("q40_label_centroids", q40LabelCentroids, q40Sql),
+    QuerySpec("q41_repetition", q41Repetition, q41Sql),
+    QuerySpec("q42_rebalance", q42Rebalance, q42Sql),
+    QuerySpec("q43_seq_packing", q43SequencePacking, q43Sql),
+    QuerySpec("q44_decontaminate", q44Decontaminate, q44Sql),
+    QuerySpec("q45_pii_scrub", q45PiiScrub, q45Sql),
+    QuerySpec("q46_quant_error", q46QuantError, q46Sql),
+    QuerySpec("q47_span_dedup", q47SpanDedup, q47Sql),
+    QuerySpec("q48_token_entropy", q48TokenEntropy, q48Sql),
+    QuerySpec("q49_zipf", q49Zipf, q49Sql),
+    QuerySpec("q50_bloom_decontaminate", q50BloomDecontaminate, q50Sql),
+    QuerySpec("q51_attribution", q51Attribution, q51Sql),
+    QuerySpec("q52_hll_distinct", q52HllDistinct, q52Sql),
+    QuerySpec("q53_cm_heavy_hitters", q53CmHeavyHitters, q53Sql),
+    QuerySpec("q54_surprisal", q54Surprisal, q54Sql),
+    QuerySpec("q55_tfidf", q55Tfidf, q55Sql),
+    QuerySpec("q56_strat_sample", q56StratSample, q56Sql),
+    QuerySpec("q57_kmeans_assign", q57KmeansAssign, q57Sql),
+    QuerySpec("q59_transitions", q59Transitions, q59Sql),
+    QuerySpec("q60_curation_pipeline", q60CurationPipeline, q60Sql),
+    QuerySpec("q61_bm25", q61Bm25, q61Sql),
+    QuerySpec("q62_hll_cube", q62HllCube, q62Sql),
+    QuerySpec("q63_semantic_groups", q63SemanticGroups, q63Sql),
+    QuerySpec("q65_bigram_surprisal", q65BigramSurprisal, q65Sql),
+    QuerySpec("q70_source_mixing", q70SourceMixing, q70Sql),
+    QuerySpec("q72_video_meta", q72VideoMeta, q72Sql),
+    QuerySpec("q73_curation_attribution", q73CurationAttribution, q73Sql),
+    QuerySpec("q75_perceptual_dedup", q75PerceptualDedup, q75Sql),
+    QuerySpec("q76_frame_sampling", q76FrameSampling, q76Sql),
+    QuerySpec("q77_video_neardup", q77VideoNearDup, q77Sql),
+    QuerySpec("q78_perceptual_groups", q78PerceptualGroups, q78Sql),
+    QuerySpec("q79_topk_per_group", q79TopKPerGroup, q79Sql),
+    QuerySpec("q80_source_overlap", q80SourceOverlap, q80Sql),
+    QuerySpec("q81_weighted_sample", q81WeightedSample, q81Sql),
+    QuerySpec("q82_group_representatives", q82GroupRepresentatives, q82Sql),
+    QuerySpec("q83_audio_dedup", q83AudioDedup, q83Sql),
+    QuerySpec("q84_incremental_dedup", q84IncrementalDedup, q84Sql),
+    QuerySpec("q85_session_overlap", q85SessionOverlap, q85Sql),
+    QuerySpec("q86_principal_component", q86PrincipalComponent, q86Sql),
+    QuerySpec("q87_pagerank", q87PageRank, q87Sql),
+    QuerySpec("q88_pca_scores", q88PcaScores, q88Sql),
+    QuerySpec("q89_composition_cube", q89CompositionCube, q89Sql),
+    QuerySpec("q90_collocations", q90Collocations, q90Sql),
+    QuerySpec("q91_group_split", q91GroupAwareSplit, q91Sql),
+    QuerySpec("q92_quality_calibration", q92QualityCalibration, q92Sql),
+    QuerySpec("q93_hybrid_retrieval", q93HybridRetrieval, q93Sql),
+    QuerySpec("q94_embedding_outliers", q94EmbeddingOutliers, q94Sql),
+    QuerySpec("q95_prefix_join", q95PrefixJoin, q95Sql),
+    QuerySpec("q96_triangles", q96Triangles, q96Sql),
+    QuerySpec("q97_cluster_quality", q97ClusterQuality, q97Sql),
+    QuerySpec("q98_boilerplate", q98Boilerplate, q98Sql),
+    QuerySpec("q99_fuzzy_linkage", q99FuzzyLinkage, q99Sql),
+    QuerySpec("q100_burst_detection", q100BurstDetection, q100Sql),
+    QuerySpec("q101_skew_audit", q101SkewAudit, q101Sql),
+    QuerySpec("q102_assoc_rules", q102AssocRules, q102Sql),
+    QuerySpec("q103_edit_distance_join", q103EditDistanceJoin, q103Sql),
+    QuerySpec("q104_run_intervals", q104RunIntervals, q104Sql),
+    QuerySpec("q106_ohlc", q106Ohlc, q106Sql),
+    QuerySpec("q107_trend_slopes", q107TrendSlopes, q107Sql),
+    QuerySpec("q108_profile", q108Profile, q108Sql),
+    QuerySpec("q109_revenue_concentration", q109RevenueConcentration, q109Sql),
+    QuerySpec("q110_table_checksums", q110TableChecksums, q110Sql),
+    QuerySpec("q111_benford", q111Benford, q111Sql),
+    QuerySpec("q112_distribution_drift", q112DistributionDrift, q112Sql),
+    QuerySpec("q113_weighted_median", q113WeightedMedian, q113Sql),
+    QuerySpec("q114_sample_estimates", q114SampleEstimates, q114Sql),
+    QuerySpec("q115_roc_auc", q115RocAuc, q115Sql),
+    QuerySpec("q116_seasonal_anomalies", q116SeasonalAnomalies, q116Sql),
+    QuerySpec("q117_ewma_trend", q117EwmaTrend, q117Sql),
+    QuerySpec("q118_grid_clusters", q118GridClusters, q118Sql),
+    QuerySpec("q119_ref_integrity", q119RefIntegrity, q119Sql),
+    QuerySpec("q120_cross_source_dupes", q120CrossSourceDupes, q120Sql),
+    QuerySpec("q121_shingle_novelty", q121ShingleNovelty, q121Sql),
+    QuerySpec("q122_source_divergence", q122SourceDivergence, q122Sql),
+    QuerySpec("q123_bfs_hops", q123BfsHops, q123Sql),
+    QuerySpec("q124_snapshot_diff", q124SnapshotDiff, q124Sql),
+    QuerySpec("q125_chunking", q125Chunking, q125Sql),
+    QuerySpec("q126_temperature_mix", q126TemperatureMix, q126Sql))
 }

@@ -1194,65 +1194,35 @@ object Queries {
        |FROM yy ORDER BY asset""".stripMargin
   }
 
-  // ---- registry -----------------------------------------------------------
+  // ---- registration ---------------------------------------------------------
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_comp" -> (q01Comp _),
-    "q02_ratios" -> (q02Ratios _),
-    "q03_trade_stats" -> (q03TradeStats _),
-    "q04_var_cvar" -> (q04VarCvar _),
-    "q05_distribution" -> (q05Distribution _),
-    "q06_kelly" -> (q06Kelly _),
-    "q07_drawdown" -> (q07Drawdown _),
-    "q08_episodes" -> (q08Episodes _),
-    "q09_streaks" -> (q09Streaks _),
-    "q10_monthly" -> (q10Monthly _),
-    "q11_trailing" -> (q11Trailing _),
-    "q12_benchmark" -> (q12Benchmark _),
-    "q13_asof" -> (q13AsOf _),
-    "q25_wide_ratios" -> (q25WideRatios _),
-    "q27_segment_returns" -> (q27SegmentReturns _),
-    "q28_rolling_sharpe" -> (q28RollingSharpe _),
-    "q29_drawdown_details" -> (q29DrawdownDetails _),
-    "q30_smart_sharpe" -> (q30SmartSharpe _),
-    "q58_winsorized" -> (q58Winsorized _),
-    "q64_binned_quantiles" -> (q64BinnedQuantiles _),
-    "q66_mad_outliers" -> (q66MadOutliers _),
-    "q67_corr_matrix" -> (q67CorrMatrix _),
-    "q68_quality_audit" -> (q68QualityAudit _),
-    "q69_incremental_moments" -> (q69IncrementalMoments _),
-    "q71_resample_ffill" -> (q71ResampleFfill _),
-    "q74_star_join" -> (q74StarJoin _),
-    "q105_regional_revenue" -> (q105RegionalRevenue _),
-    "q207_tail_metrics" -> (q207TailMetrics _)) ++ ExtQueries.all ++ Round7Queries.all ++ Round8Queries.all ++ Round9Queries.all ++ Round10Queries.all ++ Round11Queries.all ++ Round12Queries.all ++ Round13Queries.all ++ Round14Queries.all ++ Round15Queries.all ++ Round16Queries.all ++ Round17Queries.all
-
-  val oracles: Map[String, String] = Map(
-    "q01_comp" -> q01Sql,
-    "q02_ratios" -> q02Sql,
-    "q03_trade_stats" -> q03Sql,
-    "q04_var_cvar" -> q04Sql,
-    "q05_distribution" -> q05Sql,
-    "q06_kelly" -> q06Sql,
-    "q07_drawdown" -> q07Sql,
-    "q08_episodes" -> q08Sql,
-    "q09_streaks" -> q09Sql,
-    "q10_monthly" -> q10Sql,
-    "q11_trailing" -> q11Sql,
-    "q12_benchmark" -> q12Sql,
-    "q13_asof" -> q13Sql,
-    "q25_wide_ratios" -> q25Sql,
-    "q27_segment_returns" -> q27Sql,
-    "q28_rolling_sharpe" -> q28Sql,
-    "q29_drawdown_details" -> q29Sql,
-    "q30_smart_sharpe" -> q30Sql,
-    "q58_winsorized" -> q58Sql,
-    "q64_binned_quantiles" -> q64Sql,
-    "q66_mad_outliers" -> q66Sql,
-    "q67_corr_matrix" -> q67Sql,
-    "q68_quality_audit" -> q68Sql,
-    "q69_incremental_moments" -> q69Sql,
-    "q71_resample_ffill" -> q71Sql,
-    "q74_star_join" -> q74Sql,
-    "q105_regional_revenue" -> q105Sql,
-    "q207_tail_metrics" -> q207Sql) ++ ExtQueries.oracles ++ Round7Queries.oracles ++ Round8Queries.oracles ++ Round9Queries.oracles ++ Round10Queries.oracles ++ Round11Queries.oracles ++ Round12Queries.oracles ++ Round13Queries.oracles ++ Round14Queries.oracles ++ Round15Queries.oracles ++ Round16Queries.oracles ++ Round17Queries.oracles
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q01_comp", q01Comp, q01Sql),
+    QuerySpec("q02_ratios", q02Ratios, q02Sql),
+    QuerySpec("q03_trade_stats", q03TradeStats, q03Sql),
+    QuerySpec("q04_var_cvar", q04VarCvar, q04Sql),
+    QuerySpec("q05_distribution", q05Distribution, q05Sql),
+    QuerySpec("q06_kelly", q06Kelly, q06Sql),
+    QuerySpec("q07_drawdown", q07Drawdown, q07Sql),
+    QuerySpec("q08_episodes", q08Episodes, q08Sql),
+    QuerySpec("q09_streaks", q09Streaks, q09Sql),
+    QuerySpec("q10_monthly", q10Monthly, q10Sql),
+    QuerySpec("q11_trailing", q11Trailing, q11Sql),
+    QuerySpec("q12_benchmark", q12Benchmark, q12Sql),
+    QuerySpec("q13_asof", q13AsOf, q13Sql),
+    QuerySpec("q25_wide_ratios", q25WideRatios, q25Sql),
+    QuerySpec("q27_segment_returns", q27SegmentReturns, q27Sql),
+    QuerySpec("q28_rolling_sharpe", q28RollingSharpe, q28Sql),
+    QuerySpec("q29_drawdown_details", q29DrawdownDetails, q29Sql),
+    QuerySpec("q30_smart_sharpe", q30SmartSharpe, q30Sql),
+    QuerySpec("q58_winsorized", q58Winsorized, q58Sql),
+    QuerySpec("q64_binned_quantiles", q64BinnedQuantiles, q64Sql),
+    QuerySpec("q66_mad_outliers", q66MadOutliers, q66Sql),
+    QuerySpec("q67_corr_matrix", q67CorrMatrix, q67Sql),
+    QuerySpec("q68_quality_audit", q68QualityAudit, q68Sql),
+    QuerySpec("q69_incremental_moments", q69IncrementalMoments, q69Sql),
+    QuerySpec("q71_resample_ffill", q71ResampleFfill, q71Sql),
+    QuerySpec("q74_star_join", q74StarJoin, q74Sql),
+    QuerySpec("q105_regional_revenue", q105RegionalRevenue, q105Sql),
+    QuerySpec("q207_tail_metrics", q207TailMetrics, q207Sql))
 }

@@ -1731,55 +1731,30 @@ object Round10Queries {
       |  ROUND(cxy * cxy / (vx * vy), 6) AS var_reduction
       |FROM w""".stripMargin
 
-  // ---- registration (extended at the bottom of this file) -------------------
+  // ---- registration ---------------------------------------------------------
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q184_priority_wait" -> (q184PriorityWait _),
-    "q185_nation_pair_volume" -> (q185NationPairVolume _),
-    "q186_product_profit" -> (q186ProductProfit _),
-    "q187_above_share_nations" -> (q187AboveShareNations _),
-    "q188_large_volume_customers" -> (q188LargeVolumeCustomers _),
-    "q189_ship_lag_priority_mix" -> (q189ShipLagPriorityMix _),
-    "q190_durbin_watson" -> (q190DurbinWatson _),
-    "q191_ljung_box" -> (q191LjungBox _),
-    "q192_variance_ratio" -> (q192VarianceRatio _),
-    "q193_diurnal_harmonic" -> (q193DiurnalHarmonic _),
-    "q194_spearman_pearson" -> (q194SpearmanPearson _),
-    "q195_kruskal_wallis" -> (q195KruskalWallis _),
-    "q196_brown_forsythe" -> (q196BrownForsythe _),
-    "q197_kendall_tau" -> (q197KendallTau _),
-    "q198_sole_blame_supplier" -> (q198SoleBlameSupplier _),
-    "q199_top_supplier_per_year" -> (q199TopSupplierPerYear _),
-    "q200_poisson_bootstrap" -> (q200PoissonBootstrap _),
-    "q201_nation_jackknife" -> (q201NationJackknife _),
-    "q202_lang_diversity" -> (q202LangDiversity _),
-    "q203_lsh_quality_audit" -> (q203LshQualityAudit _),
-    "q204_multiple_regression" -> (q204MultipleRegression _),
-    "q205_forecast_backtest" -> (q205ForecastBacktest _),
-    "q206_cuped_ab" -> (q206CupedAb _))
-
-  val oracles: Map[String, String] = Map(
-    "q184_priority_wait" -> q184Sql,
-    "q185_nation_pair_volume" -> q185Sql,
-    "q186_product_profit" -> q186Sql,
-    "q187_above_share_nations" -> q187Sql,
-    "q188_large_volume_customers" -> q188Sql,
-    "q189_ship_lag_priority_mix" -> q189Sql,
-    "q190_durbin_watson" -> q190Sql,
-    "q191_ljung_box" -> q191Sql,
-    "q192_variance_ratio" -> q192Sql,
-    "q193_diurnal_harmonic" -> q193Sql,
-    "q194_spearman_pearson" -> q194Sql,
-    "q195_kruskal_wallis" -> q195Sql,
-    "q196_brown_forsythe" -> q196Sql,
-    "q197_kendall_tau" -> q197Sql,
-    "q198_sole_blame_supplier" -> q198Sql,
-    "q199_top_supplier_per_year" -> q199Sql,
-    "q200_poisson_bootstrap" -> q200Sql,
-    "q201_nation_jackknife" -> q201Sql,
-    "q202_lang_diversity" -> q202Sql,
-    "q203_lsh_quality_audit" -> q203Sql,
-    "q204_multiple_regression" -> q204Sql,
-    "q205_forecast_backtest" -> q205Sql,
-    "q206_cuped_ab" -> q206Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q184_priority_wait", q184PriorityWait, q184Sql),
+    QuerySpec("q185_nation_pair_volume", q185NationPairVolume, q185Sql),
+    QuerySpec("q186_product_profit", q186ProductProfit, q186Sql),
+    QuerySpec("q187_above_share_nations", q187AboveShareNations, q187Sql),
+    QuerySpec("q188_large_volume_customers", q188LargeVolumeCustomers, q188Sql),
+    QuerySpec("q189_ship_lag_priority_mix", q189ShipLagPriorityMix, q189Sql),
+    QuerySpec("q190_durbin_watson", q190DurbinWatson, q190Sql),
+    QuerySpec("q191_ljung_box", q191LjungBox, q191Sql),
+    QuerySpec("q192_variance_ratio", q192VarianceRatio, q192Sql),
+    QuerySpec("q193_diurnal_harmonic", q193DiurnalHarmonic, q193Sql),
+    QuerySpec("q194_spearman_pearson", q194SpearmanPearson, q194Sql),
+    QuerySpec("q195_kruskal_wallis", q195KruskalWallis, q195Sql),
+    QuerySpec("q196_brown_forsythe", q196BrownForsythe, q196Sql),
+    QuerySpec("q197_kendall_tau", q197KendallTau, q197Sql),
+    QuerySpec("q198_sole_blame_supplier", q198SoleBlameSupplier, q198Sql),
+    QuerySpec("q199_top_supplier_per_year", q199TopSupplierPerYear, q199Sql),
+    QuerySpec("q200_poisson_bootstrap", q200PoissonBootstrap, q200Sql),
+    QuerySpec("q201_nation_jackknife", q201NationJackknife, q201Sql),
+    QuerySpec("q202_lang_diversity", q202LangDiversity, q202Sql),
+    QuerySpec("q203_lsh_quality_audit", q203LshQualityAudit, q203Sql, audit = true),
+    QuerySpec("q204_multiple_regression", q204MultipleRegression, q204Sql),
+    QuerySpec("q205_forecast_backtest", q205ForecastBacktest, q205Sql),
+    QuerySpec("q206_cuped_ab", q206CupedAb, q206Sql))
 }

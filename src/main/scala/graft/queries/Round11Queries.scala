@@ -101,11 +101,7 @@ object Round11Queries {
        |  ROUND(AVG(q), 6) AS avg_quality
        |FROM c WHERE cum <= 30000 GROUP BY lang ORDER BY lang""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q208_bpe_tokens" -> (q208BpeTokens _),
-    "q209_bpe_budget" -> (q209BpeBudget _))
-
-  val oracles: Map[String, String] = Map(
-    "q208_bpe_tokens" -> q208Sql,
-    "q209_bpe_budget" -> q209Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q208_bpe_tokens", q208BpeTokens, q208Sql),
+    QuerySpec("q209_bpe_budget", q209BpeBudget, q209Sql))
 }

@@ -265,15 +265,9 @@ object Round12Queries {
       |  CAST(SUM(CASE WHEN c1 < chunk_id THEN 1 ELSE 0 END) AS BIGINT) AS n_carried_in
       |FROM ch GROUP BY chunk_id ORDER BY chunk_id""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q210_langid_eval" -> (q210LangidEval _),
-    "q211_langid_corpus" -> (q211LangidCorpus _),
-    "q212_latency_sketch" -> (q212LatencySketch _),
-    "q213_context_packing" -> (q213ContextPacking _))
-
-  val oracles: Map[String, String] = Map(
-    "q210_langid_eval" -> q210Sql,
-    "q211_langid_corpus" -> q211Sql,
-    "q212_latency_sketch" -> q212Sql,
-    "q213_context_packing" -> q213Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q210_langid_eval", q210LangidEval, q210Sql),
+    QuerySpec("q211_langid_corpus", q211LangidCorpus, q211Sql),
+    QuerySpec("q212_latency_sketch", q212LatencySketch, q212Sql),
+    QuerySpec("q213_context_packing", q213ContextPacking, q213Sql))
 }

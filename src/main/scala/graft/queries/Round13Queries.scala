@@ -427,15 +427,9 @@ object Round13Queries {
        |) ORDER BY step""".stripMargin
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q214_backoff_lm" -> (q214BackoffLm _),
-    "q215_weighted_sample" -> (q215WeightedSample _),
-    "q216_pq_adc" -> (q216PqAdc _),
-    "q217_trained_lr" -> (q217TrainedLr _))
-
-  val oracles: Map[String, String] = Map(
-    "q214_backoff_lm" -> q214Sql,
-    "q215_weighted_sample" -> q215Sql,
-    "q216_pq_adc" -> q216Sql,
-    "q217_trained_lr" -> q217Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q214_backoff_lm", q214BackoffLm, q214Sql),
+    QuerySpec("q215_weighted_sample", q215WeightedSample, q215Sql),
+    QuerySpec("q216_pq_adc", q216PqAdc, q216Sql, audit = true),
+    QuerySpec("q217_trained_lr", q217TrainedLr, q217Sql))
 }

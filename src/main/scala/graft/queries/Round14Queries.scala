@@ -978,25 +978,14 @@ object Round14Queries {
        |JOIN un ON un.d = f.d
        |ORDER BY day""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q218_zorder_pruning" -> (q218ZorderPruning _),
-    "q219_join_size_est" -> (q219JoinSizeEst _),
-    "q220_incremental_agg" -> (q220IncrementalAgg _),
-    "q221_hard_negatives" -> (q221HardNegatives _),
-    "q222_incremental_join" -> (q222IncrementalJoin _),
-    "q223_endbiased_est" -> (q223EndBiasedEst _),
-    "q224_group_sample" -> (q224GroupSample _),
-    "q225_band_join" -> (q225BandJoin _),
-    "q226_kmv_overlap" -> (q226KmvOverlap _))
-
-  val oracles: Map[String, String] = Map(
-    "q218_zorder_pruning" -> q218Sql,
-    "q219_join_size_est" -> q219Sql,
-    "q220_incremental_agg" -> q220Sql,
-    "q221_hard_negatives" -> q221Sql,
-    "q222_incremental_join" -> q222Sql,
-    "q223_endbiased_est" -> q223Sql,
-    "q224_group_sample" -> q224Sql,
-    "q225_band_join" -> q225Sql,
-    "q226_kmv_overlap" -> q226Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q218_zorder_pruning", q218ZorderPruning, q218Sql, audit = true),
+    QuerySpec("q219_join_size_est", q219JoinSizeEst, q219Sql),
+    QuerySpec("q220_incremental_agg", q220IncrementalAgg, q220Sql),
+    QuerySpec("q221_hard_negatives", q221HardNegatives, q221Sql),
+    QuerySpec("q222_incremental_join", q222IncrementalJoin, q222Sql),
+    QuerySpec("q223_endbiased_est", q223EndBiasedEst, q223Sql),
+    QuerySpec("q224_group_sample", q224GroupSample, q224Sql),
+    QuerySpec("q225_band_join", q225BandJoin, q225Sql, audit = true),
+    QuerySpec("q226_kmv_overlap", q226KmvOverlap, q226Sql))
 }

@@ -650,21 +650,14 @@ object Round15Queries {
   // siblings (round-12/13 advice: q231 re-ran the full ~25-job pass set on
   // every bench touch, 2.5 s vs 0.07 s for the cached shapes, measuring
   // scheduler floor, not plans).
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q227_report_table" -> ((s: SparkSession, dir: String) =>
-      ExtQueries.cached(s, dir, "q227_report_table")(q227ReportTable(s, dir))),
-    "q228_asof_align" -> (q228AsofAlign _),
-    "q229_report_multi" -> ((s: SparkSession, dir: String) =>
-      ExtQueries.cached(s, dir, "q229_report_multi")(q229ReportMulti(s, dir))),
-    "q230_report_basic" -> ((s: SparkSession, dir: String) =>
-      ExtQueries.cached(s, dir, "q230_report_basic")(q230ReportBasic(s, dir))),
-    "q231_report_rf" -> ((s: SparkSession, dir: String) =>
-      ExtQueries.cached(s, dir, "q231_report_rf")(q231ReportRf(s, dir))))
+  private def cachedSpec(name: String, run: (SparkSession, String) => DataFrame,
+      sql: String): QuerySpec =
+    QuerySpec(name, (s, dir) => ExtQueries.cached(s, dir, name)(run(s, dir)), sql)
 
-  val oracles: Map[String, String] = Map(
-    "q227_report_table" -> q227Sql,
-    "q228_asof_align" -> q228Sql,
-    "q229_report_multi" -> q229Sql,
-    "q230_report_basic" -> q230Sql,
-    "q231_report_rf" -> q231Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    cachedSpec("q227_report_table", q227ReportTable, q227Sql),
+    QuerySpec("q228_asof_align", q228AsofAlign, q228Sql),
+    cachedSpec("q229_report_multi", q229ReportMulti, q229Sql),
+    cachedSpec("q230_report_basic", q230ReportBasic, q230Sql),
+    cachedSpec("q231_report_rf", q231ReportRf, q231Sql))
 }

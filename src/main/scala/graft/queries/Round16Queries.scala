@@ -471,23 +471,13 @@ object Round16Queries {
 
   // ---- registration ---------------------------------------------------------
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q232_segment_dedup" -> (q232SegmentDedup _),
-    "q233_winnowing" -> (q233Winnowing _),
-    "q234_retrieval_eval" -> (q234RetrievalEval _),
-    "q235_containment_join" -> (q235ContainmentJoin _),
-    "q236_decayed_engagement" -> (q236DecayedEngagement _),
-    "q237_inverse_normal" -> (q237InverseNormal _),
-    "q238_anderson_darling" -> (q238AndersonDarling _),
-    "q239_conformal_coverage" -> (q239ConformalCoverage _))
-
-  val oracles: Map[String, String] = Map(
-    "q232_segment_dedup" -> q232Sql,
-    "q233_winnowing" -> q233Sql,
-    "q234_retrieval_eval" -> q234Sql,
-    "q235_containment_join" -> q235Sql,
-    "q236_decayed_engagement" -> q236Sql,
-    "q237_inverse_normal" -> q237Sql,
-    "q238_anderson_darling" -> q238Sql,
-    "q239_conformal_coverage" -> q239Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q232_segment_dedup", q232SegmentDedup, q232Sql),
+    QuerySpec("q233_winnowing", q233Winnowing, q233Sql),
+    QuerySpec("q234_retrieval_eval", q234RetrievalEval, q234Sql),
+    QuerySpec("q235_containment_join", q235ContainmentJoin, q235Sql),
+    QuerySpec("q236_decayed_engagement", q236DecayedEngagement, q236Sql),
+    QuerySpec("q237_inverse_normal", q237InverseNormal, q237Sql),
+    QuerySpec("q238_anderson_darling", q238AndersonDarling, q238Sql),
+    QuerySpec("q239_conformal_coverage", q239ConformalCoverage, q239Sql))
 }

@@ -209,13 +209,7 @@ object Round17Queries {
     (1 to Round13Queries.PqM * Round13Queries.PqSubDim)
       .map(i => s"($a[$i]-$b[$i])*($a[$i]-$b[$i])").mkString(" + ")
 
-  // lazy: q241Sql references Queries.RetCte, and Queries.all/oracles
-  // reference THIS object back — a test (or any caller) touching
-  // Round17Queries before Queries would otherwise re-enter Queries'
-  // still-running static init and read its `all` field as null. Lazy
-  // members defer every cross-object read to first USE, by which point
-  // Queries.RetCte (declared before Queries.all) is always assigned.
-  lazy val q240Sql: String = {
+  val q240Sql: String = {
     import Round13Queries.{subChainSql, PqM, PqK, PqQueries, PqSubDim, PqTopK}
     val subs = (0 until PqM).map(_.toString).map(s => s"($s)").mkString(", ")
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -371,7 +365,7 @@ object Round17Queries {
       .orderBy("asset")
   }
 
-  lazy val q241Sql: String =
+  val q241Sql: String =
     s"""${Queries.RetRankCte},
        |dq AS (
        |  SELECT asset, CAST(MIN(n) AS BIGINT) AS n,
@@ -613,17 +607,10 @@ object Round17Queries {
 
   // ---- registration ---------------------------------------------------------
 
-  lazy val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q240_ivf_pq" -> (q240IvfPqAdc _),
-    "q241_sketch_tails" -> (q241SketchTails _),
-    "q242_shared_runs" -> (q242SharedRuns _),
-    "q243_filter_agreement" -> (q243FilterAgreement _),
-    "q244_fleiss_kappa" -> (q244FleissKappa _))
-
-  lazy val oracles: Map[String, String] = Map(
-    "q240_ivf_pq" -> q240Sql,
-    "q241_sketch_tails" -> q241Sql,
-    "q242_shared_runs" -> q242Sql,
-    "q243_filter_agreement" -> q243Sql,
-    "q244_fleiss_kappa" -> q244Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q240_ivf_pq", q240IvfPqAdc, q240Sql, audit = true),
+    QuerySpec("q241_sketch_tails", q241SketchTails, q241Sql),
+    QuerySpec("q242_shared_runs", q242SharedRuns, q242Sql),
+    QuerySpec("q243_filter_agreement", q243FilterAgreement, q243Sql),
+    QuerySpec("q244_fleiss_kappa", q244FleissKappa, q244Sql))
 }

@@ -996,37 +996,20 @@ object Round7Queries {
       |    AS trail7_daily_avg
       |FROM w ORDER BY event_type, day""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q127_gopher_rules" -> (q127GopherRules _),
-    "q128_ks_drift" -> (q128KsDrift _),
-    "q129_vocab_growth" -> (q129VocabGrowth _),
-    "q130_cusum_changepoint" -> (q130CusumChangepoint _),
-    "q131_padding_efficiency" -> (q131PaddingEfficiency _),
-    "q132_centroid_drift" -> (q132CentroidDrift _),
-    "q133_minhash_accuracy" -> (q133MinhashAccuracy _),
-    "q134_welch_ab" -> (q134WelchAb _),
-    "q135_trimmed_ab" -> (q135TrimmedAb _),
-    "q136_modal_alignment" -> (q136ModalAlignment _),
-    "q137_filter_sweep" -> (q137FilterSweep _),
-    "q138_chi2_independence" -> (q138Chi2Independence _),
-    "q139_wilson_ci" -> (q139WilsonCi _),
-    "q140_pivot_daily" -> (q140PivotDaily _),
-    "q141_range_window" -> (q141RangeWindow _))
-
-  val oracles: Map[String, String] = Map(
-    "q127_gopher_rules" -> q127Sql,
-    "q128_ks_drift" -> q128Sql,
-    "q129_vocab_growth" -> q129Sql,
-    "q130_cusum_changepoint" -> q130Sql,
-    "q131_padding_efficiency" -> q131Sql,
-    "q132_centroid_drift" -> q132Sql,
-    "q133_minhash_accuracy" -> q133Sql,
-    "q134_welch_ab" -> q134Sql,
-    "q135_trimmed_ab" -> q135Sql,
-    "q136_modal_alignment" -> q136Sql,
-    "q137_filter_sweep" -> q137Sql,
-    "q138_chi2_independence" -> q138Sql,
-    "q139_wilson_ci" -> q139Sql,
-    "q140_pivot_daily" -> q140Sql,
-    "q141_range_window" -> q141Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q127_gopher_rules", q127GopherRules, q127Sql),
+    QuerySpec("q128_ks_drift", q128KsDrift, q128Sql),
+    QuerySpec("q129_vocab_growth", q129VocabGrowth, q129Sql),
+    QuerySpec("q130_cusum_changepoint", q130CusumChangepoint, q130Sql),
+    QuerySpec("q131_padding_efficiency", q131PaddingEfficiency, q131Sql),
+    QuerySpec("q132_centroid_drift", q132CentroidDrift, q132Sql),
+    QuerySpec("q133_minhash_accuracy", q133MinhashAccuracy, q133Sql),
+    QuerySpec("q134_welch_ab", q134WelchAb, q134Sql),
+    QuerySpec("q135_trimmed_ab", q135TrimmedAb, q135Sql),
+    QuerySpec("q136_modal_alignment", q136ModalAlignment, q136Sql),
+    QuerySpec("q137_filter_sweep", q137FilterSweep, q137Sql),
+    QuerySpec("q138_chi2_independence", q138Chi2Independence, q138Sql),
+    QuerySpec("q139_wilson_ci", q139WilsonCi, q139Sql),
+    QuerySpec("q140_pivot_daily", q140PivotDaily, q140Sql),
+    QuerySpec("q141_range_window", q141RangeWindow, q141Sql))
 }

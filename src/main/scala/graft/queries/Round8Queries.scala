@@ -1472,57 +1472,30 @@ object Round8Queries {
       |  ROUND(corr(x, y), 6) AS xcorr
       |FROM p GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q142_semantic_decontam" -> (q142SemanticDecontam _),
-    "q143_semdedup_prune" -> (q143SemdedupPrune _),
-    "q144_domain_cap" -> (q144DomainCap _),
-    "q145_epoch_allocation" -> (q145EpochAllocation _),
-    "q146_split_leakage" -> (q146SplitLeakage _),
-    "q147_length_curriculum" -> (q147LengthCurriculum _),
-    "q148_shard_mixing" -> (q148ShardMixing _),
-    "q149_neardup_leakage" -> (q149NeardupLeakage _),
-    "q150_effective_tokens" -> (q150EffectiveTokens _),
-    "q151_temperature_mixture" -> (q151TemperatureMixture _),
-    "q152_crosslingual_dups" -> (q152CrosslingualDups _),
-    "q153_peak_concurrency" -> (q153PeakConcurrency _),
-    "q154_conversion_survival" -> (q154ConversionSurvival _),
-    "q155_shipping_priority" -> (q155ShippingPriority _),
-    "q156_fulfillment_latency" -> (q156FulfillmentLatency _),
-    "q157_multisignal_groups" -> (q157MultisignalGroups _),
-    "q158_growth_accounting" -> (q158GrowthAccounting _),
-    "q159_funnel_latency" -> (q159FunnelLatency _),
-    "q160_mutual_information" -> (q160MutualInformation _),
-    "q161_subsample_stability" -> (q161SubsampleStability _),
-    "q162_session_paths" -> (q162SessionPaths _),
-    "q163_unpivot_daily" -> (q163UnpivotDaily _),
-    "q164_retention_decay" -> (q164RetentionDecay _),
-    "q165_point_in_time" -> (q165PointInTime _),
-    "q166_lead_lag" -> (q166LeadLag _))
-
-  val oracles: Map[String, String] = Map(
-    "q142_semantic_decontam" -> q142Sql,
-    "q143_semdedup_prune" -> q143Sql,
-    "q144_domain_cap" -> q144Sql,
-    "q145_epoch_allocation" -> q145Sql,
-    "q146_split_leakage" -> q146Sql,
-    "q147_length_curriculum" -> q147Sql,
-    "q148_shard_mixing" -> q148Sql,
-    "q149_neardup_leakage" -> q149Sql,
-    "q150_effective_tokens" -> q150Sql,
-    "q151_temperature_mixture" -> q151Sql,
-    "q152_crosslingual_dups" -> q152Sql,
-    "q153_peak_concurrency" -> q153Sql,
-    "q154_conversion_survival" -> q154Sql,
-    "q155_shipping_priority" -> q155Sql,
-    "q156_fulfillment_latency" -> q156Sql,
-    "q157_multisignal_groups" -> q157Sql,
-    "q158_growth_accounting" -> q158Sql,
-    "q159_funnel_latency" -> q159Sql,
-    "q160_mutual_information" -> q160Sql,
-    "q161_subsample_stability" -> q161Sql,
-    "q162_session_paths" -> q162Sql,
-    "q163_unpivot_daily" -> q163Sql,
-    "q164_retention_decay" -> q164Sql,
-    "q165_point_in_time" -> q165Sql,
-    "q166_lead_lag" -> q166Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q142_semantic_decontam", q142SemanticDecontam, q142Sql),
+    QuerySpec("q143_semdedup_prune", q143SemdedupPrune, q143Sql),
+    QuerySpec("q144_domain_cap", q144DomainCap, q144Sql),
+    QuerySpec("q145_epoch_allocation", q145EpochAllocation, q145Sql),
+    QuerySpec("q146_split_leakage", q146SplitLeakage, q146Sql),
+    QuerySpec("q147_length_curriculum", q147LengthCurriculum, q147Sql),
+    QuerySpec("q148_shard_mixing", q148ShardMixing, q148Sql),
+    QuerySpec("q149_neardup_leakage", q149NeardupLeakage, q149Sql),
+    QuerySpec("q150_effective_tokens", q150EffectiveTokens, q150Sql),
+    QuerySpec("q151_temperature_mixture", q151TemperatureMixture, q151Sql),
+    QuerySpec("q152_crosslingual_dups", q152CrosslingualDups, q152Sql),
+    QuerySpec("q153_peak_concurrency", q153PeakConcurrency, q153Sql),
+    QuerySpec("q154_conversion_survival", q154ConversionSurvival, q154Sql),
+    QuerySpec("q155_shipping_priority", q155ShippingPriority, q155Sql),
+    QuerySpec("q156_fulfillment_latency", q156FulfillmentLatency, q156Sql),
+    QuerySpec("q157_multisignal_groups", q157MultisignalGroups, q157Sql),
+    QuerySpec("q158_growth_accounting", q158GrowthAccounting, q158Sql),
+    QuerySpec("q159_funnel_latency", q159FunnelLatency, q159Sql),
+    QuerySpec("q160_mutual_information", q160MutualInformation, q160Sql),
+    QuerySpec("q161_subsample_stability", q161SubsampleStability, q161Sql),
+    QuerySpec("q162_session_paths", q162SessionPaths, q162Sql),
+    QuerySpec("q163_unpivot_daily", q163UnpivotDaily, q163Sql),
+    QuerySpec("q164_retention_decay", q164RetentionDecay, q164Sql),
+    QuerySpec("q165_point_in_time", q165PointInTime, q165Sql),
+    QuerySpec("q166_lead_lag", q166LeadLag, q166Sql))
 }

@@ -1117,41 +1117,22 @@ object Round9Queries {
 
   // ---- registration ---------------------------------------------------------
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q167_local_supplier_volume" -> (q167LocalSupplierVolume _),
-    "q168_market_share" -> (q168MarketShare _),
-    "q169_returned_items" -> (q169ReturnedItems _),
-    "q170_promo_share" -> (q170PromoShare _),
-    "q171_small_quantity_outliers" -> (q171SmallQuantityOutliers _),
-    "q172_order_fanout" -> (q172OrderFanout _),
-    "q173_mann_whitney" -> (q173MannWhitney _),
-    "q174_wasserstein_shift" -> (q174WassersteinShift _),
-    "q175_decile_drift" -> (q175DecileDrift _),
-    "q176_pettitt_changepoint" -> (q176PettittChangepoint _),
-    "q177_ewma_anomaly" -> (q177EwmaAnomaly _),
-    "q178_neyman_allocation" -> (q178NeymanAllocation _),
-    "q179_source_drift_fdr" -> (q179SourceDriftFdr _),
-    "q180_theil_sen" -> (q180TheilSen _),
-    "q181_revenue_gini" -> (q181RevenueGini _),
-    "q182_clean_supplier_assortment" -> (q182CleanSupplierAssortment _),
-    "q183_dormant_rich" -> (q183DormantRich _))
-
-  val oracles: Map[String, String] = Map(
-    "q167_local_supplier_volume" -> q167Sql,
-    "q168_market_share" -> q168Sql,
-    "q169_returned_items" -> q169Sql,
-    "q170_promo_share" -> q170Sql,
-    "q171_small_quantity_outliers" -> q171Sql,
-    "q172_order_fanout" -> q172Sql,
-    "q173_mann_whitney" -> q173Sql,
-    "q174_wasserstein_shift" -> q174Sql,
-    "q175_decile_drift" -> q175Sql,
-    "q176_pettitt_changepoint" -> q176Sql,
-    "q177_ewma_anomaly" -> q177Sql,
-    "q178_neyman_allocation" -> q178Sql,
-    "q179_source_drift_fdr" -> q179Sql,
-    "q180_theil_sen" -> q180Sql,
-    "q181_revenue_gini" -> q181Sql,
-    "q182_clean_supplier_assortment" -> q182Sql,
-    "q183_dormant_rich" -> q183Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q167_local_supplier_volume", q167LocalSupplierVolume, q167Sql),
+    QuerySpec("q168_market_share", q168MarketShare, q168Sql),
+    QuerySpec("q169_returned_items", q169ReturnedItems, q169Sql),
+    QuerySpec("q170_promo_share", q170PromoShare, q170Sql),
+    QuerySpec("q171_small_quantity_outliers", q171SmallQuantityOutliers, q171Sql),
+    QuerySpec("q172_order_fanout", q172OrderFanout, q172Sql),
+    QuerySpec("q173_mann_whitney", q173MannWhitney, q173Sql),
+    QuerySpec("q174_wasserstein_shift", q174WassersteinShift, q174Sql),
+    QuerySpec("q175_decile_drift", q175DecileDrift, q175Sql),
+    QuerySpec("q176_pettitt_changepoint", q176PettittChangepoint, q176Sql),
+    QuerySpec("q177_ewma_anomaly", q177EwmaAnomaly, q177Sql),
+    QuerySpec("q178_neyman_allocation", q178NeymanAllocation, q178Sql),
+    QuerySpec("q179_source_drift_fdr", q179SourceDriftFdr, q179Sql),
+    QuerySpec("q180_theil_sen", q180TheilSen, q180Sql),
+    QuerySpec("q181_revenue_gini", q181RevenueGini, q181Sql),
+    QuerySpec("q182_clean_supplier_assortment", q182CleanSupplierAssortment, q182Sql),
+    QuerySpec("q183_dormant_rich", q183DormantRich, q183Sql))
 }

@@ -7,8 +7,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * _after.txt). Usage:
   *   sbt "runMain graft.tools.PlanDump <outDir> <suffix> [sf=<dir>] names..."
   * e.g. `runMain graft.tools.PlanDump plans/r13 before q218_zorder_pruning`.
-  * Exact-name match against the SparkEntry registry (a substring match
-  * could silently dump a neighbor's plan as the evidence file).
+  * Names go through [[graft.queries.Registry.select]]: exact match, an
+  * unknown name fails (a substring match could silently dump a neighbor's
+  * plan as the evidence file).
   * Builds its session with [[graft.Session.local]] (cores from
   * `SPARK_GRAFT_CPUS`), as Bench does, so the dumped plan is the one the
   * bench runs at the same core count.
@@ -22,14 +23,12 @@ object PlanDump {
     val (sfArgs, names) = rest.partition(_.startsWith("sf="))
     val sfDir = sfArgs.headOption.map(_.stripPrefix("sf="))
       .getOrElse("/root/testdata/sf0.1")
+    val specs = graft.queries.Registry.select(names.toSeq)
     val spark = graft.Session.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
-    names.foreach { n =>
-      val df = graft.SparkEntry.queries(n)(spark, sfDir)
-      val txt = df.queryExecution.explainString(FormattedMode)
-      val path = java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt")
+    specs.foreach { q =>
+      val txt = q.run(spark, sfDir).queryExecution.explainString(FormattedMode)
+      val path = java.nio.file.Paths.get(outDir, s"${q.name}_$suffix.txt")
       java.nio.file.Files.write(path,
         txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       println(s"wrote $path (${txt.length} chars)")

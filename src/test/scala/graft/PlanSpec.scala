@@ -303,14 +303,14 @@ class PlanSpec extends SparkSpec {
   test("source audits (q120/q121/q122/q125) plan keyed shuffles only — no cartesian") {
     for (name <- Seq("q120_cross_source_dupes", "q121_shingle_novelty",
         "q122_source_divergence", "q125_chunking")) {
-      val plan = graft.queries.ExtQueries.all(name)(spark,
+      val plan = graft.queries.Registry(name).run(spark,
         "/root/testdata/sf0.001").queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"),
         s"$name degenerated to a cartesian: $plan")
     }
     // novelty is pure keyed aggregation — not even a 1-row attach, so no
     // nested-loop join and no global exchange may appear
-    val novelty = graft.queries.ExtQueries.all("q121_shingle_novelty")(spark,
+    val novelty = graft.queries.Registry("q121_shingle_novelty").run(spark,
       "/root/testdata/sf0.001").queryExecution.executedPlan.toString
     assert(!novelty.contains("BroadcastNestedLoopJoin") &&
       !novelty.contains("SinglePartition"), s"q121 plan: $novelty")
@@ -323,7 +323,7 @@ class PlanSpec extends SparkSpec {
         "q130_cusum_changepoint", "q131_padding_efficiency",
         "q134_welch_ab", "q135_trimmed_ab", "q137_filter_sweep",
         "q139_wilson_ci", "q140_pivot_daily", "q141_range_window")) {
-      val plan = graft.queries.Round7Queries.all(name)(spark,
+      val plan = graft.queries.Registry(name).run(spark,
         "/root/testdata/sf0.001").queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"),
         s"$name degenerated to a cartesian: $plan")
@@ -331,14 +331,14 @@ class PlanSpec extends SparkSpec {
     // q127 (rule audit) and q140 (pivot) are pure keyed aggregations: one
     // shuffle on the grouping key, no join of any kind, no global exchange
     for (name <- Seq("q127_gopher_rules", "q140_pivot_daily")) {
-      val plan = graft.queries.Round7Queries.all(name)(spark,
+      val plan = graft.queries.Registry(name).run(spark,
         "/root/testdata/sf0.001").queryExecution.executedPlan.toString
       assert(!plan.contains("Join"), s"$name plans a join: $plan")
       assert(!plan.contains("SinglePartition") || name == "q140_pivot_daily",
         s"$name has a global exchange: $plan")
     }
     // q141's RANGE window is partitioned by event_type — never a global sort
-    val q141 = graft.queries.Round7Queries.all("q141_range_window")(spark,
+    val q141 = graft.queries.Registry("q141_range_window").run(spark,
       "/root/testdata/sf0.001").queryExecution.executedPlan.toString
     assert(!q141.contains("SinglePartition") ||
       q141.contains("rangepartitioning"),

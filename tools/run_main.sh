@@ -1,6 +1,6 @@
 #!/bin/bash
 # Run any graft main on bare java (no sbt lock, JDK17 --add-opens included).
-#   tools/run_main.sh graft.Verify /root/testdata/sf0.01 /tmp/out [filter]
+#   tools/run_main.sh graft.Verify /root/testdata/sf0.01 /tmp/out [name,name,...]
 #   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 tools/run_main.sh graft.Bench
 # Env: SPARK_GRAFT_CPUS (default 4, read by graft.Session), JXMX (default 48g).
 set -euo pipefail
