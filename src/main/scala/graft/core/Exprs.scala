@@ -239,12 +239,4 @@ object Exprs {
     val g2 = fdiv(m4, m2 * m2) - lit(3.0)
     fdiv(n - 1, (n - 2) * (n - 3)) * ((n + 1) * g2 + lit(6.0))
   }
-
-  // --- drawdown aggregates over a precomputed dd column ---
-
-  def ulcerIndex(dd: Column, r: Column): Column =
-    sqrt(fdiv(sum(dd * dd), count(r) - lit(1)))
-
-  def recoveryFactor(r: Column, dd: Column, rf: Double): Column =
-    fdiv(abs(sum(r) - lit(rf)), abs(min(dd)))
 }

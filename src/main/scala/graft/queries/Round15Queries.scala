@@ -43,7 +43,7 @@ object Round15Queries {
   /** Strategy = per-asset daily revenue returns for `l_returnflag = 'N'`,
     * Benchmark = whole-market daily returns (both FIXTURES.md §B derivations,
     * shared with q01-q13 so the scan/group/lag work is cached per session).
-    * A leading row_id (single-partition monotonic id = report row index) pins
+    * A leading row_id (`withRowId`: the report row index) pins
     * the driver's rows-as-written comparison to the report's row order.
     */
   def q227ReportTable(spark: SparkSession, sfDir: String): DataFrame = {
@@ -51,11 +51,15 @@ object Round15Queries {
       .filter(col("asset") === "N").select(col("d"), col("r"))
     val bench = Queries.marketReturns(spark, sfDir)
     val rpt = Reports.metrics(strat, benchmark = Some(bench), mode = "full")
-    // the report frame is built on ONE partition (Reports.buildOutput), so the
-    // monotonic id is the in-order row index 0..69
-    rpt.withColumn("row_id", monotonically_increasing_id())
-      .select(col("row_id"), col("Metric"), col("Benchmark"), col("Strategy"))
+    withRowId(rpt).select(col("row_id"), col("Metric"), col("Benchmark"), col("Strategy"))
   }
+
+  /** The report table with its row index `row_id` (0, 1, …) first: the
+    * table is a local relation spread over several partitions, so it is
+    * coalesced to one, in order, where the monotonic id is the row index.
+    */
+  private def withRowId(rpt: DataFrame): DataFrame =
+    rpt.coalesce(1).withColumn("row_id", monotonically_increasing_id())
 
   /** Multi-strategy report: the three per-asset return series pivoted wide
     * (A, N, R) plus the market benchmark — 70 rows × 4 metric columns. Every
@@ -69,7 +73,7 @@ object Round15Queries {
       .groupBy("d").pivot("asset", Seq("A", "N", "R")).agg(first(col("r")))
     val bench = Queries.marketReturns(spark, sfDir)
     val rpt = Reports.metrics(wide, benchmark = Some(bench), mode = "full")
-    rpt.withColumn("row_id", monotonically_increasing_id())
+    withRowId(rpt)
       .select(col("row_id"), col("Metric"), col("Benchmark"),
         col("A"), col("N"), col("R"))
   }
@@ -520,7 +524,7 @@ object Round15Queries {
     val bench = Queries.marketReturns(spark, sfDir)
     val rpt = Reports.metrics(strat, benchmark = Some(bench), rf = 0.0001,
       mode = "full")
-    rpt.withColumn("row_id", monotonically_increasing_id())
+    withRowId(rpt)
       .select(col("row_id"), col("Metric"), col("Benchmark"), col("Strategy"))
   }
 
@@ -533,7 +537,7 @@ object Round15Queries {
     val strat = Queries.assetReturns(spark, sfDir).df
       .filter(col("asset") === "N").select(col("d"), col("r"))
     val rpt = Reports.metrics(strat, mode = "basic")
-    rpt.withColumn("row_id", monotonically_increasing_id())
+    withRowId(rpt)
       .select(col("row_id"), col("Metric"), col("Strategy"))
   }
 

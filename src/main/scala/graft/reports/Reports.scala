@@ -2,15 +2,16 @@ package graft.reports
 
 import java.sql.{Date, Timestamp}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.api.GroupedStats
 import graft.core.{Dist, Eager, EmptyReturnsError, Exprs, ReturnsFrame}
 import graft.core.Exprs.fdiv
 import graft.functions.GraftProduct.product
+import graft.functions.SeriesAgg
 import graft.stats.Smart
 
 /** QuantStats-style metrics table (reference: alphastats/reports.py:22-290).
@@ -36,15 +37,17 @@ import graft.stats.Smart
   *  - P0, one driver round trip: row count, latest date and the null-aware
   *    start/end date per asset (the latest date fixes the trailing-window
   *    literals of the next pass);
-  *  - the per-asset pass: ONE `groupBy(asset)` over asset-partitioned
-  *    windows (drawdown, episode islands, sign runs, lag-1 pairs) computes
-  *    the scalar, drawdown, episode, streak and benchmark metrics — one
-  *    exchange, never a global single-partition window;
+  *  - the per-asset pass: ONE `groupBy(asset)` computes the scalar and
+  *    benchmark metrics as plain aggregates and the ordered ones (drawdown,
+  *    episodes, sign runs, lag-1 pairs, CVaR) through one
+  *    [[graft.functions.SeriesAgg]] that walks each asset's series in order
+  *    — one exchange, no window and no sort operator;
   *  - the calendar pass: ONE grouping-sets aggregation keyed on
   *    (asset, year, month) / (asset, year, quarter) / (asset, year), then
   *    one per-asset aggregation of the bucket returns.
   * The per-asset and calendar passes are independent, so they run at once
-  * ([[graft.core.Eager]]); both read the cache P0 has already built.
+  * ([[graft.core.Eager]]); both read the cache P0 has already built. The
+  * table itself is a local relation: collecting it runs no job.
   */
 object Reports {
 
@@ -108,7 +111,7 @@ object Reports {
         // (alphastats/reports.py:287-290) — here, an empty frame of the same
         // schema as the None-equivalent
         out.show(rows.size, truncate = false)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out.schema)
+        spark.createDataFrame(java.util.Collections.emptyList[Row], out.schema)
       }
     } finally frame.unpersist()
   }
@@ -120,14 +123,17 @@ object Reports {
       benchName: Option[String], rf: Double, full: Boolean, sep: Boolean,
       compounded: Boolean, periodsPerYear: Int, pct: Double): Seq[(String, Map[String, Any])] = {
     val t = temporal.map(col).orNull
-    val ord: Column = temporal.map(col).getOrElse(monotonically_increasing_id())
+    val ord: Column = temporal.fold(monotonically_increasing_id())(c =>
+      SeriesAgg.orderKey(col(c), frame.schema(c).dataType))
 
     // ---- the long view: one row per (date, asset) with the raw return
-    // `__x`, its zero-filled twin `__r` (reports.py:378) and the zero-filled
-    // benchmark return `__b` (a typed null without a benchmark). Not cached:
-    // it is a projection of the cached frame ----
+    // `__x`, its zero-filled twin `__r` (reports.py:378), the zero-filled
+    // benchmark return `__b` (a typed null without a benchmark), and the
+    // series order: the long key `__ord` and the row's unique tie-break
+    // `__u`. Not cached: it is a projection of the cached frame ----
     val long = frame.select(temporal.map(col).toSeq ++ Seq(
       ord.as("__ord"),
+      monotonically_increasing_id().as("__u"),
       benchName.fold(lit(null).cast("double"))(bn =>
         coalesce(col(bn).cast("double"), lit(0.0))).as("__b"),
       explode(map(names.flatMap(n => Seq(lit(n), col(n).cast("double"))): _*))
@@ -149,7 +155,7 @@ object Reports {
 
     // the two passes are independent, so they run at once
     val (main, calendar) = Eager.both(
-      perAssetPass(long, t, maxRawOpt, benchName, rf, full, compounded, periodsPerYear),
+      perAssetPass(long, t, maxRawOpt, benchName, rf, compounded, periodsPerYear),
       calendarPass(long, t, temporal, rf, full))
 
     def field(row: Row, k: String): Any = {
@@ -160,14 +166,17 @@ object Reports {
       case d: Double => d
       case l: Long => l.toDouble
     }
-    def gLong(k: String, n: String): Long = main(n).getAs[Long](k)
+    // the ordered metrics of each asset (drawdowns, episodes, streaks, rho)
+    val series: Map[String, SeriesAgg.Result] =
+      main.map { case (n, row) => n -> SeriesAgg.Result(row.getStruct(row.fieldIndex("series"))) }
+    def sv(v: Option[Double]): Double = v.getOrElse(Double.NaN)
     def gb(k: String, n: String): Any = calendar.fold[Any]("-")(rows => field(rows(n), k))
     def gbm(k: String, n: String): Any = if (benchName.contains(n)) "-" else field(main(n), k)
     def date(k: String, n: String): Any = if (temporal.isEmpty) null else p0(n).getAs[Any](k)
 
     // ---- autocorr penalties (full mode): the lag-1 corr was collected in
     // the per-asset pass; only the closed-form decay sum runs driver-side ----
-    def penalty(n: String): Double = Smart.penaltyOf(gLong("count", n), Some(g("rho", n)))
+    def penalty(n: String): Double = Smart.penaltyOf(series(n).n, series(n).rho)
 
     // ---- assemble rows ----
     val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Map[String, Any])]
@@ -209,8 +218,8 @@ object Reports {
     if (full) add("Smart Sortino/√2", n => g("sortino", n) / penalty(n) / math.sqrt(2.0))
     add("Omega", n => g("omega", n))
     addSep()
-    add("Max Drawdown", n => g("maxdd", n) * pct)
-    add("Longest DD Days", n => gLong("maxlen", n))
+    add("Max Drawdown", n => sv(series(n).maxDrawdown) * pct)
+    add("Longest DD Days", n => series(n).longestEpisode)
     if (full) {
       addSep()
       add("Volatility (ann.)", n => g("vol", n) * pct)
@@ -219,7 +228,7 @@ object Reports {
         add("Information Ratio", n => gbm("ir", n))
       }
       add("Calmar", n => {
-        val mdd = math.abs(g("maxdd", n))
+        val mdd = math.abs(sv(series(n).maxDrawdown))
         if (mdd == 0) Double.NaN else g("cagr0", n) / mdd
       })
       add("Skew", n => g("skew", n))
@@ -230,9 +239,9 @@ object Reports {
       add("Kelly Criterion", n => g("kelly", n) * pct)
       add("Risk of Ruin", n => g("ror", n))
       add("Daily Value-at-Risk", n => g("var", n) * pct)
-      add("Expected Shortfall (cVaR)", n => g("cvar", n) * pct)
-      add("Max Consecutive Wins", n => gLong("wins", n))
-      add("Max Consecutive Losses", n => gLong("losses", n))
+      add("Expected Shortfall (cVaR)", n => sv(series(n).cvar) * pct)
+      add("Max Consecutive Wins", n => series(n).wins)
+      add("Max Consecutive Losses", n => series(n).losses)
     }
     addSep()
     add("Gain/Pain Ratio", n => g("g2p", n))
@@ -267,11 +276,11 @@ object Reports {
       add("Worst Year", n => numOrDash(gb("worsty", n), pct))
     }
     addSep()
-    add("Avg. Drawdown", n => g("avgdepth", n) * pct)
-    add("Avg. Drawdown Days", n => g("avglen", n))
-    add("Recovery Factor", n => g("recovery", n))
-    add("Ulcer Index", n => g("ulcer", n))
-    add("Serenity Index", n => g("serenity", n))
+    add("Avg. Drawdown", n => series(n).avgDepth * pct)
+    add("Avg. Drawdown Days", n => series(n).avgEpisode)
+    add("Recovery Factor", n => sv(series(n).recovery(0.0)))
+    add("Ulcer Index", n => sv(series(n).ulcer))
+    add("Serenity Index", n => sv(series(n).serenity(rf)))
     if (full) {
       addSep()
       add("Avg. Up Month", n => numOrDash(gb("avgup", n), pct))
@@ -304,52 +313,17 @@ object Reports {
   private def boundary(mx: Any, months: Int, years: Int): Column =
     lit(graft.stats.Calendar.shift(mx, months, years))
 
-  /** Every non-calendar metric of every asset in ONE aggregation: the
-    * windows below all partition by asset, so the long view is exchanged
-    * once and the `groupBy(asset)` reuses that partitioning. Row counts,
-    * not calendar days, measure episodes and streaks (reports.py:397-414).
+  /** Every non-calendar metric of every asset in ONE `groupBy(asset)`: the
+    * plain aggregates plus one [[graft.functions.SeriesAgg]], which walks
+    * each asset's series in order for the drawdown, episode, streak, CVaR
+    * and lag-1 metrics. Row counts, not calendar days, measure episodes and
+    * streaks (reports.py:397-414).
     */
   private def perAssetPass(long: DataFrame, t: Column, maxRawOpt: Option[Any],
-      benchName: Option[String], rf: Double, full: Boolean, compounded: Boolean,
+      benchName: Option[String], rf: Double, compounded: Boolean,
       periodsPerYear: Int): Map[String, Row] = {
     val r = col("__r")
-    val dd = col("__dd")
     val b = col("__b")
-    val wA = Window.partitionBy(col("__asset")).orderBy(col("__ord"))
-    val upTo = wA.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // the whole series, on wA's ordering so that it shares wA's operators
-    val whole = wA.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val z05 = Dist.invCdf(0.05)
-    def sign(x: Column): Column = when(x > 0, 1).when(x < 0, -1).otherwise(0)
-    def withCols(df: DataFrame, cols: Column*): DataFrame = df.select(col("*") +: cols: _*)
-
-    // The windows come in dependency layers, one select each: a select's
-    // windows over one partitioning and ordering run as ONE window operator,
-    // so the pass sorts once by (asset, ord) and once by (asset, episode).
-    val layer1 = withCols(long,
-      product(r + lit(1.0)).over(upTo).as("__wealth"),
-      (avg(r).over(whole) + lit(z05) * stddev_samp(r).over(whole)).as("__rvar"),
-      row_number().over(wA).as("__rn"),
-      // the previous return (`r` has no nulls, so it is also the previous
-      // non-null one): the smart ratios' lag-1 pairs and the sign runs
-      lag(r, 1).over(wA).as("__prev"))
-    val layer2 = withCols(layer1,
-      GroupedStats.drawdown(r, col("__wealth"), upTo).as("__dd"),
-      // streaks: the row number where the current run of equal signs began
-      max(when(col("__prev").isNull || sign(col("__prev")) =!= sign(r), col("__rn")))
-        .over(upTo).as("__runStart"))
-    // drawdown episodes: islands of dd < 0, numbered by a running count of
-    // their first rows
-    val layer3 = withCols(layer2,
-      (avg(dd).over(whole) + lit(z05) * stddev_samp(dd).over(whole)).as("__ddvar"),
-      (dd < 0 && !coalesce(lag(dd, 1).over(wA) < 0, lit(false))).as("__epStart"),
-      (col("__rn") - col("__runStart") + 1).cast("long").as("__runPos"))
-    val layer4 = withCols(layer3, sum(col("__epStart").cast("long")).over(upTo).as("__ep"))
-    val episode = Window.partitionBy(col("__asset"), col("__ep"))
-    val rows = withCols(layer4,
-      sum((dd < 0).cast("long")).over(episode).as("__epLen"),
-      min(when(dd < 0, dd)).over(episode).as("__epDepth"))
-
     def condProd(cond: Column): Column =
       product(when(cond, r + lit(1.0)).otherwise(lit(1.0))) - lit(1.0)
     def condCagr(cond: Column): Column =
@@ -399,23 +373,6 @@ object Reports {
         condCagr(t >= boundary(mx, 0, -5)).as("y5"),
         condCagr(t >= boundary(mx, 0, -10)).as("y10"))
     }
-    val ddCvar = coalesce(avg(when(dd < col("__ddvar"), dd)), first(col("__ddvar")))
-    val ulcer = sqrt(sum(dd * dd) / (count(r) - lit(1)))
-    val drawdowns = Seq(
-      min(dd).as("maxdd"),
-      ulcer.as("ulcer"),
-      fdiv(abs(sum(r) - lit(0.0)), abs(min(dd))).as("recovery"),
-      fdiv(sum(r) - lit(rf), ulcer * fdiv(-ddCvar, stddev_samp(r))).as("serenity"),
-      coalesce(avg(when(r < col("__rvar"), r)), first(col("__rvar"))).as("cvar"),
-      // an asset with no drawdown episode gets zeros, as the reference's
-      // empty-episode frame yields
-      coalesce(max(when(col("__epStart"), col("__epLen"))), lit(0L)).as("maxlen"),
-      coalesce(avg(when(col("__epStart"), col("__epLen"))), lit(0.0)).as("avglen"),
-      coalesce(avg(when(col("__epStart"), col("__epDepth"))), lit(0.0)).as("avgdepth"))
-    val fullOnly = if (!full) Nil else Seq(
-      corr(col("__prev"), r).as("rho"),
-      coalesce(max(when(sign(r) === 1, col("__runPos"))), lit(0L)).as("wins"),
-      coalesce(max(when(sign(r) === -1, col("__runPos"))), lit(0L)).as("losses"))
     val benchmarked = if (benchName.isEmpty) Nil else {
       val beta = fdiv(covar_samp(r, b), var_samp(b))
       val corrC = corr(r, b)
@@ -431,7 +388,15 @@ object Reports {
         corrC.as("corr"),
         fdiv(Exprs.comp(r) - lit(rf), beta).as("treynor"))
     }
-    byAsset(rows, scalars ++ trailing ++ drawdowns ++ fullOnly ++ benchmarked)
+    val series = SeriesAgg(SeriesAgg.Rows)(col("__ord"), col("__u"), r).as("series")
+    // Hash-partitioned by asset first, so each asset's rows meet in one task,
+    // in the cached frame's order, and the plain aggregates run sequentially
+    // instead of as merged partials: their float results are reproducible,
+    // and a constant series keeps an exactly zero variance (merged partial
+    // moments leave a rounding residue — a flat column with rf ≠ 0 would read
+    // a Sharpe of −1.9e17 instead of "-"). SeriesAgg buffers every row for
+    // the exchange anyway, so this moves no more data than partials would.
+    byAsset(long.repartition(col("__asset")), scalars ++ trailing ++ benchmarked :+ series)
   }
 
   /** The calendar family — monthly, quarterly and yearly bucket returns and
@@ -530,6 +495,6 @@ object Reports {
     val data = rows.map { case (label, values) =>
       Row.fromSeq(label +: names.map(n => formatValue(values.getOrElse(n, "-"))))
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(data, 1), schema)
+    spark.createDataFrame(data.asJava, schema)
   }
 }

@@ -1,64 +1,29 @@
 package graft.stats
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DateType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 import graft.core.ReturnsFrame
+import graft.functions.SeriesAgg
 
-/** Drawdown-episode metrics, distributed via gaps-and-islands — replaces the
-  * reference's driver loops `_drawdown_period_lengths` / `avg_drawdown`
-  * (alphastats/stats.py:1570-1642).
+/** Drawdown-episode metrics — the reference's loops
+  * `_drawdown_period_lengths` / `avg_drawdown` (alphastats/stats.py:1570-1642),
+  * run per asset by [[graft.functions.SeriesAgg]] over the melted frame, in
+  * the same plan as the drawdown family of [[Stats]].
   *
-  * Episode length is calendar days (end − start).days + 1 when a temporal
-  * column exists, else the episode row count (alphastats/stats.py:1578-1594).
-  *
-  * All columns compute in ONE melted pass: drawdowns and islands run over
-  * asset-partitioned windows (no single-partition global window, no
-  * per-column jobs), then one per-asset aggregation yields every column's
-  * longest/avg episode stats.
+  * An episode is a maximal run of rows with drawdown < 0 (a null return ends
+  * one). Its length is calendar days (end − start).days + 1 when a temporal
+  * column exists, else its row count (alphastats/stats.py:1578-1594). A
+  * column without episodes gets 0.
   */
 object DrawdownEpisodes {
 
-  def longestDays(returns: DataFrame): DataFrame =
-    build(returns, LongType)(_.map(_.getAs[Long]("__maxlen")).getOrElse(0L))
+  def longestDays(returns: DataFrame): DataFrame = build(returns, LongType)(_.longestEpisode)
 
-  def avgDays(returns: DataFrame): DataFrame =
-    build(returns, DoubleType)(_.map(_.getAs[Double]("__avglen")).getOrElse(0.0))
+  def avgDays(returns: DataFrame): DataFrame = build(returns, DoubleType)(_.avgEpisode)
 
-  def avgDepth(returns: DataFrame): DataFrame =
-    build(returns, DoubleType)(_.map(_.getAs[Double]("__avgdepth")).getOrElse(0.0))
+  def avgDepth(returns: DataFrame): DataFrame = build(returns, DoubleType)(_.avgDepth)
 
-  /** One-row wide frame of a per-column episode aggregate; `pick` reads the
-    * column's per-asset row (None when the column has no episodes).
-    */
-  private def build(returns: DataFrame, dt: DataType)(
-      pick: Option[Row] => Any): DataFrame = {
-    val rfm = ReturnsFrame(returns)
-    val dd = graft.api.GroupedStats.withDrawdown(Stats.melted(rfm)).df
-    val dateTyped = rfm.temporalCol.exists(t => returns.schema(t).dataType == DateType)
-    val o = col("__ord").getField("o")
-    val len: Column =
-      if (rfm.temporalCol.isEmpty) count(lit(1))
-      else if (dateTyped) (datediff(max(o), min(o)) + 1).cast("long")
-      else floor((max(o.cast("long")) - min(o.cast("long"))) / 86400L) + 1
-    val w = Window.partitionBy(col("__asset")).orderBy(col("__ord"))
-    val wf = Window.partitionBy(col("__asset"), col("__in")).orderBy(col("__ord"))
-    val byAsset = dd
-      .withColumn("__in", col("__dd").isNotNull && col("__dd") < 0)
-      .withColumn("__island", row_number().over(w) - row_number().over(wf))
-      .filter(col("__in"))
-      .groupBy(col("__asset"), col("__island"))
-      .agg(len.as("__len"), min(col("__dd")).as("__depth"))
-      .groupBy(col("__asset"))
-      .agg(max("__len").as("__maxlen"),
-        avg("__len").as("__avglen"),
-        avg("__depth").as("__avgdepth"))
-      .collect().map(r => r.getAs[String]("__asset") -> r).toMap
-    val schema = StructType(rfm.numericCols.map(c => StructField(c, dt, nullable = false)))
-    returns.sparkSession.createDataFrame(
-      java.util.Collections.singletonList(Row.fromSeq(
-        rfm.numericCols.map(c => pick(byAsset.get(c))))), schema)
-  }
+  private def build(returns: DataFrame, dt: DataType)(pick: SeriesAgg.Result => Any): DataFrame =
+    Stats.seriesRow(ReturnsFrame(returns), dt, nullable = false)(pick)
 }

@@ -57,7 +57,7 @@ object Smart {
 
   /** Penalty from an already-aggregated (count, lag-1 corr) pair — the entry
     * point for callers that computed the corr in their own (e.g. long-format
-    * key-partitioned) aggregation, like Reports' stacked drawdown pass.
+    * key-partitioned) aggregation, like Reports' per-asset pass.
     */
   def penaltyOf(n: Long, rho: Option[Double]): Double = rho match {
     case Some(r) if n >= 2 && !r.isNaN => math.sqrt(1 + 2 * decaySum(math.abs(r), n))

@@ -1,12 +1,11 @@
 package graft.stats
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 
 import graft.core.{Dist, Exprs, ReturnsFrame}
-import graft.core.Exprs.fdiv
-import graft.functions.GraftProduct.product
+import graft.functions.SeriesAgg
 
 /** The reference's public metric API (SURVEY.md §2.b), Spark-first.
   *
@@ -17,10 +16,14 @@ import graft.functions.GraftProduct.product
   * 1-col result to Double for series-style use.
   *
   * Each scalar metric is a single wide aggregation (one scan, map-side
-  * partials, no row shuffle). Drawdown/streak metrics add ordered window
-  * passes. This wide API mirrors the reference's one-column-per-asset model;
-  * the scale path for many assets is [[graft.api.GroupedStats]] (long format,
-  * partitioned by asset key).
+  * partials, no row shuffle). The ordered metrics — the drawdown family,
+  * CVaR, streaks ([[Streaks]]) and drawdown episodes ([[DrawdownEpisodes]])
+  * — are one per-asset [[graft.functions.SeriesAgg]] over the melted frame,
+  * run eagerly: the N per-asset results are collected and returned as a
+  * 1-row local frame. Only [[toDrawdowns]] (row-level output) and the smart
+  * ratios ([[Smart]]) still run ordered windows. This wide API mirrors the
+  * reference's one-column-per-asset model; the scale path for many assets is
+  * [[graft.api.GroupedStats]] (long format, partitioned by asset key).
   */
 object Stats {
 
@@ -81,20 +84,13 @@ object Stats {
     ReturnsFrame(returns).aggAll(Exprs.valueAtRisk(_, sigma, confidence))
 
   /** CVaR / expected shortfall with VaR fallback when no returns fall below
-    * VaR (reference: alphastats/stats.py:1223-1246). The per-column VaR is an
-    * aggregate needed inside a row-level predicate, so it is broadcast back
-    * over an unbounded window first, then the conditional mean is one agg.
+    * VaR (reference: alphastats/stats.py:1223-1246): one of the ordered
+    * metrics of [[series]], its VaR multiplier z·sigma held by the aggregate.
     */
   def conditionalValueAtRisk(returns: DataFrame, sigma: Double = 1.0,
       confidence: Double = 0.95): DataFrame = {
     val conf = if (confidence > 1) confidence / 100 else confidence
-    val z = Dist.invCdf(1 - conf)
-    val rfm = ReturnsFrame(returns)
-    val r = col("__r")
-    val withVar = melted(rfm).df.withColumn("__var",
-      avg(r).over(Window.partitionBy(col("__asset"))) +
-        lit(z * sigma) * stddev_samp(r).over(Window.partitionBy(col("__asset"))))
-    perAsset(rfm, withVar, coalesce(avg(when(r < col("__var"), r)), first(col("__var"))))
+    ordered(ReturnsFrame(returns), Dist.invCdf(1 - conf) * sigma)(_.cvar)
   }
 
   // ---- trade stats --------------------------------------------------------
@@ -195,40 +191,26 @@ object Stats {
   }
 
   def maxDrawdown(returns: DataFrame): DataFrame =
-    drawdownAgg(ReturnsFrame(returns))((_, dd) => min(dd))
+    ordered(ReturnsFrame(returns))(_.maxDrawdown)
 
   /** CAGR / |maxDD| (reference: alphastats/stats.py:474-506). */
   def calmar(returns: DataFrame, periods: Int = 252): DataFrame = {
     val rfm = ReturnsFrame(returns)
     rfm.requireTemporal
-    drawdownAgg(rfm)((r, dd) =>
-      fdiv(Exprs.cagr(r, 0.0, compound = true, periods), abs(min(dd))))
+    ordered(rfm)(_.calmar(periods))
   }
 
   def ulcerIndex(returns: DataFrame): DataFrame =
-    drawdownAgg(ReturnsFrame(returns))((r, dd) => Exprs.ulcerIndex(dd, r))
+    ordered(ReturnsFrame(returns))(_.ulcer)
 
   def recoveryFactor(returns: DataFrame, rf: Double = 0.0): DataFrame =
-    drawdownAgg(ReturnsFrame(returns))((r, dd) => Exprs.recoveryFactor(r, dd, rf))
+    ordered(ReturnsFrame(returns))(_.recovery(rf))
 
   /** Serenity = (Σr − rf) / (ulcer · pitfall), pitfall = −CVaR(dd)/σ(r)
-    * (reference: alphastats/stats.py:1549-1567). Computed over the melted
-    * frame: the per-column dd-VaR threshold broadcasts via an asset-
-    * partitioned window, never a global one.
+    * (reference: alphastats/stats.py:1549-1567).
     */
-  def serenityIndex(returns: DataFrame, rf: Double = 0.0): DataFrame = {
-    val z = Dist.invCdf(0.05)
-    val rfm = ReturnsFrame(returns)
-    val dd = graft.api.GroupedStats.withDrawdown(melted(rfm)).df
-    val wholeA = Window.partitionBy(col("__asset"))
-    val r = col("__r")
-    val ddc = col("__dd")
-    val withVar = dd.withColumn("__ddvar",
-      avg(ddc).over(wholeA) + lit(z) * stddev_samp(ddc).over(wholeA))
-    val ddCvar = coalesce(avg(when(ddc < col("__ddvar"), ddc)), first(col("__ddvar")))
-    val pitfall = fdiv(-ddCvar, stddev_samp(r))
-    perAsset(rfm, withVar, fdiv(sum(r) - lit(rf), Exprs.ulcerIndex(ddc, r) * pitfall))
-  }
+  def serenityIndex(returns: DataFrame, rf: Double = 0.0): DataFrame =
+    ordered(ReturnsFrame(returns))(_.serenity(rf))
 
   // ---- internals ----------------------------------------------------------
 
@@ -247,36 +229,50 @@ object Stats {
     graft.api.SeriesFrame(stacked, Seq("__asset"), "__ord", "__r")
   }
 
-  /** One aggregate per asset over a melted frame, pivoted back to the
-    * reference's 1-row wide shape: only the N per-asset results cross the
-    * pivot, never the rows.
+  /** Every ordered per-asset metric of every numeric column, collected as
+    * column → result (`Result.empty` for a column without rows, i.e. of an
+    * empty frame): melt → `groupBy(asset).agg(SeriesAgg)`. Each caller
+    * on a frame runs this same plan — `rz` lives in the aggregate instance
+    * and every other parameter in the caller's driver arithmetic, not in a
+    * SQL literal — so the calls share their generated classes.
     */
-  private def perAsset(rfm: ReturnsFrame, long: DataFrame, metric: Column): DataFrame = {
-    val piv = long.groupBy(col("__asset")).agg(metric.as("__v"))
-      .groupBy().pivot("__asset", rfm.numericCols).agg(first(col("__v")))
-    piv.select(rfm.numericCols.map(c => piv(c).as(c)): _*)
+  private def series(rfm: ReturnsFrame, rz: Double): Map[String, SeriesAgg.Result] = {
+    val ordType = rfm.temporalCol.map(t => rfm.df.schema(t).dataType)
+    val o = col("__ord")
+    val agg = SeriesAgg(SeriesAgg.span(ordType), rz)(
+      SeriesAgg.orderKey(o.getField("o"), ordType.getOrElse(LongType)), o.getField("u"), col("__r"))
+    melted(rfm).df.groupBy(col("__asset")).agg(agg).collect()
+      .map(row => row.getString(0) -> SeriesAgg.Result(row.getStruct(1))).toMap
+      .withDefaultValue(SeriesAgg.Result.empty)
   }
 
-  /** A per-asset aggregate of (returns, drawdown) over the melted frame,
-    * whose asset-partitioned windows compute the drawdowns (N columns = N
-    * partitions, no single-partition global window).
+  /** The reference's 1-row wide shape of a per-column `cell` of [[series]],
+    * built on the driver: only the N per-asset results were collected,
+    * never the rows.
     */
-  private def drawdownAgg(rfm: ReturnsFrame)(metric: (Column, Column) => Column): DataFrame =
-    perAsset(rfm, graft.api.GroupedStats.withDrawdown(melted(rfm)).df,
-      metric(col("__r"), col("__dd")))
+  private[stats] def seriesRow(rfm: ReturnsFrame, dt: DataType, nullable: Boolean,
+      rz: Double = SeriesAgg.Z05)(cell: SeriesAgg.Result => Any): DataFrame = {
+    val results = series(rfm, rz)
+    rfm.df.sparkSession.createDataFrame(
+      java.util.Collections.singletonList(Row.fromSeq(rfm.numericCols.map(c => cell(results(c))))),
+      StructType(rfm.numericCols.map(c => StructField(c, dt, nullable))))
+  }
+
+  /** A double metric of [[series]] per column, null where it is null. */
+  private def ordered(rfm: ReturnsFrame, rz: Double = SeriesAgg.Z05)(
+      metric: SeriesAgg.Result => Option[Double]): DataFrame =
+    seriesRow(rfm, DoubleType, nullable = true, rz)(metric(_).map(Double.box).orNull)
 
   /** Appends `__dd_<c>` drawdown columns for every numeric column via the
     * melted frame, then a pivot on the row ordinal restores the wide shape
-    * (the row-level form [[toDrawdowns]] returns; aggregates use
-    * [[drawdownAgg]] instead of pivoting every row).
+    * (the row-level form [[toDrawdowns]] returns).
     */
   private def withDrawdownCols(rfm: ReturnsFrame): (DataFrame, String => String) = {
     val dd = graft.api.GroupedStats.withDrawdown(melted(rfm)).df
     val pivoted = dd.groupBy(col("__ord"))
       .pivot("__asset", rfm.numericCols)
       .agg(first(col("__r")).as("r"), first(col("__dd")).as("dd"))
-    // __ord kept so order-sensitive consumers (toDrawdowns) can re-sort;
-    // aggregate consumers ignore it
+    // __ord kept so toDrawdowns can re-sort
     val restored = pivoted.select(
       (col("__ord") +: rfm.temporalCol.map(t => col("__ord").getField("o").as(t)).toSeq) ++
         rfm.numericCols.map(c => pivoted(s"${c}_r").as(c)) ++

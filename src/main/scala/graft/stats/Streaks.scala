@@ -1,45 +1,25 @@
 package graft.stats
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.LongType
 
 import graft.core.ReturnsFrame
 
-/** Longest win/loss streaks, distributed via gaps-and-islands — replaces the
-  * reference's driver-side loop `_consecutive_count`
-  * (alphastats/stats.py:1249-1289). Nulls reset the streak (they form their
-  * own sign class, breaking islands), matching alphastats/stats.py:1253-1255.
+/** Longest win/loss streaks — the reference's loop `_consecutive_count`
+  * (alphastats/stats.py:1249-1289), run per asset by
+  * [[graft.functions.SeriesAgg]] over the melted, optionally calendar-
+  * bucketed frame. Nulls reset the streak (they form their own sign class),
+  * matching alphastats/stats.py:1253-1255.
   */
 object Streaks {
 
-  /** All columns in ONE melted gaps-and-islands pass: sign islands run over
-    * asset-partitioned windows (no per-column jobs, no single-partition
-    * global window), one per-asset aggregation yields every column's longest
-    * run of the target sign.
+  /** Every column's longest run of the target sign from ONE per-asset
+    * aggregation; 0 for a column without such a run.
     */
   def consecutive(returns: DataFrame, winning: Boolean,
       aggregate: Option[String], compounded: Boolean): DataFrame = {
-    val bucketed = Calendar.simpleReturns(ReturnsFrame(returns), aggregate, compounded)
-    val rfm = ReturnsFrame(bucketed)
-    val target = if (winning) 1 else -1
-    val sign = when(col("__r").isNull, lit(2))
-      .when(col("__r") > 0, lit(1))
-      .when(col("__r") < 0, lit(-1))
-      .otherwise(lit(0))
-    val w = Window.partitionBy(col("__asset")).orderBy(col("__ord"))
-    val ws = Window.partitionBy(col("__asset"), col("__sign")).orderBy(col("__ord"))
-    val byAsset = Stats.melted(rfm).df
-      .withColumn("__sign", sign)
-      .withColumn("__island", row_number().over(w) - row_number().over(ws))
-      .filter(col("__sign") === target)
-      .groupBy(col("__asset"), col("__island")).agg(count(lit(1)).as("__len"))
-      .groupBy(col("__asset")).agg(max("__len").as("__max"))
-      .collect().map(r => r.getAs[String]("__asset") -> r.getAs[Long]("__max")).toMap
-    val schema = StructType(rfm.numericCols.map(c => StructField(c, LongType, nullable = false)))
-    returns.sparkSession.createDataFrame(
-      java.util.Collections.singletonList(Row.fromSeq(
-        rfm.numericCols.map(c => byAsset.getOrElse(c, 0L): Any))), schema)
+    val rfm = ReturnsFrame(Calendar.simpleReturns(ReturnsFrame(returns), aggregate, compounded))
+    Stats.seriesRow(rfm, LongType, nullable = false)(s =>
+      if (winning) s.wins else s.losses)
   }
 }

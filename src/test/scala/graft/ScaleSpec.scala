@@ -57,13 +57,14 @@ class ScaleSpec extends SparkSpec {
 
   test("wide Stats API computes through asset-partitioned windows (melt guard)") {
     import graft.stats.Stats
-    // lazily-planned paths: inspect the returned frame's plan directly
-    Seq(Stats.maxDrawdown(simpleDf), Stats.serenityIndex(simpleDf),
-      Stats.conditionalValueAtRisk(simpleDf), Stats.toDrawdowns(simpleDf),
-      Stats.ulcerIndex(simpleDf))
-      .foreach(assertPartitionedWindows)
+    // lazily-planned path: inspect the returned frame's plan directly
+    assertPartitionedWindows(Stats.toDrawdowns(simpleDf))
     // eagerly-collecting paths: capture every internal query's plan
     val plans = Instrument.optimizedPlans(spark) {
+      Stats.maxDrawdown(simpleDf).collect()
+      Stats.serenityIndex(simpleDf).collect()
+      Stats.conditionalValueAtRisk(simpleDf).collect()
+      Stats.ulcerIndex(simpleDf).collect()
       Stats.smartSharpe(simpleDf).collect()
       Stats.probabilisticSharpeRatio(simpleDf, smart = true).collect()
       Stats.consecutiveWins(simpleDf).collect()

@@ -43,6 +43,17 @@ class SingleSiteSpec extends AnyFunSuite {
     assertOnlyIn(sitesOf("""SparkSession\s*\.\s*builder"""), "Session.scala")
   }
 
+  test("ordered per-asset metrics run windows only in GroupedStats, toDrawdowns and Smart") {
+    // two implementations of the ordered metrics: SeriesAgg for the wide
+    // API and Reports, the GroupedStats windows for the long-format API
+    // (toDrawdowns, whose output is row-level, reuses them)
+    def wideApi(site: String): Boolean =
+      site.startsWith("src/main/scala/graft/reports/") || site.startsWith("src/main/scala/graft/stats/")
+    assertOnlyIn(sitesOf("""\.over\(""").filter(wideApi), "stats/Smart.scala")
+    assertOnlyIn(sitesOf("""GroupedStats\.withDrawdown|row_number\(""").filter(wideApi),
+      "stats/Stats.scala")
+  }
+
   test("driver threads are started only by graft.core.Eager") {
     assertOnlyIn(sitesOf("""ExecutionContext\s*\.\s*global|\bFuture\s*\("""), "core/Eager.scala")
     // Bench's harness pool runs queries that fork through Eager, so it
