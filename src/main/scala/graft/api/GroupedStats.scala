@@ -7,15 +7,17 @@ import org.apache.spark.sql.functions._
 import graft.core.Exprs
 import graft.core.Exprs.fdiv
 import graft.functions.GraftProduct.product
+import graft.functions.SeriesAgg
 
 /** Long-format (asset-keyed) series frame: `keys` identify a series, `ts`
   * orders it, `value` is the per-period return/measure.
   *
   * This is the 100-TB shape of the engine (SURVEY.md §7.1 design rules):
-  * metrics become `groupBy(keys)` aggregations and windows partition by
-  * `keys`, so work distributes across executors instead of the reference's
-  * one-column-per-asset wide frames. The wide [[graft.stats.Stats]] API is
-  * the reference-parity edge; this is the scale core.
+  * metrics become `groupBy(keys)` aggregations, and the ordered ones walk
+  * each series once inside that aggregation, so work distributes across
+  * executors instead of the reference's one-column-per-asset wide frames.
+  * The wide [[graft.stats.Stats]] API is the reference-parity edge; this is
+  * the scale core.
   */
 final case class SeriesFrame(df: DataFrame, keys: Seq[String], ts: String, value: String) {
   def keyCols: Seq[Column] = keys.map(col)
@@ -25,23 +27,30 @@ final case class SeriesFrame(df: DataFrame, keys: Seq[String], ts: String, value
   def runWindow: WindowSpec =
     Window.partitionBy(keyCols: _*).orderBy(col(ts))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-  /** Whole-series window (for broadcasting a per-key aggregate to rows). */
-  def wholeWindow: WindowSpec = Window.partitionBy(keyCols: _*)
 }
 
-/** Per-key metric computation over a [[SeriesFrame]]. One `aggregate` call =
-  * one shuffle on the keys; window passes reuse the same hash partitioning,
-  * so multi-stage metrics (drawdowns, CVaR, episodes) stay at a single
-  * exchange under AQE.
+/** Per-key metric computation over a [[SeriesFrame]]. Every metric is one
+  * `groupBy(keys)`, so one shuffle on the keys.
+  *
+  * The ordered metrics — drawdowns, VaR/CVaR, streaks, drawdown episodes and
+  * the lag-1 autocorrelation of the smart ratios — are one
+  * [[graft.functions.SeriesAgg]] in that `groupBy`, next to the plain
+  * aggregates: it buffers each key's rows, sorts them by `ts` and walks them
+  * once, so these calls plan no window and no sort. Memory: the buffer holds
+  * the whole series, O(series length) per key per task, about 25 B per row
+  * (order key, tie-break, return, null flags). `ts` must be a date,
+  * timestamp or integral column; any other type fails at call time.
+  *
+  * Row-level outputs — [[withDrawdown]], [[drawdownDetails]], [[rolling]] —
+  * stay key-partitioned windows.
   */
 object GroupedStats {
 
   /** Melt a reference-style wide frame (one numeric column per asset, one
     * temporal column) into the long scale format: (asset, ts, r). This is
     * the bridge from the reference's data model to the partition-by-key
-    * engine core — at 100 TB, N assets become N window partitions instead
-    * of N columns.
+    * engine core — at 100 TB, N assets become N groups instead of N
+    * columns.
     */
   def fromWide(df: DataFrame, tsCol: String, assetCol: String = "asset",
       valueCol: String = "r"): SeriesFrame = {
@@ -60,117 +69,93 @@ object GroupedStats {
     sf.df.groupBy(sf.keyCols: _*).agg(exprs.head, exprs.tail: _*)
   }
 
-  /** Appends `__wealth` and `__dd` (clipped drawdown) per series. */
+  /** Appends `__wealth` and `__dd` per series: wealth Π(1+r) over the running
+    * window, and the clipped drawdown wealth ÷ running peak − 1, at most 0,
+    * null where `r` is null.
+    */
   def withDrawdown(sf: SeriesFrame): SeriesFrame = {
     val w = sf.runWindow
-    val step1 = sf.df.withColumn("__wealth", product(sf.r + lit(1.0)).over(w))
-    val step2 = step1.withColumn("__dd", drawdown(sf.r, col("__wealth"), w))
-    sf.copy(df = step2)
+    val wealth = col("__wealth")
+    val withWealth = sf.df.withColumn("__wealth", product(sf.r + lit(1.0)).over(w))
+    sf.copy(df = withWealth.withColumn("__dd", when(sf.r.isNull, lit(null))
+      .otherwise(least(fdiv(wealth, max(wealth).over(w)) - lit(1.0), lit(0.0)))))
   }
 
-  /** Clipped drawdown of return `r` from its running `wealth` (Π(1+r) over
-    * the running window `w`): wealth ÷ running peak − 1, at most 0; null
-    * where `r` is null.
+  /** One `groupBy(keys)`: the [[SeriesAgg]] struct of each series as `__s`,
+    * then `plain`. The series is ordered by `key` (default: `ts`'s order
+    * key), ties by `ts`'s order key. Episode lengths are measured as key
+    * differences in days; only [[drawdownEpisodes]] reads them, and it
+    * passes a day key.
     */
-  def drawdown(r: Column, wealth: Column, w: WindowSpec): Column =
-    when(r.isNull, lit(null))
-      .otherwise(least(fdiv(wealth, max(wealth).over(w)) - lit(1.0), lit(0.0)))
+  private def walk(sf: SeriesFrame, plain: Seq[Column] = Nil, rz: Double = SeriesAgg.Z05,
+      key: Option[Column] = None): DataFrame = {
+    val ts = SeriesAgg.orderKey(col(sf.ts), sf.df.schema(sf.ts).dataType)
+    val s = SeriesAgg(SeriesAgg.Days, rz)(key.getOrElse(ts), coalesce(ts, lit(0L)), sf.r)
+    sf.df.groupBy(sf.keyCols: _*).agg(s.as("__s"), plain: _*)
+  }
+
+  /** A field of [[walk]]'s struct. */
+  private def walked(field: String): Column = col("__s").getField(field)
 
   /** max_drawdown / ulcer_index / recovery_factor (+ any extra metric
-    * expressions over the raw returns) in ONE aggregation over the
-    * dd-augmented frame.
+    * expressions over the raw returns) in ONE aggregation.
     */
-  def drawdownStats(sf: SeriesFrame, extra: Seq[(String, Column => Column)] = Nil): DataFrame = {
-    val dd = withDrawdown(sf)
-    val ddCol = col("__dd")
-    val exprs = Seq(
-      min(ddCol).as("max_drawdown"),
-      sqrt(fdiv(sum(ddCol * ddCol), count(dd.r) - lit(1))).as("ulcer_index"),
-      fdiv(abs(sum(dd.r)), abs(min(ddCol))).as("recovery_factor")
-    ) ++ extra.map { case (n, f) => f(dd.r).as(n) }
-    dd.df.groupBy(sf.keyCols: _*).agg(exprs.head, exprs.tail: _*)
-  }
+  def drawdownStats(sf: SeriesFrame, extra: Seq[(String, Column => Column)] = Nil): DataFrame =
+    walk(sf, extra.map { case (n, f) => f(sf.r).as(n) }).select(sf.keyCols ++ Seq(
+      walked("maxDrawdown").as("max_drawdown"),
+      sqrt(fdiv(walked("ddSquares"), walked("n") - lit(1L))).as("ulcer_index"),
+      fdiv(abs(walked("sum")), abs(walked("maxDrawdown"))).as("recovery_factor")) ++
+      extra.map { case (n, _) => col(n) }: _*)
 
-  /** Parametric VaR + conditional VaR per key. The per-key VaR is broadcast
-    * to rows via a whole-partition window (same shuffle key as the final
-    * groupBy → one exchange), then CVaR is a conditional mean with VaR
-    * fallback (reference: alphastats/stats.py:1223-1246).
+  /** Parametric VaR, mean + Φ⁻¹(1 − confidence)·sigma·σ, and conditional VaR,
+    * the mean of the returns below it, else VaR (reference:
+    * alphastats/stats.py:1223-1246).
     */
   def varCvar(sf: SeriesFrame, sigma: Double = 1.0, confidence: Double = 0.95): DataFrame = {
     val conf = if (confidence > 1) confidence / 100 else confidence
-    val z = graft.core.Dist.invCdf(1 - conf)
-    val whole = sf.wholeWindow
-    val withVar = sf.df.withColumn("__var",
-      avg(sf.r).over(whole) + lit(z * sigma) * stddev_samp(sf.r).over(whole))
-    withVar.groupBy(sf.keyCols: _*).agg(
-      first(col("__var")).as("value_at_risk"),
-      coalesce(avg(when(sf.r < col("__var"), sf.r)), first(col("__var"))).as("cvar"))
+    val rz = graft.core.Dist.invCdf(1 - conf) * sigma
+    walk(sf, rz = rz).select(sf.keyCols ++ Seq(
+      (walked("sum") / walked("n") + lit(rz) * walked("std")).as("value_at_risk"),
+      walked("cvar").as("cvar")): _*)
   }
 
   /** Per-key smart Sharpe: sharpe ÷ autocorrelation penalty, fully
-    * distributed (reference: alphastats/stats.py:1334-1346). The lag pairs
-    * come from a key-partitioned window (previous NON-NULL value, matching
-    * the wide API's null-filtered lag), the lag-1 correlation and base
-    * sharpe share one aggregation, and the geometric-decay sum evaluates in
-    * closed form as a column expression — no driver loop, scales to any
-    * number of keys.
+    * distributed (reference: alphastats/stats.py:1334-1346). The lag-1
+    * correlation pairs each return with the previous NON-NULL one (the wide
+    * API's null-filtered lag), the base sharpe is a plain aggregate of the
+    * same `groupBy`, and the geometric-decay sum evaluates in closed form as
+    * a column expression — no driver loop, scales to any number of keys.
     */
   def smartSharpe(sf: SeriesFrame, rf: Double = 0.0, periods: Int = 252,
       annualize: Boolean = true): DataFrame = {
-    val prevW = Window.partitionBy(sf.keyCols: _*).orderBy(col(sf.ts))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val lagged = sf.df.withColumn("__prev", last(sf.r, ignoreNulls = true).over(prevW))
-    val agg = lagged.groupBy(sf.keyCols: _*).agg(
-      count(sf.r).as("__n"),
-      corr(col("__prev"), sf.r).as("__rho"),
-      Exprs.sharpe(sf.r, rf, periods, annualize).as("sharpe"))
-    val pen = Exprs.autocorrPenalty(col("__rho"), col("__n"))
+    val agg = walk(sf, Seq(Exprs.sharpe(sf.r, rf, periods, annualize).as("sharpe")))
+    val pen = Exprs.autocorrPenalty(walked("rho"), walked("n"))
     agg.select(sf.keyCols ++ Seq(
       col("sharpe"),
       pen.as("autocorr_penalty"),
       (col("sharpe") / pen).as("smart_sharpe")): _*)
   }
 
-  /** Longest win and loss streaks per key via gaps-and-islands — fully
-    * distributed replacement for the reference's driver loop
-    * (alphastats/stats.py:1249-1289).
+  /** Longest win and loss streaks per key, 0 without any (a null return is
+    * its own run) — the reference's driver loop
+    * (alphastats/stats.py:1249-1289), run per key.
     */
-  def streaks(sf: SeriesFrame): DataFrame = {
-    val sgn = when(sf.r.isNull, lit(2))
-      .when(sf.r > 0, lit(1)).when(sf.r < 0, lit(-1)).otherwise(lit(0))
-    val w = Window.partitionBy(sf.keyCols: _*).orderBy(col(sf.ts))
-    val ws = Window.partitionBy(sf.keyCols :+ col("__sgn"): _*).orderBy(col(sf.ts))
-    val islands = sf.df.withColumn("__sgn", sgn)
-      .withColumn("__island", row_number().over(w) - row_number().over(ws))
-    // keep zero/null islands too: a key with no wins/losses must still get a
-    // row (0, 0) — filtering to ±1 here would drop all-flat series entirely
-    val runs = islands
-      .groupBy(sf.keyCols :+ col("__sgn") :+ col("__island"): _*)
-      .agg(count(lit(1)).as("__len"))
-    runs.groupBy(sf.keyCols: _*).agg(
-      coalesce(max(when(col("__sgn") === 1, col("__len"))), lit(0L)).as("consecutive_wins"),
-      coalesce(max(when(col("__sgn") === -1, col("__len"))), lit(0L)).as("consecutive_losses"))
-  }
+  def streaks(sf: SeriesFrame): DataFrame =
+    walk(sf).select(sf.keyCols ++ Seq(
+      walked("wins").as("consecutive_wins"), walked("losses").as("consecutive_losses")): _*)
 
-  /** Drawdown-episode metrics per key (longest/avg duration in calendar days
-    * for date-typed ts, plus mean episode depth) via gaps-and-islands
-    * (reference: alphastats/stats.py:1570-1642).
+  /** Drawdown-episode metrics per key: longest/avg duration in calendar days,
+    * (last − first date) + 1 by `datediff` — on a timestamp `ts`, dates in
+    * the session time zone — plus mean episode depth (reference:
+    * alphastats/stats.py:1570-1642). A key without episodes has no row;
+    * `ts` must be a date or timestamp.
     */
   def drawdownEpisodes(sf: SeriesFrame): DataFrame = {
-    val dd = withDrawdown(sf)
-    val inDd = col("__dd").isNotNull && col("__dd") < 0
-    val w = Window.partitionBy(sf.keyCols: _*).orderBy(col(sf.ts))
-    val wf = Window.partitionBy(sf.keyCols :+ col("__in"): _*).orderBy(col(sf.ts))
-    val islands = dd.df.withColumn("__in", inDd)
-      .withColumn("__island", row_number().over(w) - row_number().over(wf))
-      .filter(col("__in"))
-    val eps = islands.groupBy(sf.keyCols :+ col("__island"): _*).agg(
-      (datediff(max(col(sf.ts)), min(col(sf.ts))) + 1).cast("long").as("__len"),
-      min(col("__dd")).as("__depth"))
-    eps.groupBy(sf.keyCols: _*).agg(
-      coalesce(max(col("__len")), lit(0L)).as("longest_dd_days"),
-      coalesce(avg(col("__len")), lit(0.0)).as("avg_dd_days"),
-      coalesce(avg(col("__depth")), lit(0.0)).as("avg_drawdown"))
+    val days = datediff(col(sf.ts), lit(java.time.LocalDate.EPOCH)).cast("long")
+    walk(sf, key = Some(days)).filter(walked("episodes") > 0).select(sf.keyCols ++ Seq(
+      walked("longestEpisode").as("longest_dd_days"),
+      walked("avgEpisode").as("avg_dd_days"),
+      walked("avgDepth").as("avg_drawdown")): _*)
   }
 
   /** Per-episode drawdown table: one row per drawdown episode per key with

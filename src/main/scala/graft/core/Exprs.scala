@@ -90,9 +90,22 @@ object Exprs {
   def expectedReturn(r: Column): Column =
     pow(product(r + lit(1.0)), lit(1.0) / count(r)) - lit(1.0)
 
+  /** `stddev_samp`, but exactly 0 for ≥ 2 non-null values that are all equal
+    * and finite. Spark merges per-partition partial moments, and the merged
+    * mean, (c/n)·n, can differ from c, which leaves a rounding residue in m2:
+    * a constant series spread over partitions reads σ ≈ 1e-19, and a ratio
+    * over it a huge finite number instead of ±Inf/NaN. n ≤ 1 stays null and
+    * NaN or infinite input NaN, as in `stddev_samp`.
+    */
+  def sampleStd(x: Column): Column = {
+    val lo = min(x)
+    when(count(x) > 1 && lo === max(x) && abs(lo) < lit(Double.PositiveInfinity), lit(0.0))
+      .otherwise(stddev_samp(x))
+  }
+
   def sharpe(r: Column, rf: Double, periods: Int, annualize: Boolean): Column = {
     val x = excess(r, rf)
-    val s = fdiv(avg(x), stddev_samp(x))
+    val s = fdiv(avg(x), sampleStd(x))
     if (annualize) s * lit(math.sqrt(periods.toDouble)) else s
   }
 
@@ -108,7 +121,7 @@ object Exprs {
   }
 
   def volatility(r: Column, periods: Int, annualize: Boolean): Column = {
-    val s = stddev_samp(r)
+    val s = sampleStd(r)
     if (annualize) s * lit(math.sqrt(periods.toDouble)) else s
   }
 
@@ -138,7 +151,7 @@ object Exprs {
   def valueAtRisk(r: Column, sigma: Double, confidence: Double): Column = {
     val conf = if (confidence > 1) confidence / 100 else confidence
     val z = Dist.invCdf(1 - conf)
-    avg(r) + lit(z * sigma) * stddev_samp(r)
+    avg(r) + lit(z * sigma) * sampleStd(r)
   }
 
   /** Exact linear-interpolation quantile — parity requires exact, not approx

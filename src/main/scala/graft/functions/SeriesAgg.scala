@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, Encoder, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.{udaf, unix_date, unix_micros}
-import org.apache.spark.sql.types.{DataType, DateType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, LongType, ShortType,
+  TimestampNTZType, TimestampType}
 
 /** Every ordered per-series metric in ONE aggregate: one series' (order key,
   * return) rows are buffered, sorted, and walked once — the sequential loop
@@ -26,11 +27,15 @@ import org.apache.spark.sql.types.{DataType, DateType, TimestampNTZType, Timesta
   * `Exprs.fdiv` division.
   *
   * Order: the key ascending with null keys first, then the tie-break — the
-  * order `orderBy(key, tie)` gives. Callers pass a tie-break that is unique
-  * per row, so the result does not depend on how rows reach the aggregate.
+  * order `orderBy(key, tie)` gives. The wide API and `Reports` pass a
+  * tie-break that is unique per row, so the result does not depend on how
+  * rows reach the aggregate; `GroupedStats` ties on `ts` itself, so rows of
+  * one key with equal `ts` keep no defined order, as under a window ordered
+  * by `ts`.
   *
   * Memory: the buffer holds the whole series, O(series length) per group
-  * per task — the bound the exact `percentile` aggregates already have.
+  * per task, about 25 B per row (key, tie-break and return, 8 B each, and a
+  * flag byte) — the bound the exact `percentile` aggregates already have.
   * Partial buffers are concatenated by `merge`; nothing is computed before
   * `finish`, so map-side partial aggregation only moves rows.
   */
@@ -59,15 +64,19 @@ object SeriesAgg {
 
   /** An order column as the aggregate's long key: days since the epoch for a
     * date, microseconds for a timestamp, the value for an integral column.
+    * Any other type fails here, naming the column: a cast to long would null
+    * the keys of a string or fractional column and leave the order undefined.
     */
   def orderKey(c: Column, dt: DataType): Column = dt match {
     case DateType => unix_date(c).cast("long")
     case TimestampType => unix_micros(c)
     case TimestampNTZType => unix_micros(c.cast("timestamp"))
-    case _ => c.cast("long")
+    case ByteType | ShortType | IntegerType | LongType => c.cast("long")
+    case _ => throw new IllegalArgumentException(
+      s"order column $c has type ${dt.simpleString}; expected date, timestamp or an integral type")
   }
 
-  /** One row: order key (None sorts first), unique tie-break, return. */
+  /** One row: order key (None sorts first), tie-break, return. */
   final case class Obs(key: Option[Long], tie: Long, r: Option[Double])
 
   /** Buffered rows, column-wise; the first `n` slots are in use. `nulls`
@@ -119,7 +128,9 @@ object SeriesAgg {
   }
 
   /** Per-series results. Options are SQL nulls; the episode and streak
-    * figures are 0 for a series without episodes or runs.
+    * figures are 0 for a series without episodes or runs. `episodes` counts
+    * every episode, also one whose keys are all null (it has a depth but no
+    * length).
     */
   final case class Result(
       n: Long,                    // non-null returns
@@ -130,6 +141,7 @@ object SeriesAgg {
       ddSquares: Option[Double],  // Σdd²
       ddCvar: Option[Double],     // mean dd below dd-VaR, else dd-VaR
       cvar: Option[Double],       // mean r below r-VaR, else r-VaR
+      episodes: Long,
       longestEpisode: Long,
       avgEpisode: Double,
       avgDepth: Double,
@@ -157,13 +169,14 @@ object SeriesAgg {
 
   object Result {
     /** The result of a series without rows. */
-    val empty: Result = Result(0L, None, None, None, None, None, None, None, 0L, 0.0, 0.0, 0L, 0L, None)
+    val empty: Result = Result(0L, None, None, None, None, None, None, None, 0L, 0L, 0.0, 0.0, 0L, 0L, None)
 
     /** A collected `SeriesAgg` struct. */
     def apply(row: Row): Result = {
       def opt(k: String): Option[Double] = Option(row.getAs[java.lang.Double](k)).map(_.doubleValue)
       Result(row.getAs[Long]("n"), opt("sum"), opt("std"), opt("wealth"), opt("maxDrawdown"),
-        opt("ddSquares"), opt("ddCvar"), opt("cvar"), row.getAs[Long]("longestEpisode"),
+        opt("ddSquares"), opt("ddCvar"), opt("cvar"), row.getAs[Long]("episodes"),
+        row.getAs[Long]("longestEpisode"),
         row.getAs[Double]("avgEpisode"), row.getAs[Double]("avgDepth"),
         row.getAs[Long]("wins"), row.getAs[Long]("losses"), opt("rho"))
     }
@@ -326,6 +339,7 @@ object SeriesAgg {
         ddSquares = if (any) Some(ddSq) else None,
         ddCvar = tailMean(dds, m, ddm.valueAtRisk(Z05)),
         cvar = tailMean(rs, m, rm.valueAtRisk(rz)),
+        episodes = eps,
         longestEpisode = epLenMax,
         avgEpisode = if (epLenN == 0) 0.0 else epLenSum / epLenN,
         avgDepth = if (eps == 0) 0.0 else epDepthSum / eps,

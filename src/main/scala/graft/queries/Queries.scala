@@ -258,15 +258,9 @@ object Queries {
 
   def q07Drawdown(spark: SparkSession, sfDir: String): DataFrame = {
     val sf = assetReturns(spark, sfDir)
-    val dd = GroupedStats.withDrawdown(sf)
-    val ddc = col("__dd")
-    val cagrE = Exprs.cagr(dd.r, 0.0, compound = true, 252)
-    val out = dd.df.groupBy(col("asset")).agg(
-      cagrE.as("cagr"),
-      fdiv(cagrE, abs(min(ddc))).as("calmar"),
-      min(ddc).as("max_drawdown"),
-      sqrt(sum(ddc * ddc) / (count(dd.r) - lit(1))).as("ulcer_index"),
-      fdiv(abs(sum(dd.r)), abs(min(ddc))).as("recovery_factor"))
+    val out = GroupedStats.drawdownStats(sf,
+      extra = Seq("cagr" -> (r => Exprs.cagr(r, 0.0, compound = true, 252))))
+      .withColumn("calmar", fdiv(col("cagr"), abs(col("max_drawdown"))))
     finish(out, Seq("cagr", "calmar", "max_drawdown", "ulcer_index", "recovery_factor"))
   }
 

@@ -89,6 +89,24 @@ class PlanSpec extends SparkSpec {
     assert(rows("up") == ((2L, 0L)))
   }
 
+  test("GroupedStats' ordered metrics execute no Window and no Sort operator") {
+    val df = (0 until 200).map(i => (s"k${i % 4}", java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1)
+      .plusDays(i / 4)), math.sin(i) / 50)).toDF("asset", "d", "r")
+    val sf = SeriesFrame(df, Seq("asset"), "d", "r")
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "drawdownStats" -> (() => GroupedStats.drawdownStats(sf)),
+      "varCvar" -> (() => GroupedStats.varCvar(sf)),
+      "streaks" -> (() => GroupedStats.streaks(sf)),
+      "drawdownEpisodes" -> (() => GroupedStats.drawdownEpisodes(sf)),
+      "smartSharpe" -> (() => GroupedStats.smartSharpe(sf)))
+    ops.foreach { case (name, op) =>
+      val nodes = Instrument.executedOperators(spark)(op().collect()).map(_.nodeName)
+      assert(nodes.contains("ObjectHashAggregate"), s"$name: ${nodes.distinct}")
+      val bad = nodes.filter(n => n.contains("Window") || n == "Sort")
+      assert(bad.isEmpty, s"$name: $bad")
+    }
+  }
+
   test("vector-mean aggregation runs with map-side partial merge, not an exploded shuffle") {
     val d = (1 to 100).map(i => (i % 5, Seq.fill(4)(i * 0.1))).toDF("label", "vec")
     val plan = explainString(graft.ext.Similarity.labelCentroids(d, "label", "vec"))

@@ -3,19 +3,19 @@ package graft
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.api.{GroupedStats, SeriesFrame}
 import graft.functions.SeriesAgg
 
-/** [[SeriesAgg]] against the `GroupedStats` windows it shares its semantics
-  * with and against serial driver-side references, on random series with
-  * leading, interior and trailing nulls, zeros, r = −1, all-flat, all-null
-  * and single-row series, duplicate and null dates, on Date and Timestamp
-  * axes. Max drawdown, streaks and episodes must be equal; CVaR, dd-CVaR,
-  * serenity, ulcer and ρ agree to 1e-12 relative.
+/** [[SeriesAgg]] against serial driver-side references, and the
+  * `GroupedStats` metrics built on it against the window formulation of the
+  * oracle SQL, on random series with leading, interior and trailing nulls,
+  * zeros, r = −1, all-flat, all-null and single-row series, duplicate and
+  * null dates, on Date and Timestamp axes. Max drawdown, streaks and
+  * episodes must be equal; CVaR, dd-CVaR, serenity, ulcer and ρ agree to
+  * 1e-12 relative.
   */
 class SeriesAggSpec extends SparkSpec {
   import SeriesAggSpec._
@@ -146,7 +146,7 @@ class SeriesAggSpec extends SparkSpec {
     val serenity = for (u <- ulcer; c <- ddCvar; s <- std(rs)) yield
       fdiv(rs.sum - rf, u * fdiv(-c, s))
     Ref(dds.reduceOption((a, b) => if (gt(a, b)) b else a), ulcer, ddCvar, tail(rs, rz), serenity,
-      if (lens.isEmpty) 0L else lens.max,
+      eps.size.toLong, if (lens.isEmpty) 0L else lens.max,
       if (lens.isEmpty) 0.0 else lens.map(_.toDouble).sum / lens.size,
       if (eps.isEmpty) 0.0 else eps.map(_.map(_._2).min).sum / eps.size,
       longest(1), longest(-1), rho)
@@ -175,7 +175,8 @@ class SeriesAggSpec extends SparkSpec {
               val g = got(a)
               val clue = s"seed $seed $sp $a"
               assert(g.maxDrawdown == want.maxDd, clue)
-              assert((g.longestEpisode, g.avgEpisode, g.avgDepth) == ((want.longest, want.avgLen, want.avgDepth)), clue)
+              assert((g.episodes, g.longestEpisode, g.avgEpisode, g.avgDepth) ==
+                ((want.episodes, want.longest, want.avgLen, want.avgDepth)), clue)
               assert((g.wins, g.losses) == ((want.wins, want.losses)), clue)
               close(s"$clue ulcer", g.ulcer, want.ulcer)
               close(s"$clue ddCvar", g.ddCvar, want.ddCvar)
@@ -188,46 +189,171 @@ class SeriesAggSpec extends SparkSpec {
       }
     }
 
-  test("matches the GroupedStats windows on the same random series") {
+  /** [[graft.core.Exprs.fdiv]] in Spark SQL. */
+  private def sqlFdiv(a: String, b: String): String =
+    s"CASE WHEN $b = 0 THEN CASE WHEN $a = 0 THEN CAST('NaN' AS DOUBLE) " +
+      s"WHEN $a > 0 THEN CAST('Infinity' AS DOUBLE) WHEN $a < 0 THEN CAST('-Infinity' AS DOUBLE) END " +
+      s"ELSE $a / $b END"
+
+  /** The window formulation of the q04, q07, q08 and q09 oracles (and q30's
+    * lag-1 correlation), in Spark SQL over a `ret(asset, d, r)` view. The
+    * oracles' input has no null returns; here a null return has no
+    * drawdown, ends an episode and is its own sign class, as in GroupedStats.
+    */
+  private def windowSql(z: Double): Map[String, String] = {
+    val run = "PARTITION BY asset ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    val dd =
+      s"""WITH wl AS (
+         |  SELECT asset, d, r, graft_product(1 + r) OVER ($run) AS wealth FROM ret),
+         |dd AS (
+         |  SELECT asset, d, r,
+         |         CASE WHEN r IS NOT NULL THEN LEAST(wealth / MAX(wealth) OVER ($run) - 1, 0) END AS ddv
+         |  FROM wl)""".stripMargin
+    Map(
+      "q04" ->
+        s"""WITH v AS (
+           |  SELECT asset, r,
+           |         AVG(r) OVER (PARTITION BY asset) + (${z}D) * STDDEV_SAMP(r) OVER (PARTITION BY asset) AS var
+           |  FROM ret)
+           |SELECT asset, ANY_VALUE(var) AS value_at_risk,
+           |  COALESCE(AVG(CASE WHEN r < var THEN r END), ANY_VALUE(var)) AS cvar
+           |FROM v GROUP BY asset""".stripMargin,
+      "q07" ->
+        s"""$dd
+           |SELECT asset, MIN(ddv) AS max_drawdown,
+           |  SQRT(${sqlFdiv("SUM(ddv * ddv)", "(COUNT(r) - 1)")}) AS ulcer_index,
+           |  ${sqlFdiv("ABS(SUM(r))", "ABS(MIN(ddv))")} AS recovery_factor
+           |FROM dd GROUP BY asset""".stripMargin,
+      "q08" ->
+        s"""$dd,
+           |fl AS (
+           |  SELECT asset, d, ddv, COALESCE(ddv < 0, false) AS ind,
+           |         ROW_NUMBER() OVER (PARTITION BY asset ORDER BY d)
+           |           - ROW_NUMBER() OVER (PARTITION BY asset, COALESCE(ddv < 0, false) ORDER BY d) AS island
+           |  FROM dd),
+           |ep AS (
+           |  SELECT asset, island, CAST(datediff(MAX(d), MIN(d)) + 1 AS BIGINT) AS len, MIN(ddv) AS depth
+           |  FROM fl WHERE ind GROUP BY asset, island)
+           |SELECT asset, COALESCE(MAX(len), 0) AS longest_dd_days,
+           |  COALESCE(AVG(len), 0) AS avg_dd_days, COALESCE(AVG(depth), 0) AS avg_drawdown
+           |FROM ep GROUP BY asset""".stripMargin,
+      "q09" ->
+        """WITH s AS (
+          |  SELECT asset, d,
+          |         CASE WHEN r IS NULL THEN 2 WHEN r > 0 THEN 1 WHEN r < 0 THEN -1 ELSE 0 END AS sgn
+          |  FROM ret),
+          |i AS (
+          |  SELECT asset, sgn,
+          |         ROW_NUMBER() OVER (PARTITION BY asset ORDER BY d)
+          |           - ROW_NUMBER() OVER (PARTITION BY asset, sgn ORDER BY d) AS island
+          |  FROM s),
+          |runs AS (SELECT asset, sgn, island, COUNT(*) AS len FROM i GROUP BY 1, 2, 3)
+          |SELECT asset,
+          |  COALESCE(MAX(CASE WHEN sgn = 1 THEN len END), 0) AS consecutive_wins,
+          |  COALESCE(MAX(CASE WHEN sgn = -1 THEN len END), 0) AS consecutive_losses
+          |FROM runs GROUP BY asset""".stripMargin,
+      "q30" ->
+        """WITH lagd AS (
+          |  SELECT asset, r, LAST(r, true) OVER (PARTITION BY asset ORDER BY d
+          |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS p
+          |  FROM ret)
+          |SELECT asset, COUNT(r) AS n, CORR(p, r) AS rho FROM lagd GROUP BY asset""".stripMargin)
+  }
+
+  test("GroupedStats matches the oracles' window SQL on random series") {
     Seq(21, 22).foreach { seed =>
-      // unique, non-null dates: GroupedStats orders and measures episodes by the date alone
+      // unique, non-null dates: the windows order and measure episodes by the date alone
       val rows = frame(seed, 1L, dupDates = false, nullDates = false)
       val df = toDf(rows, DateType)
-      // the VaR multiplier of varCvar's defaults (sigma 1, confidence 0.95)
-      val got = aggregate(df, SeriesAgg.Days, graft.core.Dist.invCdf(1 - 0.95))
+      Graft.register(spark)
+      df.createOrReplaceTempView("ret")
+      def byAsset(d: DataFrame): Map[String, Row] = d.collect().map(r => r.getString(0) -> r).toMap
+      val queries = windowSql(graft.core.Dist.invCdf(1 - 0.95))
+      val sql = queries.map { case (q, text) => q -> byAsset(spark.sql(text)) }
       val sf = SeriesFrame(df, Seq("asset"), "d", "r")
-      val dd = GroupedStats.drawdownStats(sf).collect().map(r => r.getString(0) -> r).toMap
-      val eps = GroupedStats.drawdownEpisodes(sf).collect().map(r => r.getString(0) -> r).toMap
-      val streaks = GroupedStats.streaks(sf).collect().map(r => r.getString(0) -> r).toMap
-      val cvar = GroupedStats.varCvar(sf).collect().map(r => r.getString(0) -> r).toMap
-      val prev = Window.partitionBy("asset").orderBy("d").rowsBetween(Window.unboundedPreceding, -1)
-      val rho = df.withColumn("p", last(col("r"), ignoreNulls = true).over(prev))
-        .groupBy("asset").agg(corr(col("p"), col("r"))).collect()
-        .map(r => r.getString(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
+      val dd = byAsset(GroupedStats.drawdownStats(sf))
+      val vc = byAsset(GroupedStats.varCvar(sf))
+      val streaks = byAsset(GroupedStats.streaks(sf))
+      val eps = byAsset(GroupedStats.drawdownEpisodes(sf))
+      val smart = byAsset(GroupedStats.smartSharpe(sf))
+      val pen = byAsset(spark.sql(queries("q30"))
+        .select(col("asset"), graft.core.Exprs.autocorrPenalty(col("rho"), col("n")).as("p")))
       def opt(r: Row, k: String): Option[Double] = Option(r.getAs[java.lang.Double](k)).map(_.doubleValue)
-      got.foreach { case (a, g) =>
+      assert(dd.keySet == sql("q07").keySet && vc.keySet == sql("q04").keySet &&
+        streaks.keySet == sql("q09").keySet && smart.keySet == pen.keySet)
+      // a series without episodes has no row on either side
+      assert(eps.keySet == sql("q08").keySet, s"seed $seed")
+      dd.keys.foreach { a =>
         val clue = s"seed $seed $a"
-        assert(g.maxDrawdown == opt(dd(a), "max_drawdown"), clue)
-        close(s"$clue ulcer", g.ulcer, opt(dd(a), "ulcer_index"))
-        close(s"$clue recovery", g.recovery(0.0), opt(dd(a), "recovery_factor"))
-        close(s"$clue cvar", g.cvar, opt(cvar(a), "cvar"))
-        close(s"$clue rho", g.rho, rho(a))
-        assert(g.wins == streaks(a).getAs[Long]("consecutive_wins"), clue)
-        assert(g.losses == streaks(a).getAs[Long]("consecutive_losses"), clue)
-        // drawdownEpisodes has no row for a series without episodes
-        val (longest, avgLen, avgDepth) = eps.get(a).fold((0L, 0.0, 0.0))(e => (
-          e.getAs[Long]("longest_dd_days"), e.getAs[Double]("avg_dd_days"), e.getAs[Double]("avg_drawdown")))
-        assert(g.longestEpisode == longest, clue)
-        assert(g.avgEpisode == avgLen, clue)
-        close(s"$clue avgDepth", Some(g.avgDepth), Some(avgDepth))
+        val (q04, q07, q09) = (sql("q04")(a), sql("q07")(a), sql("q09")(a))
+        assert(opt(dd(a), "max_drawdown") == opt(q07, "max_drawdown"), clue)
+        close(s"$clue ulcer", opt(dd(a), "ulcer_index"), opt(q07, "ulcer_index"))
+        close(s"$clue recovery", opt(dd(a), "recovery_factor"), opt(q07, "recovery_factor"))
+        close(s"$clue var", opt(vc(a), "value_at_risk"), opt(q04, "value_at_risk"))
+        close(s"$clue cvar", opt(vc(a), "cvar"), opt(q04, "cvar"))
+        assert(streaks(a).getAs[Long]("consecutive_wins") == q09.getAs[Long]("consecutive_wins"), clue)
+        assert(streaks(a).getAs[Long]("consecutive_losses") == q09.getAs[Long]("consecutive_losses"), clue)
+        close(s"$clue penalty", opt(smart(a), "autocorr_penalty"), opt(pen(a), "p"))
+        eps.get(a).foreach { e =>
+          val q08 = sql("q08")(a)
+          assert(e.getAs[Long]("longest_dd_days") == q08.getAs[Long]("longest_dd_days"), clue)
+          assert(e.getAs[Double]("avg_dd_days") == q08.getAs[Double]("avg_dd_days"), clue)
+          close(s"$clue avgDepth", opt(e, "avg_drawdown"), opt(q08, "avg_drawdown"))
+        }
       }
     }
+  }
+
+  test("GroupedStats' ordered metrics fail at call time on an unsupported ts type") {
+    val df = spark.createDataFrame(java.util.Arrays.asList(Row("a", "x", 1.5, 0.01)),
+      StructType(Seq(StructField("asset", StringType), StructField("label", StringType),
+        StructField("stamp", DoubleType), StructField("r", DoubleType))))
+    val ops: Seq[(String, SeriesFrame => DataFrame)] = Seq(
+      "drawdownStats" -> (GroupedStats.drawdownStats(_)),
+      "varCvar" -> (GroupedStats.varCvar(_)),
+      "streaks" -> GroupedStats.streaks,
+      "drawdownEpisodes" -> GroupedStats.drawdownEpisodes,
+      "smartSharpe" -> (GroupedStats.smartSharpe(_)))
+    for ((name, op) <- ops; ts <- Seq("label", "stamp")) {
+      val e = intercept[IllegalArgumentException](op(SeriesFrame(df, Seq("asset"), ts, "r")))
+      assert(e.getMessage.contains(ts), s"$name on $ts: ${e.getMessage}")
+    }
+  }
+
+  test("drawdownEpisodes keeps a key whose only episode has null dates") {
+    val rows = Seq(
+      // three null dates sort first; equal returns, so their order is immaterial
+      ("a", null, -0.1), ("a", null, -0.1), ("a", null, -0.1),
+      ("a", Date.valueOf("2024-01-02"), 0.5), ("a", Date.valueOf("2024-01-03"), 0.1),
+      ("b", Date.valueOf("2024-01-02"), 0.1), ("b", Date.valueOf("2024-01-03"), 0.2))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+        rows.map { case (a, d, r) => Row(a, d, r) }, 3),
+      StructType(Seq(StructField("asset", StringType), StructField("d", DateType),
+        StructField("r", DoubleType))))
+    val got = GroupedStats.drawdownEpisodes(SeriesFrame(df, Seq("asset"), "d", "r")).collect()
+    assert(got.map(_.getString(0)).toSeq == Seq("a"), got.toSeq)
+    val e = got.head
+    assert(e.getAs[Long]("longest_dd_days") == 0L && e.getAs[Double]("avg_dd_days") == 0.0, e)
+    // wealth 0.9 (the peak), 0.81, 0.729
+    assertApprox(e.getAs[Double]("avg_drawdown"), 0.729 / 0.9 - 1, 1e-12)
+  }
+
+  test("drawdownEpisodes counts datediff days on a timestamp ts: 2 hours across midnight is 2 days") {
+    def ts(s: String) = Timestamp.from(java.time.Instant.parse(s))
+    val rows = Seq(("2024-01-01T22:00:00Z", 0.1), ("2024-01-01T23:00:00Z", -0.1),
+      ("2024-01-02T01:00:00Z", -0.05), ("2024-01-02T03:00:00Z", 0.5))
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows.map { case (t, r) => Row("a", ts(t), r) }: _*),
+      StructType(Seq(StructField("asset", StringType), StructField("t", TimestampType),
+        StructField("r", DoubleType))))
+    // the session time zone is UTC: the episode runs 2024-01-01 23:00 → 2024-01-02 01:00
+    val e = GroupedStats.drawdownEpisodes(SeriesFrame(df, Seq("asset"), "t", "r")).collect().toSeq
+    assert(e.map(r => (r.getAs[Long]("longest_dd_days"), r.getAs[Double]("avg_dd_days"))) == Seq((2L, 2.0)), e)
   }
 
   test("an empty series gives nulls and zeros; an empty wide frame one row of them") {
     val agg = new SeriesAgg.Agg(SeriesAgg.Rows, rz)
     assert(agg.finish(agg.zero) == SeriesAgg.Result(0L, None, None, None, None, None, None, None,
-      0L, 0.0, 0.0, 0L, 0L, None))
+      0L, 0L, 0.0, 0.0, 0L, 0L, None))
     import graft.stats.Stats
     val empty = spark.createDataFrame(java.util.Collections.emptyList[Row],
       StructType(Seq(StructField("date", DateType), StructField("a", DoubleType))))
@@ -274,6 +400,6 @@ object SeriesAggSpec {
   /** The serial reference's figures for one series. */
   final case class Ref(maxDd: Option[Double], ulcer: Option[Double],
       ddCvar: Option[Double], cvar: Option[Double], serenity: Option[Double],
-      longest: Long, avgLen: Double, avgDepth: Double, wins: Long, losses: Long,
+      episodes: Long, longest: Long, avgLen: Double, avgDepth: Double, wins: Long, losses: Long,
       rho: Option[Double])
 }

@@ -30,6 +30,16 @@ class SingleSiteSpec extends AnyFunSuite {
     } yield s"$file:${i + 1}"
   }
 
+  /** The member of a file's top-level definitions that a site is in: the
+    * nearest `def` or `object` above it at two-space indent.
+    */
+  private def memberOf(site: String): String = {
+    val Array(file, line) = site.split(":")
+    val Member = """  (?:private(?:\[\w+\])?\s+)?(?:def|object)\s+(\w+).*""".r
+    sources.toMap.apply(file).take(line.toInt).reverseIterator
+      .collectFirst { case Member(name) => name }.getOrElse("")
+  }
+
   private def assertOnlyIn(sites: Seq[String], files: String*): Unit = {
     val stray = sites.filterNot(s => files.exists(f => s.startsWith(s"src/main/scala/graft/$f:")))
     assert(stray.isEmpty, stray.mkString("\n"))
@@ -44,14 +54,20 @@ class SingleSiteSpec extends AnyFunSuite {
   }
 
   test("ordered per-asset metrics run windows only in GroupedStats, toDrawdowns and Smart") {
-    // two implementations of the ordered metrics: SeriesAgg for the wide
-    // API and Reports, the GroupedStats windows for the long-format API
-    // (toDrawdowns, whose output is row-level, reuses them)
+    // one implementation of the ordered per-key aggregates, SeriesAgg, for
+    // the wide API, Reports and GroupedStats alike; windows are left only
+    // where the output is row-level: GroupedStats.withDrawdown (which
+    // toDrawdowns reuses), drawdownDetails and rolling
     def wideApi(site: String): Boolean =
       site.startsWith("src/main/scala/graft/reports/") || site.startsWith("src/main/scala/graft/stats/")
     assertOnlyIn(sitesOf("""\.over\(""").filter(wideApi), "stats/Smart.scala")
     assertOnlyIn(sitesOf("""GroupedStats\.withDrawdown|row_number\(""").filter(wideApi),
       "stats/Stats.scala")
+    val api = sitesOf("""\.over\(|row_number\(""").filter(_.startsWith("src/main/scala/graft/api/"))
+    assert(api.nonEmpty)
+    val rowLevel = Set("withDrawdown", "drawdownDetails", "rolling", "Rolling")
+    val stray = api.filterNot(site => rowLevel(memberOf(site)))
+    assert(stray.isEmpty, stray.map(site => s"$site in ${memberOf(site)}").mkString("\n"))
   }
 
   test("driver threads are started only by graft.core.Eager") {

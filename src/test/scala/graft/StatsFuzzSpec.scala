@@ -387,4 +387,29 @@ class StatsFuzzSpec extends SparkSpec {
       eqCell("smart_sharpe", a, cell(row, 3), smart)
     }
   }
+
+  test("a constant series on 3 partitions has σ exactly 0: Sharpe is ±Inf or NaN, not finite") {
+    // merged per-partition moments leave a rounding residue in σ of a
+    // constant series unless Exprs.sampleStd pins it; rf ≠ 0 makes a flat
+    // zero column's excess return non-zero
+    val rf = 0.0002
+    val wide = spark.range(0, 300, 1, 3).select(lit(0.0).as("zero"), lit(0.003).as("up"))
+    assert(wide.rdd.getNumPartitions == 3)
+    val stats = graft.stats.Stats.sharpe(wide, rf = rf).head()
+    assert(stats.getDouble(0) == Double.NegativeInfinity, stats)
+    assert(stats.getDouble(1) == Double.PositiveInfinity, stats)
+    assert(graft.stats.Stats.volatility(wide).head().toSeq == Seq(0.0, 0.0))
+
+    val long = wide.select(explode(map(lit("zero"), col("zero"), lit("up"), col("up"),
+        lit("nan"), lit(Double.NaN))).as(Seq("asset", "r")), lit(1L).as("t"))
+      .union(Seq(("one", 0.01, 1L)).toDF("asset", "r", "t"))
+    val got = GroupedStats.aggregate(SeriesFrame(long, Seq("asset"), "t", "r"), Seq(
+      "sharpe" -> ((r: org.apache.spark.sql.Column) => Exprs.sharpe(r, rf, 252, annualize = true)),
+      "vol" -> ((r: org.apache.spark.sql.Column) => Exprs.volatility(r, 252, annualize = true))))
+      .collect().map(r => r.getString(0) -> (cell(r, 1), cell(r, 2))).toMap
+    assert(got("zero") == ((Some(Double.NegativeInfinity), Some(0.0))), got)
+    assert(got("up") == ((Some(Double.PositiveInfinity), Some(0.0))), got)
+    assert(got("nan")._1.exists(_.isNaN) && got("nan")._2.exists(_.isNaN), got)
+    assert(got("one") == ((None, None)), got)
+  }
 }
