@@ -87,7 +87,7 @@ object GroupedStats {
     * differences in days; only [[drawdownEpisodes]] reads them, and it
     * passes a day key.
     */
-  private def walk(sf: SeriesFrame, plain: Seq[Column] = Nil, rz: Double = SeriesAgg.Z05,
+  private[graft] def walk(sf: SeriesFrame, plain: Seq[Column] = Nil, rz: Double = SeriesAgg.Z05,
       key: Option[Column] = None): DataFrame = {
     val ts = SeriesAgg.orderKey(col(sf.ts), sf.df.schema(sf.ts).dataType)
     val s = SeriesAgg(SeriesAgg.Days, rz)(key.getOrElse(ts), coalesce(ts, lit(0L)), sf.r)
@@ -95,7 +95,7 @@ object GroupedStats {
   }
 
   /** A field of [[walk]]'s struct. */
-  private def walked(field: String): Column = col("__s").getField(field)
+  private[graft] def walked(field: String): Column = col("__s").getField(field)
 
   /** max_drawdown / ulcer_index / recovery_factor (+ any extra metric
     * expressions over the raw returns) in ONE aggregation.
@@ -120,21 +120,18 @@ object GroupedStats {
   }
 
   /** Per-key smart Sharpe: sharpe ÷ autocorrelation penalty, fully
-    * distributed (reference: alphastats/stats.py:1334-1346). The lag-1
-    * correlation pairs each return with the previous NON-NULL one (the wide
-    * API's null-filtered lag), the base sharpe is a plain aggregate of the
-    * same `groupBy`, and the geometric-decay sum evaluates in closed form as
-    * a column expression — no driver loop, scales to any number of keys.
+    * distributed (reference: alphastats/stats.py:1334-1346). The walk pairs
+    * each return with the previous NON-NULL one (the wide API's
+    * null-filtered lag) and gives the penalty of that lag-1 correlation as a
+    * struct field; the base sharpe is a plain aggregate of the same
+    * `groupBy` — nothing is collected, so it scales to any number of keys.
     */
   def smartSharpe(sf: SeriesFrame, rf: Double = 0.0, periods: Int = 252,
-      annualize: Boolean = true): DataFrame = {
-    val agg = walk(sf, Seq(Exprs.sharpe(sf.r, rf, periods, annualize).as("sharpe")))
-    val pen = Exprs.autocorrPenalty(walked("rho"), walked("n"))
-    agg.select(sf.keyCols ++ Seq(
+      annualize: Boolean = true): DataFrame =
+    walk(sf, Seq(Exprs.sharpe(sf.r, rf, periods, annualize).as("sharpe"))).select(sf.keyCols ++ Seq(
       col("sharpe"),
-      pen.as("autocorr_penalty"),
-      (col("sharpe") / pen).as("smart_sharpe")): _*)
-  }
+      walked("penalty").as("autocorr_penalty"),
+      (col("sharpe") / walked("penalty")).as("smart_sharpe")): _*)
 
   /** Longest win and loss streaks per key, 0 without any (a null return is
     * its own run) — the reference's driver loop

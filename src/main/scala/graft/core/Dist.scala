@@ -17,6 +17,19 @@ object Dist {
   /** Φ(x): standard normal CDF via erf. */
   def cdf(x: Double): Double = 0.5 * (1.0 + erf(x / math.sqrt(2.0)))
 
+  /** Probabilistic Sharpe ratio of a Sharpe `b` over `n` returns with skew
+    * `sk` and kurtosis `ku`: Φ((b − rf) ÷ σ),
+    * σ = √((1 + ½b² − sk·b + ((ku − 3)/4)·b²) ÷ (n − 1)) (reference:
+    * alphastats/stats.py:255-336). Both QuantStats quirks are kept: `ku` is
+    * ALREADY excess yet has 3 subtracted again, and `annualize` multiplies
+    * the probability by √252.
+    */
+  def psr(b: Double, sk: Double, ku: Double, n: Double, rf: Double, annualize: Boolean): Double = {
+    val sigma = math.sqrt((1 + 0.5 * b * b - sk * b + ((ku - 3) / 4) * b * b) / (n - 1))
+    val p = cdf((b - rf) / sigma)
+    if (annualize) p * math.sqrt(252.0) else p
+  }
+
   /** Φ⁻¹(p): Wichura (1988) algorithm AS241, |ε| < 1e-15. */
   def invCdf(p: Double): Double = {
     require(p > 0.0 && p < 1.0, s"invCdf requires 0 < p < 1, got $p")

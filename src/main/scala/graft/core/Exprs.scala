@@ -125,28 +125,6 @@ object Exprs {
     if (annualize) s * lit(math.sqrt(periods.toDouble)) else s
   }
 
-  /** Autocorrelation penalty √(1 + 2·Σ_{x=1}^{n-1} ((n−x)/n)·c^x) with the
-    * geometric-decay sum in CLOSED FORM as a column expression, c = |rho|
-    * (reference semantics: alphastats/stats.py:1292-1315). Evaluating the
-    * closed form per key makes smart ratios fully distributed — no driver
-    * loop, no per-column job (contrast stats/Smart.scala, the wide edge).
-    * NaN when n < 2 or rho is null/NaN, matching the wide API.
-    */
-  def autocorrPenalty(rho: Column, n: Column): Column = {
-    val c = abs(rho)
-    val nd = n.cast("double")
-    val m = nd - lit(1.0)
-    val cm = pow(c, m)
-    val s1 = c * (lit(1.0) - cm) / (lit(1.0) - c)
-    val s2 = c * (lit(1.0) - (m + lit(1.0)) * cm + m * cm * c) /
-      ((lit(1.0) - c) * (lit(1.0) - c))
-    val ds = when(c === 0.0, lit(0.0))
-      .when(abs(lit(1.0) - c) < 1e-12, m - m * (m + lit(1.0)) / (lit(2.0) * nd))
-      .otherwise(s1 - s2 / nd)
-    when(n < 2 || rho.isNull || isnan(rho), lit(Double.NaN))
-      .otherwise(sqrt(lit(1.0) + lit(2.0) * ds))
-  }
-
   /** Parametric (variance-covariance) VaR (reference: alphastats/stats.py:1194-1208). */
   def valueAtRisk(r: Column, sigma: Double, confidence: Double): Column = {
     val conf = if (confidence > 1) confidence / 100 else confidence

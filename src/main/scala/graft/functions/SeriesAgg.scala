@@ -18,7 +18,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, Lo
   * a null), then max drawdown, Σdd², the dd-VaR → dd-CVaR pair of the
   * serenity index, the r-VaR → CVaR pair, drawdown episodes (maximal runs of
   * dd < 0; a null breaks a run), sign-run streaks (a null is its own sign
-  * class) and the lag-1 correlation of consecutive non-null returns.
+  * class) and the lag-1 correlation of consecutive non-null returns with
+  * the smart ratios' autocorrelation penalty of it ([[penalty]]).
   *
   * Semantics are those of the window formulation it replaces: Spark's double
   * ordering (NaN largest, −0 = 0), its update formulas for `avg`,
@@ -147,7 +148,8 @@ object SeriesAgg {
       avgDepth: Double,
       wins: Long,
       losses: Long,
-      rho: Option[Double]) {      // lag-1 corr of consecutive non-null r
+      rho: Option[Double],        // lag-1 corr of consecutive non-null r
+      penalty: Double) {          // autocorrelation penalty of (n, rho)
 
     /** √(Σdd² ÷ (n − 1)) (reference: alphastats/stats.py:1524-1546). */
     def ulcer: Option[Double] = ddSquares.map(s => math.sqrt(fdiv(s, (n - 1).toDouble)))
@@ -169,7 +171,8 @@ object SeriesAgg {
 
   object Result {
     /** The result of a series without rows. */
-    val empty: Result = Result(0L, None, None, None, None, None, None, None, 0L, 0L, 0.0, 0.0, 0L, 0L, None)
+    val empty: Result =
+      Result(0L, None, None, None, None, None, None, None, 0L, 0L, 0.0, 0.0, 0L, 0L, None, Double.NaN)
 
     /** A collected `SeriesAgg` struct. */
     def apply(row: Row): Result = {
@@ -178,8 +181,30 @@ object SeriesAgg {
         opt("ddSquares"), opt("ddCvar"), opt("cvar"), row.getAs[Long]("episodes"),
         row.getAs[Long]("longestEpisode"),
         row.getAs[Double]("avgEpisode"), row.getAs[Double]("avgDepth"),
-        row.getAs[Long]("wins"), row.getAs[Long]("losses"), opt("rho"))
+        row.getAs[Long]("wins"), row.getAs[Long]("losses"), opt("rho"), row.getAs[Double]("penalty"))
     }
+  }
+
+  /** The smart ratios' autocorrelation penalty √(1 + 2·Σ_{x=1}^{n−1} ((n−x)/n)·cˣ),
+    * c = |ρ|, with the decay sum in closed form, Σcˣ − (1/n)·Σx·cˣ over
+    * x ∈ [1, n − 1]; NaN when n < 2 or ρ is null or NaN
+    * (reference: alphastats/stats.py:1292-1315).
+    */
+  private[graft] def penalty(n: Long, rho: Option[Double]): Double = rho match {
+    case Some(r) if n >= 2 && !r.isNaN =>
+      val c = math.abs(r)
+      val m = n - 1
+      val decay =
+        if (c == 0.0) 0.0
+        else if (math.abs(1.0 - c) < 1e-12) m.toDouble - m.toDouble * (m + 1) / (2.0 * n)
+        else {
+          val cm = StrictMath.pow(c, m.toDouble)
+          val s1 = c * (1 - cm) / (1 - c)
+          val s2 = c * (1 - (m + 1) * cm + m * cm * c) / ((1 - c) * (1 - c))
+          s1 - s2 / n
+        }
+      math.sqrt(1 + 2 * decay)
+    case _ => Double.NaN
   }
 
   /** Spark's double order: NaN largest, −0 equal to 0. */
@@ -330,6 +355,7 @@ object SeriesAgg {
       closeEpisode()
 
       val any = m > 0
+      val rho = { val d = math.sqrt(xMk * yMk); if (cn <= 1.0 || d == 0.0) None else Some(ck / d) }
       Result(
         n = m,
         sum = if (any) Some(rm.sum) else None,
@@ -345,7 +371,8 @@ object SeriesAgg {
         avgDepth = if (eps == 0) 0.0 else epDepthSum / eps,
         wins = wins,
         losses = losses,
-        rho = { val d = math.sqrt(xMk * yMk); if (cn <= 1.0 || d == 0.0) None else Some(ck / d) })
+        rho = rho,
+        penalty = penalty(m, rho))
     }
 
     def bufferEncoder: Encoder[Buf] = ExpressionEncoder[Buf]()

@@ -578,8 +578,9 @@ object Queries {
 
   /** Smart family through the driver gate: per-asset autocorr penalty +
     * smart sharpe, fully distributed via `GroupedStats.smartSharpe` (the
-    * closed-form decay sum as a column expression — no driver loop). The
-    * oracle evaluates the identical closed form in DuckDB.
+    * penalty is a field of the per-key `SeriesAgg` walk, its closed-form
+    * decay sum `SeriesAgg.penalty`). The oracle evaluates the identical
+    * closed form in DuckDB.
     */
   def q30SmartSharpe(spark: SparkSession, sfDir: String): DataFrame =
     finish(GroupedStats.smartSharpe(assetReturns(spark, sfDir)),
@@ -1072,45 +1073,30 @@ object Queries {
     * adjusted/smart sortino wrappers (stats.py:1364-1395: ÷√2 and
     * ÷autocorr-penalty of q02's gated sortino).
     *
-    * One pipeline, all key-partitioned: the drawdown curve and the
-    * previous-non-null lag come from asset-partitioned windows, the dd-VaR
-    * threshold broadcasts via a whole-asset window (same shuffle key), and
-    * everything else is a single per-asset aggregation. PSR's Φ evaluates
-    * through [[graft.core.Dist.erfCol]] — builtin arithmetic inside
-    * whole-stage codegen — and the oracle replays the identical Cody
+    * One `groupBy(asset)`: the [[graft.functions.SeriesAgg]] walk of
+    * [[GroupedStats.walk]] gives Σr, σ, n, Σdd², the dd-CVaR below the
+    * dd-VaR and the autocorrelation penalty, and PSR's Sharpe and moments
+    * and the sortino are plain aggregates beside it — no window. PSR's Φ
+    * evaluates through [[graft.core.Dist.erfCol]] — builtin arithmetic
+    * inside whole-stage codegen — and the oracle replays the identical Cody
     * rational approximation via [[graft.core.Dist.normCdfSql]].
     */
   def q207TailMetrics(spark: SparkSession, sfDir: String): DataFrame = {
     val sf = assetReturns(spark, sfDir)
-    val dd = GroupedStats.withDrawdown(sf).df
-    val prevW = Window.partitionBy(col("asset")).orderBy(col("d"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wholeA = Window.partitionBy(col("asset"))
-    val z05 = Dist.invCdf(0.05)
-    val enriched = dd
-      .withColumn("__prev", last(col("r"), ignoreNulls = true).over(prevW))
-      .withColumn("__ddvar",
-        avg(col("__dd")).over(wholeA) + lit(z05) * stddev_samp(col("__dd")).over(wholeA))
-    val agg = enriched.groupBy(col("asset")).agg(
-      count(col("r")).as("n"),
-      corr(col("__prev"), col("r")).as("rho"),
-      Exprs.sharpe(col("r"), 0.0, 252, annualize = false).as("b"),
-      Exprs.sortino(col("r"), 0.0, 252, annualize = true).as("sortino"),
-      Exprs.skew(col("r")).as("sk"),
-      Exprs.kurtosis(col("r")).as("ku"),
-      sum(col("r")).as("sumr"),
-      stddev_samp(col("r")).as("sd"),
-      sum(col("__dd") * col("__dd")).as("dd2"),
-      coalesce(avg(when(col("__dd") < col("__ddvar"), col("__dd"))),
-        first(col("__ddvar"))).as("ddcvar"))
-    val pen = Exprs.autocorrPenalty(col("rho"), col("n"))
-    val nd = col("n").cast("double")
+    val agg = GroupedStats.walk(sf, Seq(
+      Exprs.sharpe(sf.r, 0.0, 252, annualize = false).as("b"),
+      Exprs.sortino(sf.r, 0.0, 252, annualize = true).as("sortino"),
+      Exprs.skew(sf.r).as("sk"),
+      Exprs.kurtosis(sf.r).as("ku")))
+    import GroupedStats.walked
+    val pen = walked("penalty")
+    val nd = walked("n").cast("double")
     val b = col("b")
     val sigma = sqrt((lit(1.0) + lit(0.5) * b * b - col("sk") * b +
       (col("ku") - lit(3.0)) / lit(4.0) * b * b) / (nd - lit(1.0)))
     val psr = Dist.normCdfCol(b / sigma)
-    val ulcer = sqrt(col("dd2") / (nd - lit(1.0)))
-    val serenity = col("sumr") / (ulcer * (-col("ddcvar") / col("sd")))
+    val ulcer = sqrt(walked("ddSquares") / (nd - lit(1.0)))
+    val serenity = walked("sum") / (ulcer * (-walked("ddCvar") / walked("std")))
     agg.select(col("asset"),
         r6(psr).as("psr"),
         // the reference's annualize=True quirk multiplies the PROBABILITY

@@ -204,8 +204,8 @@ object Round15Queries {
     "Correlation" -> benchRel("corb * 100.0"),
     "Treynor Ratio" -> benchRel("treynorb * 100.0"))
 
-  /** Smart-ratio decay-sum penalty (Smart.penaltyOf closed form, same as the
-    * q30 oracle). */
+  /** Smart-ratio decay-sum penalty (the closed form of `SeriesAgg.penalty`,
+    * same as the q30 oracle). */
   private def penaltySql(rho: String, n: String): String =
     s"""SQRT(1.0 + 2.0 * (CASE
        |  WHEN ABS($rho) = 0 THEN 0.0

@@ -12,7 +12,6 @@ import graft.core.{Dist, Eager, EmptyReturnsError, Exprs, ReturnsFrame}
 import graft.core.Exprs.fdiv
 import graft.functions.GraftProduct.product
 import graft.functions.SeriesAgg
-import graft.stats.Smart
 
 /** QuantStats-style metrics table (reference: alphastats/reports.py:22-290).
   *
@@ -166,17 +165,14 @@ object Reports {
       case d: Double => d
       case l: Long => l.toDouble
     }
-    // the ordered metrics of each asset (drawdowns, episodes, streaks, rho)
+    // the ordered metrics of each asset (drawdowns, episodes, streaks, the
+    // smart ratios' autocorrelation penalty)
     val series: Map[String, SeriesAgg.Result] =
       main.map { case (n, row) => n -> SeriesAgg.Result(row.getStruct(row.fieldIndex("series"))) }
     def sv(v: Option[Double]): Double = v.getOrElse(Double.NaN)
     def gb(k: String, n: String): Any = calendar.fold[Any]("-")(rows => field(rows(n), k))
     def gbm(k: String, n: String): Any = if (benchName.contains(n)) "-" else field(main(n), k)
     def date(k: String, n: String): Any = if (temporal.isEmpty) null else p0(n).getAs[Any](k)
-
-    // ---- autocorr penalties (full mode): the lag-1 corr was collected in
-    // the per-asset pass; only the closed-form decay sum runs driver-side ----
-    def penalty(n: String): Double = Smart.penaltyOf(series(n).n, series(n).rho)
 
     // ---- assemble rows ----
     val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Map[String, Any])]
@@ -191,15 +187,6 @@ object Reports {
       case other => other.toString
     }
 
-    def psrOf(n: String): Double = {
-      val b = g("sharpe_na", n)
-      val sk = g("skew", n)
-      val ku = g("kurt", n)
-      val cnt = g("count", n)
-      val sigma = math.sqrt((1 + 0.5 * b * b - sk * b + ((ku - 3) / 4) * b * b) / (cnt - 1))
-      Dist.cdf((b - rf) / sigma)
-    }
-
     add("Start Period", n => fmtDate(date("start", n)))
     add("End Period", n => fmtDate(date("end", n)))
     add("Risk-Free Rate", _ => rf * pct)
@@ -210,12 +197,13 @@ object Reports {
     add("CAGR﹪", n => g("cagr", n) * pct)
     addSep()
     add("Sharpe", n => g("sharpe", n))
-    add("Prob. Sharpe Ratio", n => psrOf(n) * pct)
-    if (full) add("Smart Sharpe", n => g("sharpe", n) / penalty(n))
+    add("Prob. Sharpe Ratio", n =>
+      Dist.psr(g("sharpe_na", n), g("skew", n), g("kurt", n), g("count", n), rf, annualize = false) * pct)
+    if (full) add("Smart Sharpe", n => g("sharpe", n) / series(n).penalty)
     add("Sortino", n => g("sortino", n))
-    if (full) add("Smart Sortino", n => g("sortino", n) / penalty(n))
+    if (full) add("Smart Sortino", n => g("sortino", n) / series(n).penalty)
     add("Sortino/√2", n => g("sortino", n) / math.sqrt(2.0))
-    if (full) add("Smart Sortino/√2", n => g("sortino", n) / penalty(n) / math.sqrt(2.0))
+    if (full) add("Smart Sortino/√2", n => g("sortino", n) / series(n).penalty / math.sqrt(2.0))
     add("Omega", n => g("omega", n))
     addSep()
     add("Max Drawdown", n => sv(series(n).maxDrawdown) * pct)

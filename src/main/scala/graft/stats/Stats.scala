@@ -1,6 +1,6 @@
 package graft.stats
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 
@@ -20,10 +20,11 @@ import graft.functions.SeriesAgg
   * CVaR, streaks ([[Streaks]]) and drawdown episodes ([[DrawdownEpisodes]])
   * — are one per-asset [[graft.functions.SeriesAgg]] over the melted frame,
   * run eagerly: the N per-asset results are collected and returned as a
-  * 1-row local frame. Only [[toDrawdowns]] (row-level output) and the smart
-  * ratios ([[Smart]]) still run ordered windows. This wide API mirrors the
-  * reference's one-column-per-asset model; the scale path for many assets is
-  * [[graft.api.GroupedStats]] (long format, partitioned by asset key).
+  * 1-row local frame; the smart ratios ([[Smart]]) read the same walk's
+  * penalty. Only [[toDrawdowns]] (row-level output) still runs ordered
+  * windows. This wide API mirrors the reference's one-column-per-asset
+  * model; the scale path for many assets is [[graft.api.GroupedStats]] (long
+  * format, partitioned by asset key).
   */
 object Stats {
 
@@ -230,20 +231,25 @@ object Stats {
   }
 
   /** Every ordered per-asset metric of every numeric column, collected as
-    * column → result (`Result.empty` for a column without rows, i.e. of an
-    * empty frame): melt → `groupBy(asset).agg(SeriesAgg)`. Each caller
-    * on a frame runs this same plan — `rz` lives in the aggregate instance
-    * and every other parameter in the caller's driver arithmetic, not in a
-    * SQL literal — so the calls share their generated classes.
+    * column → (result, `plain` aggregates of its returns, NaN where null):
+    * melt → `groupBy(asset).agg(SeriesAgg, plain)`. A column without rows,
+    * i.e. of an empty frame, gets `Result.empty` and NaN aggregates. Every
+    * caller without `plain` runs this same plan on a frame — `rz` lives in
+    * the aggregate instance and every other parameter in the caller's
+    * arithmetic on the collected results, not in a SQL literal — so the
+    * calls share their generated classes.
     */
-  private def series(rfm: ReturnsFrame, rz: Double): Map[String, SeriesAgg.Result] = {
+  private[stats] def series(rfm: ReturnsFrame, rz: Double = SeriesAgg.Z05,
+      plain: Seq[Column => Column] = Nil): Map[String, (SeriesAgg.Result, Seq[Double])] = {
     val ordType = rfm.temporalCol.map(t => rfm.df.schema(t).dataType)
     val o = col("__ord")
+    val r = col("__r")
     val agg = SeriesAgg(SeriesAgg.span(ordType), rz)(
-      SeriesAgg.orderKey(o.getField("o"), ordType.getOrElse(LongType)), o.getField("u"), col("__r"))
-    melted(rfm).df.groupBy(col("__asset")).agg(agg).collect()
-      .map(row => row.getString(0) -> SeriesAgg.Result(row.getStruct(1))).toMap
-      .withDefaultValue(SeriesAgg.Result.empty)
+      SeriesAgg.orderKey(o.getField("o"), ordType.getOrElse(LongType)), o.getField("u"), r)
+    melted(rfm).df.groupBy(col("__asset")).agg(agg, plain.map(_(r).cast("double")): _*).collect()
+      .map(row => row.getString(0) -> ((SeriesAgg.Result(row.getStruct(1)),
+        plain.indices.map(i => if (row.isNullAt(i + 2)) Double.NaN else row.getDouble(i + 2)))))
+      .toMap.withDefaultValue((SeriesAgg.Result.empty, plain.map(_ => Double.NaN)))
   }
 
   /** The reference's 1-row wide shape of a per-column `cell` of [[series]],
@@ -254,7 +260,7 @@ object Stats {
       rz: Double = SeriesAgg.Z05)(cell: SeriesAgg.Result => Any): DataFrame = {
     val results = series(rfm, rz)
     rfm.df.sparkSession.createDataFrame(
-      java.util.Collections.singletonList(Row.fromSeq(rfm.numericCols.map(c => cell(results(c))))),
+      java.util.Collections.singletonList(Row.fromSeq(rfm.numericCols.map(c => cell(results(c)._1)))),
       StructType(rfm.numericCols.map(c => StructField(c, dt, nullable))))
   }
 

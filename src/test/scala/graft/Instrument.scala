@@ -38,14 +38,16 @@ object Instrument {
     executions(spark)(body).map(_.optimizedPlan)
 
   /** Every physical operator that ran while `body` ran: the executed plans,
-    * through adaptive query stages, subqueries and the plans that built the
-    * cached relations they scan.
+    * through adaptive query stages, subqueries and, with `throughCache`, the
+    * plans that built the cached relations they scan.
     */
-  def executedOperators(spark: SparkSession)(body: => Unit): Seq[SparkPlan] = {
+  def executedOperators(spark: SparkSession, throughCache: Boolean = true)(
+      body: => Unit): Seq[SparkPlan] = {
     def operators(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => operators(a.executedPlan)
       case q: QueryStageExec => operators(q.plan)
-      case m: InMemoryTableScanExec => m +: operators(m.relation.cachedPlan)
+      case m: InMemoryTableScanExec =>
+        m +: (if (throughCache) operators(m.relation.cachedPlan) else Nil)
       case other => other +: (other.children ++ other.subqueries).flatMap(operators)
     }
     executions(spark)(body).flatMap(qe => operators(qe.executedPlan))

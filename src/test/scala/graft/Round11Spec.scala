@@ -7,9 +7,10 @@ import graft.queries.Queries
 import graft.stats.Stats
 
 /** Round-11 guards: the q207 tail-metrics panel must agree with the wide
-  * reference-parity API (same math, two independent code paths), and the
-  * distributed Column erf must track the scalar Cody erf to float
-  * resolution across every branch of the approximation.
+  * reference-parity API (same math, two independent code paths) and run as
+  * one aggregation without a window, and the distributed Column erf must
+  * track the scalar Cody erf to float resolution across every branch of the
+  * approximation.
   */
 class Round11Spec extends SparkSpec {
 
@@ -29,6 +30,20 @@ class Round11Spec extends SparkSpec {
     // Φ sanity at the 5% z-score the engine uses everywhere
     val phi = df.select(Dist.normCdfCol(lit(Dist.invCdf(0.05))).as("p")).head().getDouble(0)
     assert(math.abs(phi - 0.05) < 1e-12)
+  }
+
+  test("q207 executes no Window, and its only Sort is the final orderBy") {
+    // q207 reads the cached asset returns, whose own lag window is not q207's
+    Queries.assetReturns(spark, sf).df.count()
+    val ops = Instrument.executedOperators(spark, throughCache = false)(
+      Queries.q207TailMetrics(spark, sf).collect())
+    val names = ops.map(_.nodeName)
+    assert(names.contains("ObjectHashAggregate"), names.distinct)
+    assert(!names.exists(_.contains("Window")), names)
+    val sorts = ops.collect { case s: org.apache.spark.sql.execution.SortExec => s }
+    assert(sorts.size == 1, names)
+    assert(sorts.head.global && sorts.head.sortOrder.map(_.child.references.map(_.name).toSeq) ==
+      Seq(Seq("asset")), sorts.head)
   }
 
   test("q207 panel agrees with the wide Stats API on the same data") {

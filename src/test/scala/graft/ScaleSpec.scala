@@ -79,29 +79,45 @@ class ScaleSpec extends SparkSpec {
     }
     val bad = plans.flatMap(_.collect { case w: LWindow if w.partitionSpec.isEmpty => w })
     assert(bad.isEmpty, s"wide API still plans ${bad.size} single-partition window(s)")
+    // the smart calls read the walk's penalty: no window at all
+    val smartPlans = Instrument.optimizedPlans(spark) {
+      Stats.autocorrPenalty(simpleDf).collect()
+      Stats.smartSharpe(simpleDf).collect()
+      Stats.smartSortino(simpleDf).collect()
+      Stats.probabilisticSharpeRatio(simpleDf).collect()
+      Stats.probabilisticSharpeRatio(simpleDf, smart = true).collect()
+    }
+    assert(smartPlans.nonEmpty)
+    val windows = smartPlans.flatMap(_.collect { case w: LWindow => w })
+    assert(windows.isEmpty, s"smart calls plan ${windows.size} window(s)")
   }
 
   test("smart-ratio family stays a fixed handful of jobs regardless of column count") {
     import graft.stats.Stats
-    def wide(n: Int) = {
+    def wide(n: Int, rows: Int) = {
       val cols = (1 to n).map(i => s"a$i")
       val rnd = new scala.util.Random(3)
-      val rows = (0 until 30).map { _ =>
+      val data = (0 until rows).map { _ =>
         org.apache.spark.sql.Row.fromSeq(Seq.fill(n)(rnd.nextGaussian() / 100))
       }
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      spark.createDataFrame(spark.sparkContext.parallelize(data, 2),
         org.apache.spark.sql.types.StructType(cols.map(c =>
           org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.DoubleType))))
     }
-    def jobs(n: Int): Long = Instrument.jobCount(spark) {
-      Stats.smartSharpe(wide(n)).collect()
-      Stats.probabilisticSharpeRatio(wide(n), smart = true).collect()
+    val calls: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "smartSharpe" -> (Stats.smartSharpe(_)),
+      "smartSortino" -> (Stats.smartSortino(_)),
+      "autocorrPenalty" -> Stats.autocorrPenalty,
+      "psr" -> (Stats.psr(_)),
+      "psr(smart)" -> (Stats.psr(_, smart = true)))
+    // the shuffle-map job and the result job of the one per-asset aggregation
+    for (n <- Seq(2, 5); (name, f) <- calls) {
+      val df = wide(n, 2520)
+      f(df).collect() // warm-up
+      val jobs = Instrument.jobCount(spark)(f(df).collect())
+      info(s"$name on 2520 x $n: $jobs jobs")
+      assert(jobs <= 2, s"$name on 2520 x $n columns ran $jobs jobs")
     }
-    jobs(1) // warm-up
-    val j1 = jobs(1)
-    val j5 = jobs(5)
-    info(s"smart family jobs: 1 col -> $j1, 5 cols -> $j5")
-    assert(j5 <= j1, s"smart family job count grew with column count: $j1 -> $j5")
   }
 
   test("distributed prefix sum at 500k rows: exact spot-checked offsets, no global window") {

@@ -183,11 +183,50 @@ class SeriesAggSpec extends SparkSpec {
               close(s"$clue cvar", g.cvar, want.cvar)
               close(s"$clue serenity", g.serenity(0.001), want.serenity)
               close(s"$clue rho", g.rho, want.rho)
+              nearPenalty(s"$clue penalty", g.penalty, serialPenalty(rs.count(_.r.isDefined).toLong, g.rho))
             }
           }
         }
       }
     }
+
+  /** The autocorrelation penalty by its definition, √(1 + 2·Σ_{x=1}^{n−1}
+    * ((n−x)/n)·|ρ|ˣ) summed term by term; NaN when n < 2 or ρ is null or NaN.
+    */
+  private def serialPenalty(n: Long, rho: Option[Double]): Double = rho match {
+    case Some(r) if n >= 2 && !r.isNaN =>
+      val c = math.abs(r)
+      math.sqrt(1 + 2 * (1L until n).map(x => (n - x).toDouble / n * math.pow(c, x.toDouble)).sum)
+    case _ => Double.NaN
+  }
+
+  /** The closed form against the term-by-term sum: equal NaN-ness, 1e-9 relative. */
+  private def nearPenalty(what: String, got: Double, want: Double): Unit =
+    assert((got.isNaN && want.isNaN) || math.abs(got - want) <= 1e-9 * math.abs(want),
+      s"$what: got $got want $want")
+
+  test("penalty matches the serial decay sum: rho 0, |1 - |rho|| < 1e-12, n < 2, null and NaN rho") {
+    val cases: Seq[(Long, Option[Double])] = Seq(
+      (50L, Some(0.0)), (2520L, Some(-0.0)),                          // no decay sum: penalty 1
+      (50L, Some(1.0)), (50L, Some(-1.0)), (2520L, Some(1.0 - 1e-13)), (7L, Some(-(1.0 - 5e-13))),
+      (2L, Some(0.4)), (3L, Some(-0.7)), (252L, Some(0.999)), (2520L, Some(0.2)),
+      (0L, Some(0.5)), (1L, Some(0.5)), (50L, None), (50L, Some(Double.NaN)))
+    cases.foreach { case (n, rho) =>
+      nearPenalty(s"n $n rho $rho", SeriesAgg.penalty(n, rho), serialPenalty(n, rho))
+    }
+    assert(SeriesAgg.penalty(50L, Some(0.0)) == 1.0)
+    assert(cases.collect { case (n, rho) if n < 2 || rho.forall(_.isNaN) => SeriesAgg.penalty(n, rho) }
+      .forall(_.isNaN))
+    // through the walk: a flat series has a null rho, a single row n = 1
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+        Row("flat", 1L, 0.01), Row("flat", 2L, 0.01), Row("flat", 3L, 0.01), Row("one", 1L, 0.02)),
+      StructType(Seq(StructField("asset", StringType), StructField("d", LongType),
+        StructField("r", DoubleType))))
+    val got = df.groupBy("asset").agg(SeriesAgg(SeriesAgg.Rows)(col("d"), col("d"), col("r")))
+      .collect().map(row => row.getString(0) -> SeriesAgg.Result(row.getStruct(1))).toMap
+    assert(got("flat").rho.isEmpty && got("flat").penalty.isNaN, got("flat"))
+    assert(got("one").n == 1L && got("one").penalty.isNaN, got("one"))
+  }
 
   /** [[graft.core.Exprs.fdiv]] in Spark SQL. */
   private def sqlFdiv(a: String, b: String): String =
@@ -276,8 +315,20 @@ class SeriesAggSpec extends SparkSpec {
       val streaks = byAsset(GroupedStats.streaks(sf))
       val eps = byAsset(GroupedStats.drawdownEpisodes(sf))
       val smart = byAsset(GroupedStats.smartSharpe(sf))
-      val pen = byAsset(spark.sql(queries("q30"))
-        .select(col("asset"), graft.core.Exprs.autocorrPenalty(col("rho"), col("n")).as("p")))
+      // the penalty as q30's oracle SQL spells it, with the engine's NaN for n < 2 or no rho
+      val pen = byAsset(spark.sql(
+        s"""WITH s AS (SELECT asset, CAST(n AS DOUBLE) AS n, rho FROM (${queries("q30")}) q)
+           |SELECT asset, CASE WHEN n < 2 OR rho IS NULL OR isnan(rho) THEN CAST('NaN' AS DOUBLE) ELSE
+           |  SQRT(1.0 + 2.0 * (CASE
+           |    WHEN ABS(rho) = 0 THEN 0.0
+           |    WHEN ABS(1.0 - ABS(rho)) < 1e-12
+           |      THEN (n - 1.0) - (n - 1.0) * ((n - 1.0) + 1.0) / (2.0 * n)
+           |    ELSE ABS(rho) * (1.0 - POW(ABS(rho), n - 1.0)) / (1.0 - ABS(rho))
+           |         - (ABS(rho) * (1.0 - ((n - 1.0) + 1.0) * POW(ABS(rho), n - 1.0)
+           |                        + (n - 1.0) * POW(ABS(rho), n - 1.0) * ABS(rho))
+           |            / ((1.0 - ABS(rho)) * (1.0 - ABS(rho)))) / n
+           |    END)) END AS p
+           |FROM s""".stripMargin))
       def opt(r: Row, k: String): Option[Double] = Option(r.getAs[java.lang.Double](k)).map(_.doubleValue)
       assert(dd.keySet == sql("q07").keySet && vc.keySet == sql("q04").keySet &&
         streaks.keySet == sql("q09").keySet && smart.keySet == pen.keySet)
@@ -352,8 +403,12 @@ class SeriesAggSpec extends SparkSpec {
 
   test("an empty series gives nulls and zeros; an empty wide frame one row of them") {
     val agg = new SeriesAgg.Agg(SeriesAgg.Rows, rz)
-    assert(agg.finish(agg.zero) == SeriesAgg.Result(0L, None, None, None, None, None, None, None,
-      0L, 0L, 0.0, 0.0, 0L, 0L, None))
+    val zero = agg.finish(agg.zero)
+    assert(zero.penalty.isNaN && SeriesAgg.Result.empty.penalty.isNaN)
+    // NaN ≠ NaN: the rest compared with the penalty set aside
+    assert(zero.copy(penalty = 0.0) == SeriesAgg.Result(0L, None, None, None, None, None, None, None,
+      0L, 0L, 0.0, 0.0, 0L, 0L, None, 0.0))
+    assert(SeriesAgg.Result.empty.copy(penalty = 0.0) == zero.copy(penalty = 0.0))
     import graft.stats.Stats
     val empty = spark.createDataFrame(java.util.Collections.emptyList[Row],
       StructType(Seq(StructField("date", DateType), StructField("a", DoubleType))))
@@ -361,6 +416,22 @@ class SeriesAggSpec extends SparkSpec {
     assert(Stats.conditionalValueAtRisk(empty).collect().toSeq == Seq(Row(null)))
     assert(Stats.consecutiveWins(empty).collect().toSeq == Seq(Row(0L)))
     assert(Stats.longestDrawdownDays(empty).collect().toSeq == Seq(Row(0L)))
+  }
+
+  test("an empty wide frame gives the smart calls one row of NaN") {
+    import graft.stats.Stats
+    val empty = spark.createDataFrame(java.util.Collections.emptyList[Row],
+      StructType(Seq(StructField("date", DateType), StructField("a", DoubleType),
+        StructField("b", DoubleType))))
+    val calls: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "smartSharpe" -> (Stats.smartSharpe(_)),
+      "autocorrPenalty" -> Stats.autocorrPenalty,
+      "probabilisticSharpeRatio(smart)" -> (Stats.probabilisticSharpeRatio(_, smart = true)))
+    calls.foreach { case (name, f) =>
+      val rows = f(empty).collect().toSeq
+      assert(rows.size == 1 && rows.head.length == 2, s"$name: $rows")
+      assert(rows.head.toSeq.forall(_.asInstanceOf[Double].isNaN), s"$name: $rows")
+    }
   }
 
   test("the ordered Stats metrics execute no Window and no Sort operator") {

@@ -53,14 +53,15 @@ class SingleSiteSpec extends AnyFunSuite {
     assertOnlyIn(sitesOf("""SparkSession\s*\.\s*builder"""), "Session.scala")
   }
 
-  test("ordered per-asset metrics run windows only in GroupedStats, toDrawdowns and Smart") {
+  test("ordered per-asset metrics run windows only in GroupedStats and toDrawdowns") {
     // one implementation of the ordered per-key aggregates, SeriesAgg, for
-    // the wide API, Reports and GroupedStats alike; windows are left only
-    // where the output is row-level: GroupedStats.withDrawdown (which
-    // toDrawdowns reuses), drawdownDetails and rolling
+    // the wide API (smart ratios included), Reports and GroupedStats alike;
+    // windows are left only where the output is row-level:
+    // GroupedStats.withDrawdown (which toDrawdowns reuses), drawdownDetails
+    // and rolling
     def wideApi(site: String): Boolean =
       site.startsWith("src/main/scala/graft/reports/") || site.startsWith("src/main/scala/graft/stats/")
-    assertOnlyIn(sitesOf("""\.over\(""").filter(wideApi), "stats/Smart.scala")
+    assertOnlyIn(sitesOf("""\.over\(""").filter(wideApi))
     assertOnlyIn(sitesOf("""GroupedStats\.withDrawdown|row_number\(""").filter(wideApi),
       "stats/Stats.scala")
     val api = sitesOf("""\.over\(|row_number\(""").filter(_.startsWith("src/main/scala/graft/api/"))
