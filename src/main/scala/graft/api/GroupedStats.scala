@@ -179,23 +179,22 @@ object GroupedStats {
   }
 
   /** Benchmark-relative metrics per key against a (date, benchmark-return)
-    * frame, joined by equality on ts. The benchmark is tiny relative to the
+    * frame, joined by equality on ts, with the wide API's formulas
+    * ([[graft.core.Exprs]]: α at `periods`, un-annualized information
+    * ratio, Treynor with rf = 0). The benchmark is tiny relative to the
     * series data → broadcast join, no shuffle of the big side.
     */
   def benchmarked(sf: SeriesFrame, bench: DataFrame, benchTs: String, benchVal: String,
       periods: Int = 252): DataFrame = {
-    val b = broadcast(bench.select(col(benchTs).as(sf.ts), col(benchVal).as("__b")))
-    val j = sf.df.join(b, sf.ts)
-    val beta = fdiv(covar_samp(sf.r, col("__b")), var_samp(col("__b")))
-    val corrC = corr(sf.r, col("__b"))
-    val active = sf.r - col("__b")
+    val j = sf.df.join(broadcast(bench.select(col(benchTs).as(sf.ts), col(benchVal).as("__b"))), sf.ts)
+    val b = col("__b")
     j.groupBy(sf.keyCols: _*).agg(
-      ((avg(sf.r) - beta * avg(col("__b"))) * periods).as("alpha"),
-      beta.as("beta"),
-      corrC.as("correlation"),
-      (corrC * corrC).as("r_squared"),
-      fdiv(Exprs.comp(sf.r), beta).as("treynor_ratio"),
-      fdiv(avg(active), stddev_samp(active)).as("information_ratio"))
+      Exprs.alpha(sf.r, b, periods).as("alpha"),
+      Exprs.beta(sf.r, b).as("beta"),
+      Exprs.correlation(sf.r, b).as("correlation"),
+      Exprs.rSquared(sf.r, b).as("r_squared"),
+      Exprs.treynor(sf.r, b, rf = 0.0).as("treynor_ratio"),
+      Exprs.informationRatio(sf.r, b, periods, annualize = false).as("information_ratio"))
   }
 
   /** Weighted portfolio returns from a long multi-asset frame: one output

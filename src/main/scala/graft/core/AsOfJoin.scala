@@ -17,6 +17,13 @@ object AsOfJoin {
 
   /** For each left row, attach the latest right `valueCols` with
     * rightTs <= leftTs (backward semantics, ties include equal timestamps).
+    *
+    * A caller whose frames carry a series key must pass it as
+    * `partitionKeys` (and give the right side a row per key): each series
+    * then aligns in its own window partition. An unkeyed call is ONE global
+    * window — a single-partition exchange and sort over every row of both
+    * sides — which is right only for one series, as in the wide `Stats`
+    * benchmark calls.
     */
   def backward(left: DataFrame, right: DataFrame, leftTs: String, rightTs: String,
       valueCols: Seq[String], partitionKeys: Seq[String] = Nil): DataFrame = {

@@ -7,10 +7,13 @@ import graft.functions.GraftProduct.product
 
 /** Shared aggregate Column builders — the metric algebra.
   *
-  * Every builder maps a returns Column to an *aggregate* Column, so each
-  * metric is a single wide aggregation: one scan, map-side partial
-  * aggregation, no shuffle beyond the final exchange. Null semantics follow
-  * the reference (Polars): aggregates skip nulls, `count` = non-null count,
+  * Every builder maps a returns Column, and for the benchmark-relative
+  * metrics a benchmark Column aligned to it row by row, to an *aggregate*
+  * Column, so each metric is a single wide aggregation: one scan, map-side
+  * partial aggregation, no shuffle beyond the final exchange. The wide
+  * `Stats` calls, `Reports` and `GroupedStats` all build their metrics
+  * here, so each formula has one home. Null semantics follow the reference
+  * (Polars): aggregates skip nulls, `count` = non-null count,
   * `when(cond_on_null) → otherwise` branch.
   */
 object Exprs {
@@ -136,6 +139,34 @@ object Exprs {
     * (reference: quantile(interpolation="linear"), alphastats/stats.py:1068-1069).
     */
   def quantile(r: Column, q: Double): Column = percentile(r, lit(q))
+
+  // --- benchmark-relative (reference: alphastats/stats.py:419-579, 1398-1503) ---
+  // `b` is the benchmark return aligned to `r` on the same row.
+
+  /** CAPM β = cov(r, b) / var(b). */
+  private[graft] def beta(r: Column, b: Column): Column = fdiv(covar_samp(r, b), var_samp(b))
+
+  /** CAPM α, annualized: (mean r − β · mean b) · periods. */
+  private[graft] def alpha(r: Column, b: Column, periods: Int): Column =
+    (avg(r) - beta(r, b) * avg(b)) * lit(periods)
+
+  private[graft] def correlation(r: Column, b: Column): Column = corr(r, b)
+
+  private[graft] def rSquared(r: Column, b: Column): Column = {
+    val c = correlation(r, b)
+    c * c
+  }
+
+  /** mean(r − b) / σ(r − b), × √periods when annualized. */
+  private[graft] def informationRatio(r: Column, b: Column, periods: Int, annualize: Boolean): Column = {
+    val active = r - b
+    val ir = fdiv(avg(active), stddev_samp(active))
+    if (annualize) ir * lit(math.sqrt(periods.toDouble)) else ir
+  }
+
+  /** (comp(r) − rf) / β. */
+  private[graft] def treynor(r: Column, b: Column, rf: Double): Column =
+    fdiv(comp(r) - lit(rf), beta(r, b))
 
   // --- trade-stats family (reference: alphastats/stats.py:590-1181) ---
 

@@ -408,10 +408,17 @@ object Queries {
        |  ROUND(AVG(r - b) / STDDEV_SAMP(r - b), 6) AS information_ratio
        |FROM j GROUP BY asset ORDER BY asset""".stripMargin
 
+  /** Backward as-of alignment of each asset's daily returns to the Monday
+    * market returns. The weekly rows are copied once per asset so the join
+    * runs with `partitionKeys = asset`: each series aligns in its own window
+    * partition instead of one global window over the whole panel (q228's
+    * pattern).
+    */
   def q13AsOf(spark: SparkSession, sfDir: String): DataFrame = {
     val sf = assetReturns(spark, sfDir)
     val weekly = marketReturns(spark, sfDir).filter(dayofweek(col("d")) === 2)
-    val j = AsOfJoin.backward(sf.df, weekly, "d", "d", Seq("b"))
+      .crossJoin(broadcast(sf.df.select(col("asset")).distinct()))
+    val j = AsOfJoin.backward(sf.df, weekly, "d", "d", Seq("b"), partitionKeys = Seq("asset"))
     j.groupBy(col("asset")).agg(
       r6(corr(col("r"), col("b"))).as("asof_corr"),
       r6(avg(col("r") - col("b"))).as("avg_spread"),

@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.core.{Dist, Eager, EmptyReturnsError, Exprs, ReturnsFrame}
-import graft.core.Exprs.fdiv
 import graft.functions.GraftProduct.product
 import graft.functions.SeriesAgg
+import graft.stats.Calendar
 
 /** QuantStats-style metrics table (reference: alphastats/reports.py:22-290).
   *
@@ -295,12 +295,6 @@ object Reports {
     rows.toSeq
   }
 
-  /** max(ts) shifted by calendar months/years, same temporal type —
-    * matches the reference's offset_by (keeps time-of-day on timestamps).
-    */
-  private def boundary(mx: Any, months: Int, years: Int): Column =
-    lit(graft.stats.Calendar.shift(mx, months, years))
-
   /** Every non-calendar metric of every asset in ONE `groupBy(asset)`: the
     * plain aggregates plus one [[graft.functions.SeriesAgg]], which walks
     * each asset's series in order for the drawdown, episode, streak, CVaR
@@ -350,32 +344,27 @@ object Reports {
       min(r).as("worst"),
       count(r).as("count"))
     val trailing = maxRawOpt.toSeq.flatMap { mx =>
-      val (my, mm) = graft.stats.Calendar.yearMonth(mx)
+      def within(p: Calendar.Period): Column = Calendar.within(t, p, mx)
       Seq(
-        condProd(year(t) === my && month(t) === mm).as("mtd"),
-        condProd(t >= boundary(mx, -3, 0)).as("m3"),
-        condProd(t >= boundary(mx, -6, 0)).as("m6"),
-        condProd(year(t) === my).as("ytd"),
-        condProd(t >= boundary(mx, 0, -1)).as("y1"),
-        condCagr(t >= boundary(mx, 0, -3)).as("y3"),
-        condCagr(t >= boundary(mx, 0, -5)).as("y5"),
-        condCagr(t >= boundary(mx, 0, -10)).as("y10"))
+        condProd(within(Calendar.Mtd)).as("mtd"),
+        condProd(within(Calendar.Months(3))).as("m3"),
+        condProd(within(Calendar.Months(6))).as("m6"),
+        condProd(within(Calendar.Ytd)).as("ytd"),
+        condProd(within(Calendar.Years(1))).as("y1"),
+        condCagr(within(Calendar.Years(3))).as("y3"),
+        condCagr(within(Calendar.Years(5))).as("y5"),
+        condCagr(within(Calendar.Years(10))).as("y10"))
     }
-    val benchmarked = if (benchName.isEmpty) Nil else {
-      val beta = fdiv(covar_samp(r, b), var_samp(b))
-      val corrC = corr(r, b)
-      val active = r - b
-      Seq(
-        (corrC * corrC).as("r2"),
-        fdiv(avg(active), stddev_samp(active)).as("ir"),
-        beta.as("beta"),
-        // the reference's Alpha row calls stats.greeks with its DEFAULT
-        // periods=252 regardless of periods_per_year (reports.py _greek) —
-        // preserve the quirk
-        ((avg(r) - beta * avg(b)) * 252).as("alpha"),
-        corrC.as("corr"),
-        fdiv(Exprs.comp(r) - lit(rf), beta).as("treynor"))
-    }
+    val benchmarked = if (benchName.isEmpty) Nil else Seq(
+      Exprs.rSquared(r, b).as("r2"),
+      Exprs.informationRatio(r, b, periodsPerYear, annualize = false).as("ir"),
+      Exprs.beta(r, b).as("beta"),
+      // the reference's Alpha row calls stats.greeks with its DEFAULT
+      // periods=252 regardless of periods_per_year (reports.py _greek) —
+      // preserve the quirk
+      Exprs.alpha(r, b, 252).as("alpha"),
+      Exprs.correlation(r, b).as("corr"),
+      Exprs.treynor(r, b, rf).as("treynor"))
     val series = SeriesAgg(SeriesAgg.Rows)(col("__ord"), col("__u"), r).as("series")
     // Hash-partitioned by asset first, so each asset's rows meet in one task,
     // in the cached frame's order, and the plain aggregates run sequentially

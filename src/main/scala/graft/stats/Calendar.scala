@@ -66,26 +66,31 @@ object Calendar {
     * the collected max — one tiny scalar job, then a pushable filter.
     */
   private[graft] def dateFiltered(rfm: ReturnsFrame, period: Period): DataFrame = {
-    val tName = rfm.requireTemporal
-    val t = col(tName)
+    val t = col(rfm.requireTemporal)
     if (period == All) return rfm.df
     val maxVal = rfm.df.agg(max(t)).head().get(0)
-    if (maxVal == null) return rfm.df
-    period match {
-      case Mtd =>
-        val (y, m) = yearMonth(maxVal)
-        rfm.df.filter(year(t) === y && month(t) === m)
-      case Ytd => rfm.df.filter(year(t) === yearMonth(maxVal)._1)
-      case Months(n) => rfm.df.filter(t >= lit(shift(maxVal, -n, 0)))
-      case Years(n) => rfm.df.filter(t >= lit(shift(maxVal, 0, -n)))
-      case All => rfm.df
-    }
+    if (maxVal == null) rfm.df else rfm.df.filter(within(t, period, maxVal))
+  }
+
+  /** `t` lies in the trailing `period` that ends at the collected temporal
+    * scalar `max`: its month (MTD) or year (YTD), or on or after `max`
+    * shifted back by n months or years. `Reports` and [[dateFiltered]]
+    * share it.
+    */
+  private[graft] def within(t: Column, period: Period, max: Any): Column = period match {
+    case Mtd =>
+      val (y, m) = yearMonth(max)
+      year(t) === y && month(t) === m
+    case Ytd => year(t) === yearMonth(max)._1
+    case Months(n) => t >= lit(shift(max, -n, 0))
+    case Years(n) => t >= lit(shift(max, 0, -n))
+    case All => lit(true)
   }
 
   /** (year, month) of a collected temporal scalar — handles both the legacy
     * java.sql types and the java8 datetime API types.
     */
-  private[graft] def yearMonth(v: Any): (Int, Int) = v match {
+  private def yearMonth(v: Any): (Int, Int) = v match {
     case d: Date => (d.toLocalDate.getYear, d.toLocalDate.getMonthValue)
     case ts: Timestamp => (ts.toLocalDateTime.getYear, ts.toLocalDateTime.getMonthValue)
     case ldt: LocalDateTime => (ldt.getYear, ldt.getMonthValue)
@@ -98,7 +103,7 @@ object Calendar {
   /** Calendar-aware shift matching Polars `offset_by("-Nmo"/"-Ny")` (clamps
     * to end of month, keeps time-of-day). Returns the same temporal type.
     */
-  private[graft] def shift(v: Any, months: Int, years: Int): Any = v match {
+  private def shift(v: Any, months: Int, years: Int): Any = v match {
     case d: Date => Date.valueOf(d.toLocalDate.plusMonths(months).plusYears(years))
     case ts: Timestamp => Timestamp.valueOf(ts.toLocalDateTime.plusMonths(months).plusYears(years))
     case ldt: LocalDateTime => ldt.plusMonths(months).plusYears(years)

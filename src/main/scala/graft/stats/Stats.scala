@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 
-import graft.core.{Dist, Exprs, ReturnsFrame}
+import graft.core.{AsOfJoin, Dist, Exprs, ReturnsFrame}
 import graft.functions.SeriesAgg
 
 /** The reference's public metric API (SURVEY.md §2.b), Spark-first.
@@ -15,16 +15,22 @@ import graft.functions.SeriesAgg
   * contract (alphastats/stats.py:120-121). `Stats.scalar` collapses a 1-row
   * 1-col result to Double for series-style use.
   *
-  * Each scalar metric is a single wide aggregation (one scan, map-side
-  * partials, no row shuffle). The ordered metrics — the drawdown family,
-  * CVaR, streaks ([[Streaks]]) and drawdown episodes ([[DrawdownEpisodes]])
-  * — are one per-asset [[graft.functions.SeriesAgg]] over the melted frame,
-  * run eagerly: the N per-asset results are collected and returned as a
-  * 1-row local frame; the smart ratios ([[Smart]]) read the same walk's
-  * penalty. Only [[toDrawdowns]] (row-level output) still runs ordered
-  * windows. This wide API mirrors the reference's one-column-per-asset
-  * model; the scale path for many assets is [[graft.api.GroupedStats]] (long
-  * format, partitioned by asset key).
+  * The metric calls are written here, with their formulas in
+  * [[graft.core.Exprs]], on three helpers (the trailing-period wrappers
+  * call [[Calendar]]):
+  *  - the scalar metrics are one wide aggregation (`ReturnsFrame.aggAll`:
+  *    one scan, map-side partials, no row shuffle);
+  *  - the benchmark-relative metrics are one `select` of aggregates over
+  *    the returns aligned to the benchmark ([[vsBenchmark]]);
+  *  - the ordered metrics — the drawdown family, CVaR, streaks, drawdown
+  *    episodes, the autocorrelation penalty and the smart ratios — are one
+  *    per-asset [[graft.functions.SeriesAgg]] over the melted frame
+  *    ([[series]]), run eagerly: the N per-asset results are collected and
+  *    returned as a 1-row local frame.
+  * Only [[toDrawdowns]] (row-level output) still runs ordered windows. This
+  * wide API mirrors the reference's one-column-per-asset model; the scale
+  * path for many assets is [[graft.api.GroupedStats]] (long format,
+  * partitioned by asset key).
   */
 object Stats {
 
@@ -213,7 +219,117 @@ object Stats {
   def serenityIndex(returns: DataFrame, rf: Double = 0.0): DataFrame =
     ordered(ReturnsFrame(returns))(_.serenity(rf))
 
+  // ---- streaks ------------------------------------------------------------
+
+  /** Longest win (loss) streak per column, optionally over calendar-bucketed
+    * returns; 0 for a column without such a run. Nulls reset the streak: they
+    * form their own sign class (reference `_consecutive_count`,
+    * alphastats/stats.py:1249-1289).
+    */
+  def consecutiveWins(returns: DataFrame, aggregate: Option[String] = None,
+      compounded: Boolean = true): DataFrame =
+    seriesRow(aggregated(returns, aggregate, compounded), LongType, nullable = false)(_._1.wins)
+
+  def consecutiveLosses(returns: DataFrame, aggregate: Option[String] = None,
+      compounded: Boolean = true): DataFrame =
+    seriesRow(aggregated(returns, aggregate, compounded), LongType, nullable = false)(_._1.losses)
+
+  // ---- drawdown episodes (reference: alphastats/stats.py:1570-1642) --------
+  // An episode is a maximal run of rows with drawdown < 0 (a null return ends
+  // one). Its length is calendar days (end − start).days + 1 with a temporal
+  // column, else its row count. A column without episodes gets 0.
+
+  def longestDrawdownDays(returns: DataFrame): DataFrame =
+    seriesRow(ReturnsFrame(returns), LongType, nullable = false)(_._1.longestEpisode)
+
+  def avgDrawdownDays(returns: DataFrame): DataFrame =
+    seriesRow(ReturnsFrame(returns), DoubleType, nullable = false)(_._1.avgEpisode)
+
+  def avgDrawdown(returns: DataFrame): DataFrame =
+    seriesRow(ReturnsFrame(returns), DoubleType, nullable = false)(_._1.avgDepth)
+
+  // ---- autocorrelation penalty and smart ratios -----------------------------
+  // (reference: alphastats/stats.py:255-336, 1292-1361) Each call is one
+  // `series` aggregation: the walk gives every column's count, lag-1 ρ and
+  // penalty, and the base ratio and moments ride along as `plain` aggregates.
+
+  /** Per-column penalty √(1 + 2·Σ_{x=1}^{n-1} ((n−x)/n)·ρˣ), ρ = |lag-1 corr|
+    * of consecutive non-null returns; NaN when n < 2 (also for a column
+    * without rows) or a slice variance is 0 (alphastats/stats.py:1292-1315).
+    */
+  def autocorrPenalty(returns: DataFrame): DataFrame =
+    seriesRow(ReturnsFrame(returns), DoubleType, nullable = false)(_._1.penalty)
+
+  def smartSharpe(returns: DataFrame, rf: Double = 0.0, periods: Int = 252,
+      annualize: Boolean = true): DataFrame =
+    penalized(returns, Exprs.sharpe(_, rf, periods, annualize))
+
+  def smartSortino(returns: DataFrame, rf: Double = 0.0, periods: Int = 252,
+      annualize: Boolean = true): DataFrame =
+    penalized(returns, Exprs.sortino(_, rf, periods, annualize))
+
+  /** QuantStats-compatible PSR ([[Dist.psr]]) from the walk's count and the
+    * Sharpe, skew and kurtosis of the same aggregation; `smart` only divides
+    * the Sharpe by the penalty (alphastats/stats.py:255-336).
+    */
+  def probabilisticSharpeRatio(returns: DataFrame, rf: Double = 0.0,
+      periods: Int = 252, annualize: Boolean = false,
+      smart: Boolean = false): DataFrame =
+    seriesRow(ReturnsFrame(returns), DoubleType, nullable = false, plain = Seq(
+      Exprs.sharpe(_, 0.0, periods, annualize = false), Exprs.skew, Exprs.kurtosis)) { cell =>
+      val (s, Seq(b, sk, ku)) = cell
+      Dist.psr(if (smart) b / s.penalty else b, sk, ku, s.n.toDouble, rf, annualize)
+    }
+
+  // ---- benchmark-relative (reference: alphastats/stats.py:419-579, 1398-1567) ----
+
+  /** CAPM α/β per strategy column as struct{alpha, beta}. */
+  def greeks(returns: DataFrame, benchmark: DataFrame, periods: Int = 252): DataFrame =
+    vsBenchmark(returns, benchmark)(r =>
+      struct(Exprs.alpha(r, Bench, periods).as("alpha"), Exprs.beta(r, Bench).as("beta")))
+
+  def informationRatio(returns: DataFrame, benchmark: DataFrame,
+      periods: Int = 252, annualize: Boolean = false): DataFrame =
+    vsBenchmark(returns, benchmark)(Exprs.informationRatio(_, Bench, periods, annualize))
+
+  def correlation(returns: DataFrame, benchmark: DataFrame): DataFrame =
+    vsBenchmark(returns, benchmark)(Exprs.correlation(_, Bench))
+
+  def rSquared(returns: DataFrame, benchmark: DataFrame): DataFrame =
+    vsBenchmark(returns, benchmark)(Exprs.rSquared(_, Bench))
+
+  /** (comp(r) − rf) / β. */
+  def treynorRatio(returns: DataFrame, benchmark: DataFrame, rf: Double = 0.0): DataFrame =
+    vsBenchmark(returns, benchmark)(Exprs.treynor(_, Bench, rf))
+
   // ---- internals ----------------------------------------------------------
+
+  private val Bench = col(ReturnsFrame.BenchmarkCol)
+
+  /** One aggregate `metric` of every strategy column against the benchmark,
+    * in one `select` over the aligned frame: a backward as-of join on the
+    * temporal columns, or a positional join when either side has none. The
+    * join is on the time axis alone — this API has one series per column, so
+    * there is no key to partition it by.
+    */
+  private def vsBenchmark(returns: DataFrame, benchmark: DataFrame)(
+      metric: Column => Column): DataFrame = {
+    val rfm = ReturnsFrame(returns)
+    val bm = ReturnsFrame.prepareBenchmark(benchmark)
+    val j = (rfm.temporalCol, bm.temporalCol) match {
+      case (Some(lt), Some(rt)) =>
+        AsOfJoin.backward(rfm.df, bm.df, lt, rt, Seq(ReturnsFrame.BenchmarkCol))
+      case _ => AsOfJoin.positional(rfm.df, bm.df.select(Bench))
+    }
+    j.select(rfm.numericCols.map(c => metric(col(c)).as(c)): _*)
+  }
+
+  /** A `base` ratio ÷ the autocorrelation penalty, per column. */
+  private def penalized(returns: DataFrame, base: Column => Column): DataFrame =
+    seriesRow(ReturnsFrame(returns), DoubleType, nullable = false, plain = Seq(base)) { cell =>
+      val (s, Seq(b)) = cell
+      b / s.penalty
+    }
 
   /** Melted (asset, ord, value) view of a wide frame — the internal long
     * format that turns N columns into N window partitions (the 100-TB shape;
@@ -239,7 +355,7 @@ object Stats {
     * arithmetic on the collected results, not in a SQL literal — so the
     * calls share their generated classes.
     */
-  private[stats] def series(rfm: ReturnsFrame, rz: Double = SeriesAgg.Z05,
+  private def series(rfm: ReturnsFrame, rz: Double = SeriesAgg.Z05,
       plain: Seq[Column => Column] = Nil): Map[String, (SeriesAgg.Result, Seq[Double])] = {
     val ordType = rfm.temporalCol.map(t => rfm.df.schema(t).dataType)
     val o = col("__ord")
@@ -252,22 +368,23 @@ object Stats {
       .toMap.withDefaultValue((SeriesAgg.Result.empty, plain.map(_ => Double.NaN)))
   }
 
-  /** The reference's 1-row wide shape of a per-column `cell` of [[series]],
-    * built on the driver: only the N per-asset results were collected,
-    * never the rows.
+  /** The reference's 1-row wide shape of a per-column `cell` of [[series]]
+    * (the walk's result and the `plain` aggregates), built on the driver:
+    * only the N per-asset results were collected, never the rows.
     */
-  private[stats] def seriesRow(rfm: ReturnsFrame, dt: DataType, nullable: Boolean,
-      rz: Double = SeriesAgg.Z05)(cell: SeriesAgg.Result => Any): DataFrame = {
-    val results = series(rfm, rz)
+  private def seriesRow(rfm: ReturnsFrame, dt: DataType, nullable: Boolean,
+      rz: Double = SeriesAgg.Z05, plain: Seq[Column => Column] = Nil)(
+      cell: ((SeriesAgg.Result, Seq[Double])) => Any): DataFrame = {
+    val results = series(rfm, rz, plain)
     rfm.df.sparkSession.createDataFrame(
-      java.util.Collections.singletonList(Row.fromSeq(rfm.numericCols.map(c => cell(results(c)._1)))),
+      java.util.Collections.singletonList(Row.fromSeq(rfm.numericCols.map(c => cell(results(c))))),
       StructType(rfm.numericCols.map(c => StructField(c, dt, nullable))))
   }
 
   /** A double metric of [[series]] per column, null where it is null. */
   private def ordered(rfm: ReturnsFrame, rz: Double = SeriesAgg.Z05)(
       metric: SeriesAgg.Result => Option[Double]): DataFrame =
-    seriesRow(rfm, DoubleType, nullable = true, rz)(metric(_).map(Double.box).orNull)
+    seriesRow(rfm, DoubleType, nullable = true, rz)(c => metric(c._1).map(Double.box).orNull)
 
   /** Appends `__dd_<c>` drawdown columns for every numeric column via the
     * melted frame, then a pivot on the row ordinal restores the wide shape
@@ -293,55 +410,6 @@ object Stats {
   private[graft] def aggregated(returns: DataFrame, aggregate: Option[String],
       compounded: Boolean): ReturnsFrame =
     ReturnsFrame(Calendar.simpleReturns(ReturnsFrame(returns), aggregate, compounded))
-
-  // Implemented in sibling files, re-exported here for one API surface:
-  def consecutiveWins(returns: DataFrame, aggregate: Option[String] = None,
-      compounded: Boolean = true): DataFrame =
-    Streaks.consecutive(returns, winning = true, aggregate, compounded)
-
-  def consecutiveLosses(returns: DataFrame, aggregate: Option[String] = None,
-      compounded: Boolean = true): DataFrame =
-    Streaks.consecutive(returns, winning = false, aggregate, compounded)
-
-  def autocorrPenalty(returns: DataFrame): DataFrame = Smart.autocorrPenalty(returns)
-
-  def smartSharpe(returns: DataFrame, rf: Double = 0.0, periods: Int = 252,
-      annualize: Boolean = true): DataFrame =
-    Smart.scaledByPenalty(returns, Exprs.sharpe(_, rf, periods, annualize))
-
-  def smartSortino(returns: DataFrame, rf: Double = 0.0, periods: Int = 252,
-      annualize: Boolean = true): DataFrame =
-    Smart.scaledByPenalty(returns, Exprs.sortino(_, rf, periods, annualize))
-
-  def probabilisticSharpeRatio(returns: DataFrame, rf: Double = 0.0,
-      periods: Int = 252, annualize: Boolean = false,
-      smart: Boolean = false): DataFrame =
-    Smart.psr(returns, rf, periods, annualize, smart)
-
-  def longestDrawdownDays(returns: DataFrame): DataFrame =
-    DrawdownEpisodes.longestDays(returns)
-
-  def avgDrawdownDays(returns: DataFrame): DataFrame =
-    DrawdownEpisodes.avgDays(returns)
-
-  def avgDrawdown(returns: DataFrame): DataFrame =
-    DrawdownEpisodes.avgDepth(returns)
-
-  def greeks(returns: DataFrame, benchmark: DataFrame, periods: Int = 252): DataFrame =
-    Benchmarked.greeks(returns, benchmark, periods)
-
-  def informationRatio(returns: DataFrame, benchmark: DataFrame,
-      periods: Int = 252, annualize: Boolean = false): DataFrame =
-    Benchmarked.informationRatio(returns, benchmark, periods, annualize)
-
-  def correlation(returns: DataFrame, benchmark: DataFrame): DataFrame =
-    Benchmarked.correlation(returns, benchmark)
-
-  def rSquared(returns: DataFrame, benchmark: DataFrame): DataFrame =
-    Benchmarked.rSquared(returns, benchmark)
-
-  def treynorRatio(returns: DataFrame, benchmark: DataFrame, rf: Double = 0.0): DataFrame =
-    Benchmarked.treynorRatio(returns, benchmark, rf)
 
   // ---- trailing / fixed-period wrappers (reference: alphastats/stats.py:1650-1817) ----
 

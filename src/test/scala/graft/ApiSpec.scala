@@ -53,6 +53,33 @@ class ApiSpec extends SparkSpec {
     assertApprox(corr7, corr5)
   }
 
+  test("wide benchmark calls agree with GroupedStats.benchmarked on equal dates") {
+    // the same dates on both sides: the wide API's as-of join reduces to
+    // GroupedStats' equi-join, so both paths aggregate the same (r, b) pairs
+    val rnd = new scala.util.Random(9)
+    val ds = dates(60)
+    val b = Seq.fill(60)(rnd.nextGaussian() * 0.01)
+    val xs = Seq(0.5, 1.0, 1.5).map(beta => b.map(v => 0.0002 + beta * v + rnd.nextGaussian() * 0.005))
+    val wide = ds.indices.map(i => (ds(i), xs(0)(i), xs(1)(i), xs(2)(i))).toDF("date", "x", "y", "z")
+    val bench = ds.zip(b).toDF("date", "benchmark")
+    val panel = graft.api.GroupedStats.benchmarked(graft.api.GroupedStats.fromWide(wide, "date"),
+      bench, "date", "benchmark").collect().map(r => r.getAs[String]("asset") -> r).toMap
+    val greeks = Stats.greeks(wide, bench).head()
+    val wideRows = Seq(
+      "information_ratio" -> Stats.informationRatio(wide, bench),
+      "correlation" -> Stats.correlation(wide, bench),
+      "r_squared" -> Stats.rSquared(wide, bench),
+      "treynor_ratio" -> Stats.treynorRatio(wide, bench)).map { case (k, df) => k -> df.head() }
+    Seq("x", "y", "z").zipWithIndex.foreach { case (c, i) =>
+      val p = panel(c)
+      assertApprox(greeks.getStruct(i).getDouble(0), p.getAs[Double]("alpha"), 1e-12, s"alpha $c")
+      assertApprox(greeks.getStruct(i).getDouble(1), p.getAs[Double]("beta"), 1e-12, s"beta $c")
+      wideRows.foreach { case (k, row) =>
+        assertApprox(row.getDouble(i), p.getAs[Double](k), 1e-12, s"$k $c")
+      }
+    }
+  }
+
   test("zero-variance benchmark yields non-finite beta without throwing") {
     val flat = dates(5).map(d => (d, 0.01)).toDF("date", "_benchmark_returns")
     val beta = Stats.greeks(simpleDf.select($"date", $"asset_a"), flat)

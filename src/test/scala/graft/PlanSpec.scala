@@ -149,6 +149,28 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("SinglePartition"), s"global exchange in: $plan")
   }
 
+  test("q13's as-of join is partitioned by asset: no single-partition exchange") {
+    // a small lineitem of three return flags over 90 days; q13 reads the
+    // cached returns, whose own lag windows are not q13's
+    val dir = java.nio.file.Files.createTempDirectory("q13").toString
+    val rnd = new scala.util.Random(13)
+    val start = java.time.LocalDate.of(2020, 1, 1)
+    (for (d <- 0 until 90; flag <- Seq("A", "N", "R"); _ <- 0 until 2)
+      yield (java.sql.Date.valueOf(start.plusDays(d)), flag, 100.0 + 50 * rnd.nextDouble(), 0.05))
+      .toDF("l_shipdate", "l_returnflag", "l_extendedprice", "l_discount")
+      .write.parquet(s"$dir/lineitem.parquet")
+    val ops = Instrument.executedOperators(spark, throughCache = false)(
+      graft.queries.Queries.q13AsOf(spark, dir).collect())
+    val names = ops.map(_.nodeName)
+    assert(names.contains("Window"), names)
+    val global = ops.exists {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+        e.outputPartitioning == org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+      case _ => false
+    }
+    assert(!global, names)
+  }
+
   test("partitioned parquet sink: reads prune partitions on the partition key") {
     // sink-side scale contract: a corpus written partitionBy(lang) must let
     // a lang-filtered read skip other partitions entirely (PartitionFilters

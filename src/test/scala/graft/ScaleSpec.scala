@@ -75,7 +75,7 @@ class ScaleSpec extends SparkSpec {
       Stats.smartSharpe(simpleDf).collect()
       Stats.probabilisticSharpeRatio(simpleDf, smart = true).collect()
       Stats.consecutiveWins(simpleDf).collect()
-      graft.stats.DrawdownEpisodes.longestDays(simpleDf).collect()
+      Stats.longestDrawdownDays(simpleDf).collect()
     }
     val bad = plans.flatMap(_.collect { case w: LWindow if w.partitionSpec.isEmpty => w })
     assert(bad.isEmpty, s"wide API still plans ${bad.size} single-partition window(s)")

@@ -71,6 +71,15 @@ class SingleSiteSpec extends AnyFunSuite {
     assert(stray.isEmpty, stray.map(site => s"$site in ${memberOf(site)}").mkString("\n"))
   }
 
+  test("benchmark-relative aggregates are built only in core/Exprs") {
+    // the wide Stats calls, Reports and GroupedStats.benchmarked share one
+    // formula set; the queries' DuckDB SQL spells these in upper case
+    val sites = sitesOf("""covar_samp\(|var_samp\(|\bcorr\(""").filter(site =>
+      Seq("stats/", "reports/", "api/", "core/").exists(d => site.startsWith(s"src/main/scala/graft/$d")))
+    assert(sites.exists(_.startsWith("src/main/scala/graft/core/Exprs.scala:")))
+    assertOnlyIn(sites, "core/Exprs.scala")
+  }
+
   test("driver threads are started only by graft.core.Eager") {
     assertOnlyIn(sitesOf("""ExecutionContext\s*\.\s*global|\bFuture\s*\("""), "core/Eager.scala")
     // Bench's harness pool runs queries that fork through Eager, so it
