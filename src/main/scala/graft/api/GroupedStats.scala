@@ -4,10 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
-import graft.core.Exprs
+import graft.core.{Exprs, ReturnsFrame}
 import graft.core.Exprs.fdiv
 import graft.functions.GraftProduct.product
 import graft.functions.SeriesAgg
+import graft.stats.Calendar
 
 /** Long-format (asset-keyed) series frame: `keys` identify a series, `ts`
   * orders it, `value` is the per-period return/measure.
@@ -50,17 +51,17 @@ object GroupedStats {
     * temporal column) into the long scale format: (asset, ts, r). This is
     * the bridge from the reference's data model to the partition-by-key
     * engine core — at 100 TB, N assets become N groups instead of N
-    * columns.
+    * columns. The frame is normalized as by every `Stats` call (NaN → null,
+    * at most one temporal column) and melted by `ReturnsFrame.long`; every
+    * numeric column except `tsCol` is an asset. `tsCol` must be a date,
+    * timestamp or integral column, as for every ordered metric here.
     */
   def fromWide(df: DataFrame, tsCol: String, assetCol: String = "asset",
       valueCol: String = "r"): SeriesFrame = {
-    val numeric = df.schema.fields.collect {
-      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] => f.name
-    }.toSeq
-    val stacked = df.select(col(tsCol), explode(map(
-      numeric.flatMap(c => Seq(lit(c), col(c).cast("double"))): _*))
-      .as(Seq(assetCol, valueCol)))
-    SeriesFrame(stacked, Seq(assetCol), tsCol, valueCol)
+    val rfm = ReturnsFrame(df)
+    val long = ReturnsFrame.long(rfm.df, rfm.numericCols.filterNot(_ == tsCol), Some(tsCol))
+    SeriesFrame(long.select(col(tsCol), col("__asset").as(assetCol), col("__r").as(valueCol)),
+      Seq(assetCol), tsCol, valueCol)
   }
 
   /** One row per key with the given named metric expressions. */
@@ -262,19 +263,18 @@ object GroupedStats {
     stage1.groupBy(sf.keyCols: _*).agg(merged.head, merged.tail: _*)
   }
 
-  /** Calendar re-bucketing in long format: one row per (keys, bucket) with
-    * comp-or-sum of the value — the scalable `_simple_returns`.
+  /** Calendar re-bucketing in long format — the scalable `_simple_returns`:
+    * one row per (keys, `grain` bucket) with the comp-or-sum of the value.
+    * The bucket's `ts` is its first `ts` (`min`, the input's type), so the
+    * output is a series every metric here accepts, its buckets in
+    * first-appearance order as the wide API's.
     */
-  def calendarReturns(sf: SeriesFrame, bucket: Seq[Column => Column],
+  def calendarReturns(sf: SeriesFrame, grain: Calendar.Grain,
       compounded: Boolean = true): SeriesFrame = {
-    val bucketCols = bucket.zipWithIndex.map { case (f, i) => f(col(sf.ts)).as(s"__b$i") }
-    val bucketNames = bucket.indices.map(i => s"__b$i")
-    val aggExpr = (if (compounded) Exprs.comp(sf.r) else sum(sf.r)).as(sf.value)
-    val grouped = sf.df.select(sf.keyCols ++ bucketCols :+ sf.r: _*)
-      .groupBy((sf.keys ++ bucketNames).map(col): _*)
-      .agg(aggExpr)
-      .withColumn("__bucket_ord",
-        concat_ws("-", bucketNames.map(n => lpad(col(n).cast("string"), 6, "0")): _*))
-    SeriesFrame(grouped, sf.keys, "__bucket_ord", sf.value)
+    val ts = col(sf.ts)
+    val buckets = sf.df.groupBy(sf.keyCols ++ grain.keys(ts): _*)
+      .agg(Calendar.bucketReturn(sf.r, compounded).as(sf.value), min(ts).as(sf.ts))
+    SeriesFrame(buckets.select(sf.keyCols ++ Seq(col(sf.ts), col(sf.value)): _*),
+      sf.keys, sf.ts, sf.value)
   }
 }

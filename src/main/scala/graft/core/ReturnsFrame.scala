@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.SeriesAgg
+
 /** Normalized view of a "returns frame": the reference's single table shape —
   * any numeric column is a return series, at most one temporal column is the
   * time axis (reference: alphastats/_utils.py:10-22).
@@ -11,6 +13,8 @@ import org.apache.spark.sql.types._
   * Normalization applied once at construction: NaN → null on every
   * floating-point column, so "missing" is uniformly null and every aggregate
   * skips it (reference: alphastats/_utils.py:34 `fill_nan(None)`).
+  * A metric is one aggregate per column ([[aggAll]]) or one aggregation per
+  * column over the [[long]] view, the only wide → long melt.
   */
 final class ReturnsFrame private (
     val df: DataFrame,
@@ -25,26 +29,11 @@ final class ReturnsFrame private (
   def aggAll(f: Column => Column): DataFrame =
     df.select(numericCols.map(c => f(col(c)).as(c)): _*)
 
-  /** Per-column aggregates where the builder also needs the column NAME
-    * (e.g. to alias interior window columns uniquely).
-    */
-  def aggAllNamed(f: (Column, String) => Column): DataFrame =
-    df.select(numericCols.map(c => f(col(c), c).as(c)): _*)
-
-  /** (frame-with-order-column, order column). Uses the temporal column when
-    * present; otherwise falls back to ingestion order via
-    * monotonically_increasing_id — the reference relies on implicit row
-    * order for its no-temporal path, which only exists at driver scale.
-    */
-  def withOrder: (DataFrame, Column) = temporalCol match {
-    case Some(t) => (df, col(t))
-    case None => (df.withColumn(ReturnsFrame.RowIdx, monotonically_increasing_id()),
-      col(ReturnsFrame.RowIdx))
-  }
+  /** The long view of every numeric column ([[ReturnsFrame.long]]). */
+  def long(extra: Column*): DataFrame = ReturnsFrame.long(df, numericCols, temporalCol, extra: _*)
 }
 
 object ReturnsFrame {
-  val RowIdx = "__graft_row_idx"
   val BenchmarkCol = "_benchmark_returns"
 
   private def isTemporal(dt: DataType): Boolean = dt match {
@@ -83,5 +72,25 @@ object ReturnsFrame {
         new ReturnsFrame(rf.df.select(cols: _*), Seq(BenchmarkCol), rf.temporalCol)
       case many => throw AmbiguousBenchmarkReturnsError(many)
     }
+  }
+
+  /** The long view of a normalized wide frame: one row per (row of `df`,
+    * column of `assets`) with the `time` column (if any); `__ord`, the
+    * [[SeriesAgg.orderKey]] of `time`, else the ingestion id (the reference's
+    * implicit row order); `__u`, a tie-break unique per row of `df`; the
+    * `extra` columns; `__asset`, the column's name; and `__r`, its value as a
+    * double. `__ord` and `__u` are fixed in a projection below the melt (in
+    * the melt's own, an id is drawn per output row), so a row's assets share
+    * them: a pivot on the pair restores the wide rows.
+    */
+  private[graft] def long(df: DataFrame, assets: Seq[String], time: Option[String],
+      extra: Column*): DataFrame = {
+    val ord = time.fold(monotonically_increasing_id())(t =>
+      SeriesAgg.orderKey(col(t), df.schema(t).dataType))
+    val keyed = df.select(time.map(col).toSeq ++
+      Seq(ord.as("__ord"), monotonically_increasing_id().as("__u")) ++ extra ++ assets.map(col): _*)
+    val melt = explode(map(assets.flatMap(c => Seq(lit(c), col(c).cast("double"))): _*))
+    keyed.select(keyed.columns.toSeq.filterNot(assets.contains).map(col) :+
+      melt.as(Seq("__asset", "__r")): _*)
   }
 }

@@ -10,6 +10,7 @@ import graft.api.{GroupedStats, SeriesFrame}
 import graft.core.{AsOfJoin, Dist, Exprs}
 import graft.core.Exprs.fdiv
 import graft.functions.GraftProduct.product
+import graft.stats.Calendar
 
 /** The driver-facing query suite: every entry is a library-API Spark query
   * over `/root/testdata` parquet plus an equivalent ANSI SQL oracle for
@@ -336,8 +337,7 @@ object Queries {
 
   def q10Monthly(spark: SparkSession, sfDir: String): DataFrame = {
     val sf = assetReturns(spark, sfDir)
-    val monthly = GroupedStats.calendarReturns(sf,
-      Seq(t => year(t), t => month(t)), compounded = true)
+    val monthly = GroupedStats.calendarReturns(sf, Calendar.Grain.Month, compounded = true)
     finish(GroupedStats.aggregate(monthly, Seq(
       "best_month" -> (r => max(r)),
       "worst_month" -> (r => min(r)),

@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.core.{Dist, Eager, EmptyReturnsError, Exprs, ReturnsFrame}
-import graft.functions.GraftProduct.product
 import graft.functions.SeriesAgg
 import graft.stats.Calendar
 
@@ -28,11 +27,10 @@ import graft.stats.Calendar
   *
   * Execution is restructured Spark-first (SURVEY.md §3 note): instead of the
   * reference's ~40 sequential one-metric queries per column, the prepared
-  * frame is cached once and melted into the long format of
-  * [[graft.api.GroupedStats]] — one row per (date, asset), the benchmark
-  * return riding along on every row — and every metric is a per-asset
-  * aggregate over that view. A report is three passes whose plans do not
-  * grow with the column count:
+  * frame is cached once and melted by `ReturnsFrame.long` — one row per
+  * (date, asset), the benchmark return riding along on every row — and
+  * every metric is a per-asset aggregate over that view. A report is three
+  * passes whose plans do not grow with the column count:
   *  - P0, one driver round trip: row count, latest date and the null-aware
   *    start/end date per asset (the latest date fixes the trailing-window
   *    literals of the next pass);
@@ -41,8 +39,8 @@ import graft.stats.Calendar
   *    episodes, sign runs, lag-1 pairs, CVaR) through one
   *    [[graft.functions.SeriesAgg]] that walks each asset's series in order
   *    — one exchange, no window and no sort operator;
-  *  - the calendar pass: ONE grouping-sets aggregation keyed on
-  *    (asset, year, month) / (asset, year, quarter) / (asset, year), then
+  *  - the calendar pass: ONE grouping-sets aggregation keyed on the asset
+  *    and the month, quarter and year buckets of [[Calendar.Grain]], then
   *    one per-asset aggregation of the bucket returns.
   * The per-asset and calendar passes are independent, so they run at once
   * ([[graft.core.Eager]]); both read the cache P0 has already built. The
@@ -122,21 +120,16 @@ object Reports {
       benchName: Option[String], rf: Double, full: Boolean, sep: Boolean,
       compounded: Boolean, periodsPerYear: Int, pct: Double): Seq[(String, Map[String, Any])] = {
     val t = temporal.map(col).orNull
-    val ord: Column = temporal.fold(monotonically_increasing_id())(c =>
-      SeriesAgg.orderKey(col(c), frame.schema(c).dataType))
 
-    // ---- the long view: one row per (date, asset) with the raw return
-    // `__x`, its zero-filled twin `__r` (reports.py:378), the zero-filled
-    // benchmark return `__b` (a typed null without a benchmark), and the
-    // series order: the long key `__ord` and the row's unique tie-break
-    // `__u`. Not cached: it is a projection of the cached frame ----
-    val long = frame.select(temporal.map(col).toSeq ++ Seq(
-      ord.as("__ord"),
-      monotonically_increasing_id().as("__u"),
+    // ---- the long view (`ReturnsFrame.long`): one row per (date, asset)
+    // with the series order `__ord`/`__u`, the zero-filled benchmark return
+    // `__b` (a typed null without a benchmark), the raw return, renamed
+    // `__x`, and its zero-filled twin `__r` (reports.py:378). Not cached: it
+    // is a projection of the cached frame ----
+    val long = ReturnsFrame.long(frame, names, temporal,
       benchName.fold(lit(null).cast("double"))(bn =>
-        coalesce(col(bn).cast("double"), lit(0.0))).as("__b"),
-      explode(map(names.flatMap(n => Seq(lit(n), col(n).cast("double"))): _*))
-        .as(Seq("__asset", "__x"))): _*)
+        coalesce(col(bn).cast("double"), lit(0.0))).as("__b"))
+      .withColumnRenamed("__r", "__x")
       .withColumn("__r", coalesce(col("__x"), lit(0.0)))
 
     // ---- P0: row count, latest date and the start/end dates per asset
@@ -306,11 +299,6 @@ object Reports {
       periodsPerYear: Int): Map[String, Row] = {
     val r = col("__r")
     val b = col("__b")
-    def condProd(cond: Column): Column =
-      product(when(cond, r + lit(1.0)).otherwise(lit(1.0))) - lit(1.0)
-    def condCagr(cond: Column): Column =
-      pow(product(when(cond, r + lit(1.0)).otherwise(lit(1.0))),
-        lit(periodsPerYear.toDouble) / sum(when(cond, 1).otherwise(0))) - lit(1.0)
     val scalars = Seq(
       Exprs.exposure(r).as("exposure"),
       Exprs.comp(r).as("comp"),
@@ -343,17 +331,21 @@ object Reports {
       max(r).as("best"),
       min(r).as("worst"),
       count(r).as("count"))
+    // the trailing windows: the wide API's period comp and CAGR
+    // (`Calendar.periodComp`/`periodCagr`) over the returns inside the window
     val trailing = maxRawOpt.toSeq.flatMap { mx =>
-      def within(p: Calendar.Period): Column = Calendar.within(t, p, mx)
+      def within(p: Calendar.Period): Column = when(Calendar.within(t, p, mx), r)
+      def cagr(p: Calendar.Period): Column =
+        Exprs.cagr(within(p), 0.0, compound = true, periodsPerYear)
       Seq(
-        condProd(within(Calendar.Mtd)).as("mtd"),
-        condProd(within(Calendar.Months(3))).as("m3"),
-        condProd(within(Calendar.Months(6))).as("m6"),
-        condProd(within(Calendar.Ytd)).as("ytd"),
-        condProd(within(Calendar.Years(1))).as("y1"),
-        condCagr(within(Calendar.Years(3))).as("y3"),
-        condCagr(within(Calendar.Years(5))).as("y5"),
-        condCagr(within(Calendar.Years(10))).as("y10"))
+        Exprs.comp(within(Calendar.Mtd)).as("mtd"),
+        Exprs.comp(within(Calendar.Months(3))).as("m3"),
+        Exprs.comp(within(Calendar.Months(6))).as("m6"),
+        Exprs.comp(within(Calendar.Ytd)).as("ytd"),
+        Exprs.comp(within(Calendar.Years(1))).as("y1"),
+        cagr(Calendar.Years(3)).as("y3"),
+        cagr(Calendar.Years(5)).as("y5"),
+        cagr(Calendar.Years(10)).as("y10"))
     }
     val benchmarked = if (benchName.isEmpty) Nil else Seq(
       Exprs.rSquared(r, b).as("r2"),
@@ -399,23 +391,26 @@ object Reports {
         ("besty", (c: Column) => max(c), true),
         ("worsty", (c: Column) => min(c), true),
         ("winy", Exprs.winRate: Column => Column, true))
-    // grouping ids over (asset, y, m, q): (asset, y, m) -> 1,
-    // (asset, y, q) -> 2, (asset, y) -> 3; each final reads only its
-    // grain's buckets through `when(gid = grain)` (every final skips nulls)
-    val finals = Seq(1 -> monthlyFinals, 2 -> quarterlyFinals, 3 -> yearlyFinals)
-    val all = finals.flatMap(_._2)
+    val grains = Seq(Calendar.Grain.Month -> monthlyFinals,
+      Calendar.Grain.Quarter -> quarterlyFinals, Calendar.Grain.Year -> yearlyFinals)
+    val all = grains.flatMap(_._2)
     val r = col("__r")
-    val bucketVals =
-      (if (all.exists(_._3)) Seq(Exprs.comp(r).as("__c")) else Nil) ++
-        (if (all.exists(!_._3)) Seq(sum(r).as("__s")) else Nil)
-    val (asset, y, m, q) = (col("__asset"), col("__y"), col("__m"), col("__q"))
-    val sets = Seq(Seq(asset, y, m)) ++ (if (full) Seq(Seq(asset, y, q), Seq(asset, y)) else Nil)
-    val buckets = long.withColumn("__y", year(t)).withColumn("__m", month(t))
-      .withColumn("__q", quarter(t))
-      .groupingSets(sets, asset, y, m, q)
+    val bucketVals = Seq(true -> "__c", false -> "__s").collect {
+      case (comp, n) if all.exists(_._3 == comp) => Calendar.bucketReturn(r, comp).as(n)
+    }
+    // one grouping set per grain in use over (asset, every grain's keys): a
+    // grain's grouping id sets the bit of each key it does not group by, and
+    // each final reads only its grain's buckets through `when(gid = grain)`
+    // (every final skips nulls)
+    val parts = grains.flatMap(_._1.parts).distinctBy(_._1)
+    def gid(g: Calendar.Grain): Int =
+      parts.foldLeft(0)((id, p) => 2 * id + (if (g.names.contains(p._1)) 0 else 1))
+    val sets = grains.collect { case (g, fs) if fs.nonEmpty => ("__asset" +: g.names).map(col) }
+    val buckets = long.select(col("__asset") +: r +: parts.map { case (n, f) => f(t).as(n) }: _*)
+      .groupingSets(sets, ("__asset" +: parts.map(_._1)).map(col): _*)
       .agg(grouping_id().as("__gid"), bucketVals: _*)
-    val aggs = finals.flatMap { case (gid, fs) => fs.map { case (k, f, comp) =>
-      f(when(col("__gid") === gid, col(if (comp) "__c" else "__s"))).as(k)
+    val aggs = grains.flatMap { case (g, fs) => fs.map { case (k, f, comp) =>
+      f(when(col("__gid") === gid(g), col(if (comp) "__c" else "__s"))).as(k)
     } }
     byAsset(buckets, aggs)
   }

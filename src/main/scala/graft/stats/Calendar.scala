@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
 import graft.core.{Exprs, ReturnsFrame}
 
 /** Calendar bucketing (`_simple_returns`) and trailing/period windows
-  * (reference: alphastats/stats.py:736-774, 1650-1738).
+  * (reference: alphastats/stats.py:736-774, 1650-1738). The bucket keys of
+  * every calendar grain ([[Grain]]) and the trailing-period predicate
+  * ([[within]]) are built here only: the wide API, `Reports` and
+  * `GroupedStats.calendarReturns` share them.
   */
 object Calendar {
 
@@ -19,6 +22,42 @@ object Calendar {
   final case class Months(n: Int) extends Period
   final case class Years(n: Int) extends Period
   case object All extends Period
+
+  /** A calendar bucket grain: the named date parts that key its buckets,
+    * (year, week of year), (year, month), (year, quarter) or (year) — the
+    * reference's `_simple_returns` groupings (alphastats/stats.py:736-774).
+    */
+  sealed abstract class Grain(val parts: (String, Column => Column)*) {
+    def names: Seq[String] = parts.map(_._1)
+    /** The bucket keys of temporal column `t`, each named after its part. */
+    def keys(t: Column): Seq[Column] = parts.map { case (n, f) => f(t).as(n) }
+  }
+
+  object Grain {
+    private val yearKey = "__year" -> (year _)
+    case object Week extends Grain(yearKey, "__week" -> (weekofyear _))
+    case object Month extends Grain(yearKey, "__month" -> (month _))
+    case object Quarter extends Grain(yearKey, "__quarter" -> (quarter _))
+    case object Year extends Grain(yearKey)
+
+    /** The reference's `aggregate` argument as a grain; None — no
+      * re-bucketing — for none, a daily one or one it does not name
+      * (alphastats/stats.py:736-774).
+      */
+    def parse(aggregate: Option[String]): Option[Grain] =
+      aggregate.map(_.toLowerCase).flatMap { k =>
+        if (k.contains("day")) None
+        else if (k.contains("week") || Set("w", "eow")(k)) Some(Week)
+        else if (k.contains("month") || Set("m", "me", "eom")(k)) Some(Month)
+        else if (k.contains("quarter") || Set("q", "qe", "eoq")(k)) Some(Quarter)
+        else if (Set("y", "ye", "eoy", "year", "yearly", "annual")(k)) Some(Year)
+        else None
+      }
+  }
+
+  /** One bucket's return: compounded Π(1+r) − 1, or the plain sum. */
+  private[graft] def bucketReturn(r: Column, compounded: Boolean): Column =
+    if (compounded) Exprs.comp(r) else sum(r)
 
   /** Re-bucket per-period returns into calendar buckets, comp-or-sum per
     * column; buckets emit in FIRST-APPEARANCE order of the input rows —
@@ -30,34 +69,20 @@ object Calendar {
   def simpleReturns(rfm: ReturnsFrame, aggregate: Option[String],
       compounded: Boolean): DataFrame = {
     val numericSel = rfm.numericCols.map(col)
-    aggregate.map(_.toLowerCase) match {
+    Grain.parse(aggregate) match {
       case None => rfm.df.select(numericSel: _*)
-      case Some(k) if k.contains("day") => rfm.df.select(numericSel: _*)
-      case Some(k) =>
-        val t = col(rfm.requireTemporal)
-        val groupCols: Option[Seq[Column]] =
-          if (k.contains("week") || Set("w", "eow")(k)) Some(Seq(year(t), weekofyear(t)))
-          else if (k.contains("month") || Set("m", "me", "eom")(k)) Some(Seq(year(t), month(t)))
-          else if (k.contains("quarter") || Set("q", "qe", "eoq")(k)) Some(Seq(year(t), quarter(t)))
-          else if (Set("y", "ye", "eoy", "year", "yearly", "annual")(k)) Some(Seq(year(t)))
-          else None
-        groupCols match {
-          case None => rfm.df.select(numericSel: _*)
-          case Some(gc) =>
-            val keyNames = gc.indices.map(i => s"__bucket_$i")
-            // physical-row ordinal (partition-ordered monotonic id): its
-            // per-bucket minimum IS the first-appearance index
-            val keyed = rfm.df.withColumn("__appear", monotonically_increasing_id())
-              .select(gc.zip(keyNames).map { case (c, n) => c.as(n) } ++
-                numericSel :+ col("__appear"): _*)
-            val aggExprs = (rfm.numericCols.map { c =>
-              (if (compounded) Exprs.comp(col(c)) else sum(col(c))).as(c)
-            }) :+ min(col("__appear")).as("__first")
-            keyed.groupBy(keyNames.map(col): _*)
-              .agg(aggExprs.head, aggExprs.tail: _*)
-              .orderBy(col("__first"))
-              .select(numericSel: _*)
-        }
+      case Some(grain) =>
+        val keys = grain.keys(col(rfm.requireTemporal))
+        // physical-row ordinal (partition-ordered monotonic id): its
+        // per-bucket minimum IS the first-appearance index
+        val keyed = rfm.df.withColumn("__appear", monotonically_increasing_id())
+          .select(keys ++ numericSel :+ col("__appear"): _*)
+        val aggExprs = rfm.numericCols.map(c => bucketReturn(col(c), compounded).as(c)) :+
+          min(col("__appear")).as("__first")
+        keyed.groupBy(grain.names.map(col): _*)
+          .agg(aggExprs.head, aggExprs.tail: _*)
+          .orderBy(col("__first"))
+          .select(numericSel: _*)
     }
   }
 

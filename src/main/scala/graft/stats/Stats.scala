@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 
+import graft.api.{GroupedStats, SeriesFrame}
 import graft.core.{AsOfJoin, Dist, Exprs, ReturnsFrame}
 import graft.functions.SeriesAgg
 
@@ -24,9 +25,10 @@ import graft.functions.SeriesAgg
   *    the returns aligned to the benchmark ([[vsBenchmark]]);
   *  - the ordered metrics — the drawdown family, CVaR, streaks, drawdown
   *    episodes, the autocorrelation penalty and the smart ratios — are one
-  *    per-asset [[graft.functions.SeriesAgg]] over the melted frame
-  *    ([[series]]), run eagerly: the N per-asset results are collected and
-  *    returned as a 1-row local frame.
+  *    per-asset [[graft.functions.SeriesAgg]] over the frame's long view
+  *    (`ReturnsFrame.long`, one row per (row, column); [[series]]), run
+  *    eagerly: the N per-asset results are collected and returned as a
+  *    1-row local frame.
   * Only [[toDrawdowns]] (row-level output) still runs ordered windows. This
   * wide API mirrors the reference's one-column-per-asset model; the scale
   * path for many assets is [[graft.api.GroupedStats]] (long format,
@@ -44,8 +46,6 @@ object Stats {
       case null => Double.NaN
     }
   }
-
-  def scalarLong(res: DataFrame): Long = res.head().getLong(0)
 
   // ---- core return / risk -------------------------------------------------
 
@@ -183,18 +183,20 @@ object Stats {
 
   // ---- drawdowns ----------------------------------------------------------
 
-  /** Shape-preserving returns→drawdowns transform (reference: alphastats/stats.py:388-416). */
+  /** Shape-preserving returns→drawdowns transform (reference: alphastats/stats.py:388-416):
+    * the long view's running drawdowns, pivoted back to the input rows on
+    * (`__ord`, `__u`). Only the temporal and numeric columns are kept.
+    */
   def toDrawdowns(returns: DataFrame): DataFrame = {
     val rfm = ReturnsFrame(returns)
-    val (ddDf, ddName) = withDrawdownCols(rfm)
-    // output = the returns-frame data model (temporal + numeric columns, in
-    // input order); any other column has no per-row identity through the
-    // melt/pivot and is dropped
+    val order = Seq(col("__ord"), col("__u"))
+    val long = rfm.long().withColumn("__k", struct(order: _*))
+    val dd = GroupedStats.withDrawdown(SeriesFrame(long, Seq("__asset"), "__k", "__r")).df
     val kept = rfm.df.columns.filter(c =>
       rfm.numericCols.contains(c) || rfm.temporalCol.contains(c))
-    ddDf.orderBy(col("__ord")).select(kept.map { c =>
-      if (rfm.numericCols.contains(c)) col(ddName(c)).as(c) else col(c)
-    }.toSeq: _*)
+    dd.groupBy(rfm.temporalCol.map(col).toSeq ++ order: _*)
+      .pivot("__asset", rfm.numericCols).agg(first(col("__dd")))
+      .orderBy(order: _*).select(kept.map(col).toSeq: _*)
   }
 
   def maxDrawdown(returns: DataFrame): DataFrame =
@@ -331,24 +333,9 @@ object Stats {
       b / s.penalty
     }
 
-  /** Melted (asset, ord, value) view of a wide frame — the internal long
-    * format that turns N columns into N window partitions (the 100-TB shape;
-    * SURVEY.md §7.1). `__ord` is a (order, uid) struct so duplicate
-    * timestamps keep distinct row identity through groupBy/pivot round
-    * trips.
-    */
-  private[graft] def melted(rfm: ReturnsFrame): graft.api.SeriesFrame = {
-    val (odf, ord) = rfm.withOrder
-    val stacked = odf.select(
-      struct(ord.as("o"), monotonically_increasing_id().as("u")).as("__ord"),
-      explode(map(rfm.numericCols.flatMap(c =>
-        Seq(lit(c), col(c).cast("double"))): _*)).as(Seq("__asset", "__r")))
-    graft.api.SeriesFrame(stacked, Seq("__asset"), "__ord", "__r")
-  }
-
   /** Every ordered per-asset metric of every numeric column, collected as
     * column → (result, `plain` aggregates of its returns, NaN where null):
-    * melt → `groupBy(asset).agg(SeriesAgg, plain)`. A column without rows,
+    * long view → `groupBy(asset).agg(SeriesAgg, plain)`. A column without rows,
     * i.e. of an empty frame, gets `Result.empty` and NaN aggregates. Every
     * caller without `plain` runs this same plan on a frame — `rz` lives in
     * the aggregate instance and every other parameter in the caller's
@@ -357,12 +344,10 @@ object Stats {
     */
   private def series(rfm: ReturnsFrame, rz: Double = SeriesAgg.Z05,
       plain: Seq[Column => Column] = Nil): Map[String, (SeriesAgg.Result, Seq[Double])] = {
-    val ordType = rfm.temporalCol.map(t => rfm.df.schema(t).dataType)
-    val o = col("__ord")
     val r = col("__r")
-    val agg = SeriesAgg(SeriesAgg.span(ordType), rz)(
-      SeriesAgg.orderKey(o.getField("o"), ordType.getOrElse(LongType)), o.getField("u"), r)
-    melted(rfm).df.groupBy(col("__asset")).agg(agg, plain.map(_(r).cast("double")): _*).collect()
+    val agg = SeriesAgg(SeriesAgg.span(rfm.temporalCol.map(rfm.df.schema(_).dataType)), rz)(
+      col("__ord"), col("__u"), r)
+    rfm.long().groupBy(col("__asset")).agg(agg, plain.map(_(r).cast("double")): _*).collect()
       .map(row => row.getString(0) -> ((SeriesAgg.Result(row.getStruct(1)),
         plain.indices.map(i => if (row.isNullAt(i + 2)) Double.NaN else row.getDouble(i + 2)))))
       .toMap.withDefaultValue((SeriesAgg.Result.empty, plain.map(_ => Double.NaN)))
@@ -385,23 +370,6 @@ object Stats {
   private def ordered(rfm: ReturnsFrame, rz: Double = SeriesAgg.Z05)(
       metric: SeriesAgg.Result => Option[Double]): DataFrame =
     seriesRow(rfm, DoubleType, nullable = true, rz)(c => metric(c._1).map(Double.box).orNull)
-
-  /** Appends `__dd_<c>` drawdown columns for every numeric column via the
-    * melted frame, then a pivot on the row ordinal restores the wide shape
-    * (the row-level form [[toDrawdowns]] returns).
-    */
-  private def withDrawdownCols(rfm: ReturnsFrame): (DataFrame, String => String) = {
-    val dd = graft.api.GroupedStats.withDrawdown(melted(rfm)).df
-    val pivoted = dd.groupBy(col("__ord"))
-      .pivot("__asset", rfm.numericCols)
-      .agg(first(col("__r")).as("r"), first(col("__dd")).as("dd"))
-    // __ord kept so toDrawdowns can re-sort
-    val restored = pivoted.select(
-      (col("__ord") +: rfm.temporalCol.map(t => col("__ord").getField("o").as(t)).toSeq) ++
-        rfm.numericCols.map(c => pivoted(s"${c}_r").as(c)) ++
-        rfm.numericCols.map(c => pivoted(s"${c}_dd").as(s"__dd_$c")): _*)
-    (restored, (c: String) => "__dd_" + c)
-  }
 
   /** Calendar-bucket pre-aggregation (reference `_simple_returns`,
     * alphastats/stats.py:736-774). Returns a ReturnsFrame over the bucketed

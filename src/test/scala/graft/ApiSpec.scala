@@ -80,6 +80,29 @@ class ApiSpec extends SparkSpec {
     }
   }
 
+  test("GroupedStats.calendarReturns output is a series every ordered op accepts") {
+    // each bucket's ts is its first date, so monthly buckets keep a date
+    // order: the streaks are the wide API's over the same month buckets
+    val rnd = new scala.util.Random(11)
+    val ds = (0 until 150).map(i =>
+      java.sql.Date.valueOf(java.time.LocalDate.of(2022, 11, 20).plusDays(i)))
+    val wide = ds.map(d => (d, rnd.nextGaussian() * 0.01, rnd.nextGaussian() * 0.01 + 0.001))
+      .toDF("date", "x", "y")
+    val monthly = graft.api.GroupedStats.calendarReturns(
+      graft.api.GroupedStats.fromWide(wide, "date"), graft.stats.Calendar.Grain.Month)
+    assert(monthly.df.schema(monthly.ts).dataType == org.apache.spark.sql.types.DateType)
+    val gs = graft.api.GroupedStats
+    Seq(gs.drawdownStats(monthly), gs.varCvar(monthly), gs.smartSharpe(monthly))
+      .foreach(df => assert(df.collect().length == 2))
+    val streaks = gs.streaks(monthly).collect().map(r => r.getAs[String]("asset") -> r).toMap
+    val wins = Stats.consecutiveWins(wide, Some("month")).head()
+    val losses = Stats.consecutiveLosses(wide, Some("month")).head()
+    Seq("x", "y").zipWithIndex.foreach { case (c, i) =>
+      assert(streaks(c).getAs[Long]("consecutive_wins") == wins.getLong(i), c)
+      assert(streaks(c).getAs[Long]("consecutive_losses") == losses.getLong(i), c)
+    }
+  }
+
   test("zero-variance benchmark yields non-finite beta without throwing") {
     val flat = dates(5).map(d => (d, 0.01)).toDF("date", "_benchmark_returns")
     val beta = Stats.greeks(simpleDf.select($"date", $"asset_a"), flat)

@@ -51,14 +51,22 @@ class PropertySpec extends SparkSpec {
   }
 
   test("wide and long paths agree on sharpe per asset") {
-    cases(6).foreach { rs =>
+    // fromWide normalizes as every Stats call does: a NaN is a missing
+    // return (alphastats/_utils.py:34), and a numeric time column is the
+    // series order, not an asset
+    val withNaN = cases(1).head.updated(1, Double.NaN)
+    (cases(6) :+ withNaN).foreach { rs =>
       val wide = dates(rs.length).zip(rs).toDF("date", "a1")
-      val long = GroupedStats.fromWide(wide, "date")
+      val byLongTime = rs.indices.map(_.toLong).zip(rs).toDF("t", "a1")
       val wideVal = scalar(Stats.sharpe(wide))
-      val longVal = GroupedStats.aggregate(long,
-        Seq("sharpe" -> (c => graft.core.Exprs.sharpe(c, 0.0, 252, annualize = true))))
-        .head().getDouble(1)
-      if (!(wideVal.isNaN && longVal.isNaN)) assertApprox(longVal, wideVal, 1e-12)
+      val longs = Seq(GroupedStats.fromWide(wide, "date"), GroupedStats.fromWide(byLongTime, "t"))
+      longs.foreach { long =>
+        val rows = GroupedStats.aggregate(long,
+          Seq("sharpe" -> (c => graft.core.Exprs.sharpe(c, 0.0, 252, annualize = true)))).collect()
+        assert(rows.map(_.getString(0)).toSeq == Seq("a1"), s"assets with ts ${long.ts}")
+        val longVal = rows.head.getDouble(1)
+        if (!(wideVal.isNaN && longVal.isNaN)) assertApprox(longVal, wideVal, 1e-12, s"$rs")
+      }
     }
   }
 

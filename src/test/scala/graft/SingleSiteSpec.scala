@@ -45,6 +45,12 @@ class SingleSiteSpec extends AnyFunSuite {
     assert(stray.isEmpty, stray.mkString("\n"))
   }
 
+  /** The returns modules: the wide API, the report, the long-format API
+    * and their shared core. */
+  private def inReturnsModules(site: String): Boolean =
+    Seq("stats/", "reports/", "api/", "core/")
+      .exists(d => site.startsWith(s"src/main/scala/graft/$d"))
+
   test("the scan sees the source tree") {
     assert(sources.size > 100)
   }
@@ -74,10 +80,29 @@ class SingleSiteSpec extends AnyFunSuite {
   test("benchmark-relative aggregates are built only in core/Exprs") {
     // the wide Stats calls, Reports and GroupedStats.benchmarked share one
     // formula set; the queries' DuckDB SQL spells these in upper case
-    val sites = sitesOf("""covar_samp\(|var_samp\(|\bcorr\(""").filter(site =>
-      Seq("stats/", "reports/", "api/", "core/").exists(d => site.startsWith(s"src/main/scala/graft/$d")))
+    val sites = sitesOf("""covar_samp\(|var_samp\(|\bcorr\(""").filter(inReturnsModules)
     assert(sites.exists(_.startsWith("src/main/scala/graft/core/Exprs.scala:")))
     assertOnlyIn(sites, "core/Exprs.scala")
+  }
+
+  test("wide frames are melted only by ReturnsFrame.long") {
+    // the wide API, Reports and GroupedStats.fromWide share one long view,
+    // so the NaN rule, the asset set and the row order cannot drift apart
+    val sites = sitesOf("""explode\(map\(""").filter(inReturnsModules)
+    assert(sites.nonEmpty)
+    assertOnlyIn(sites, "core/ReturnsFrame.scala")
+  }
+
+  test("calendar buckets and trailing windows are keyed only in stats/Calendar") {
+    // date parts, called (`year(t)`) or as function values (`year _`), live
+    // in Calendar.Grain's bucket keys and Calendar.within's trailing-period
+    // predicate; Calendar.simpleReturns, Reports' calendar pass and
+    // GroupedStats.calendarReturns all take their keys from Grain
+    val sites = sitesOf("""\b(?:weekofyear|quarter|year|month)(?:\(| _)""").filter(inReturnsModules)
+    assert(sites.exists(site => memberOf(site) == "Grain"))
+    assertOnlyIn(sites, "stats/Calendar.scala")
+    val stray = sites.filterNot(site => Set("Grain", "within")(memberOf(site)))
+    assert(stray.isEmpty, stray.map(site => s"$site in ${memberOf(site)}").mkString("\n"))
   }
 
   test("driver threads are started only by graft.core.Eager") {

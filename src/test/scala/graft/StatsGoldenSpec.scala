@@ -96,12 +96,25 @@ class StatsGoldenSpec extends SparkSpec {
   }
 
   test("to_drawdowns golden values (shape-preserving)") {
-    val dd = Stats.toDrawdowns(simpleSeries).collect().map(_.getDouble(0))
     val want = Seq(0.0, -0.020000000000000018, 0.0, -0.01000000000000012, 0.0)
-    dd.zip(want).foreach { case (a, w) => assertApprox(a, w, tol = 1e-9) }
-    val ddx = Stats.toDrawdowns(extremeSeries).collect().map(_.getDouble(0))
     val wantx = Seq(0.0, -0.8, -0.56, -0.956, -0.9428)
-    ddx.zip(wantx).foreach { case (a, w) => assertApprox(a, w, tol = 1e-9) }
+    def check(dd: Seq[Double], w: Seq[Double]): Unit = {
+      assert(dd.length == w.length, dd)
+      dd.zip(w).foreach { case (a, w) => assertApprox(a, w, tol = 1e-9) }
+    }
+    check(Stats.toDrawdowns(simpleSeries).collect().map(_.getDouble(0)).toSeq, want)
+    check(Stats.toDrawdowns(extremeSeries).collect().map(_.getDouble(0)).toSeq, wantx)
+    // both series as the columns of one frame, with and without a date: still
+    // one output row per input row, each column its own drawdowns
+    val both = dates(5).lazyZip(Seq(0.01, -0.02, 0.03, -0.01, 0.02))
+      .lazyZip(Seq(0.5, -0.8, 1.2, -0.9, 0.3)).toSeq.toDF("date", "s", "x")
+    Seq(both, both.drop("date")).foreach { df =>
+      val dd = Stats.toDrawdowns(df)
+      assert(dd.columns.toSeq == df.columns.toSeq)
+      val rows = dd.collect()
+      check(rows.map(_.getAs[Double]("s")).toSeq, want)
+      check(rows.map(_.getAs[Double]("x")).toSeq, wantx)
+    }
   }
 
   test("greeks without temporal (positional concat)") {
