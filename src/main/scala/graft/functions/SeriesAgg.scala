@@ -1,11 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Row}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.{udaf, unix_date, unix_micros}
-import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, LongType, ShortType,
-  TimestampNTZType, TimestampType}
+import java.nio.{ByteBuffer, ByteOrder}
+
+import org.apache.spark.sql.{Column, Encoders, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.trees.TernaryLike
+import org.apache.spark.sql.functions.{unix_date, unix_micros}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, IntegerType, LongType,
+  ShortType, TimestampNTZType, TimestampType}
+
+import graft.core.Bridge
 
 /** Every ordered per-series metric in ONE aggregate: one series' (order key,
   * return) rows are buffered, sorted, and walked once — the sequential loop
@@ -35,10 +41,19 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, Lo
   * by `ts`.
   *
   * Memory: the buffer holds the whole series, O(series length) per group
-  * per task, about 25 B per row (key, tie-break and return, 8 B each, and a
-  * flag byte) — the bound the exact `percentile` aggregates already have.
-  * Partial buffers are concatenated by `merge`; nothing is computed before
-  * `finish`, so map-side partial aggregation only moves rows.
+  * per task, 25 B per row (key, tie-break and return, 8 B each, and a flag
+  * byte) in primitive arrays — the bound the exact `percentile` aggregates
+  * already have. Partial buffers are concatenated by `merge`; nothing is
+  * computed before `finish`, so map-side partial aggregation only moves rows.
+  * A partial buffer crosses a shuffle as one byte array of 4 + 25·n bytes,
+  * column by column: `n` (int), the n keys, the n ties, the n returns (raw
+  * IEEE bits), the n flag bytes, little-endian. Like values sit side by
+  * side, so the shuffle's block compression packs them well.
+  *
+  * It is a Catalyst aggregate of its own ([[Agg]], a
+  * `TypedImperativeAggregate`): rows are read from the `InternalRow` into
+  * the buffer's arrays and the result is built as an `InternalRow`, with no
+  * encoder between them.
   */
 object SeriesAgg {
 
@@ -77,9 +92,6 @@ object SeriesAgg {
       s"order column $c has type ${dt.simpleString}; expected date, timestamp or an integral type")
   }
 
-  /** One row: order key (None sorts first), tie-break, return. */
-  final case class Obs(key: Option[Long], tie: Long, r: Option[Double])
-
   /** Buffered rows, column-wise; the first `n` slots are in use. `nulls`
     * holds bit 1 for a null key and bit 2 for a null return.
     */
@@ -94,12 +106,13 @@ object SeriesAgg {
       nulls = java.util.Arrays.copyOf(nulls, cap)
     }
 
-    def add(o: Obs): Unit = {
+    /** One row; a null key or return (`null` here) is stored as 0 and flagged. */
+    def add(key: Any, tie: Long, r: Any): Unit = {
       reserve(n + 1)
-      keys(n) = o.key.getOrElse(0L)
-      ties(n) = o.tie
-      rs(n) = o.r.getOrElse(0.0)
-      nulls(n) = ((if (o.key.isEmpty) 1 else 0) | (if (o.r.isEmpty) 2 else 0)).toByte
+      keys(n) = if (key == null) 0L else key.asInstanceOf[Long]
+      ties(n) = tie
+      rs(n) = if (r == null) 0.0 else r.asInstanceOf[Double]
+      nulls(n) = ((if (key == null) 1 else 0) | (if (r == null) 2 else 0)).toByte
       n += 1
     }
 
@@ -247,17 +260,74 @@ object SeriesAgg {
       if (k == 0) v else s / k
     }
 
-  /** @param span how episode lengths are measured
-    * @param rz the r-VaR multiplier, Φ⁻¹(1 − confidence) · sigma: VaR = mean + rz · std
+  /** The [[Result]] struct's type: the fields of [[Result]], a primitive
+    * field not null, an `Option` nullable.
     */
-  final class Agg(span: Span, rz: Double) extends Aggregator[Obs, Buf, Result] {
+  private lazy val resultType: DataType = Encoders.product[Result].schema
 
-    def zero: Buf = Buf(0, Array.emptyLongArray, Array.emptyLongArray,
+  /** The walk as a Catalyst aggregate: `update` appends one row of the
+    * children, `merge` concatenates, `eval` walks the series ([[finish]]).
+    *
+    * @param span how episode lengths are measured
+    * @param rz the r-VaR multiplier, Φ⁻¹(1 − confidence) · sigma: VaR = mean + rz · std
+    * @param key the long order key, null sorting first
+    * @param tie the long tie-break (a null one reads as 0)
+    * @param r the double return
+    */
+  final case class Agg(span: Span, rz: Double, key: Expression, tie: Expression, r: Expression,
+      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+      extends TypedImperativeAggregate[Buf] with TernaryLike[Expression] {
+
+    def first: Expression = key
+    def second: Expression = tie
+    def third: Expression = r
+    def nullable: Boolean = true
+    def dataType: DataType = resultType
+    override def prettyName: String = "series_agg"
+
+    def createAggregationBuffer(): Buf = Buf(0, Array.emptyLongArray, Array.emptyLongArray,
       Array.emptyDoubleArray, Array.emptyByteArray)
 
-    def reduce(b: Buf, o: Obs): Buf = { b.add(o); b }
+    def update(b: Buf, input: InternalRow): Buf = {
+      b.add(key.eval(input), tie.eval(input).asInstanceOf[Long], r.eval(input))
+      b
+    }
 
     def merge(a: Buf, b: Buf): Buf = { a.addAll(b); a }
+
+    /** The [[Result]] as an `InternalRow` of [[resultType]]. */
+    def eval(b: Buf): Any = new GenericInternalRow(finish(b).productIterator.map {
+      case Some(v) => v
+      case None => null
+      case v => v
+    }.toArray)
+
+    /** `n`, then the keys, ties, returns and flags, each column contiguous. */
+    def serialize(b: Buf): Array[Byte] = {
+      val n = b.n
+      val out = ByteBuffer.allocate(4 + 25 * n).order(ByteOrder.LITTLE_ENDIAN).putInt(n)
+      out.asLongBuffer.put(b.keys, 0, n)
+      out.position(4 + 8 * n).asLongBuffer.put(b.ties, 0, n)
+      out.position(4 + 16 * n).asDoubleBuffer.put(b.rs, 0, n)
+      out.position(4 + 24 * n).put(b.nulls, 0, n)
+      out.array
+    }
+
+    def deserialize(bytes: Array[Byte]): Buf = {
+      val in = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+      val n = in.getInt
+      val b = Buf(n, new Array[Long](n), new Array[Long](n), new Array[Double](n), new Array[Byte](n))
+      in.asLongBuffer.get(b.keys)
+      in.position(4 + 8 * n).asLongBuffer.get(b.ties)
+      in.position(4 + 16 * n).asDoubleBuffer.get(b.rs)
+      in.position(4 + 24 * n).get(b.nulls)
+      b
+    }
+
+    def withNewMutableAggBufferOffset(o: Int): Agg = copy(mutableAggBufferOffset = o)
+    def withNewInputAggBufferOffset(o: Int): Agg = copy(inputAggBufferOffset = o)
+    protected def withNewChildrenInternal(k: Expression, t: Expression, x: Expression): Agg =
+      copy(key = k, tie = t, r = x)
 
     def finish(b: Buf): Result = {
       val rm = new Moments
@@ -374,14 +444,12 @@ object SeriesAgg {
         rho = rho,
         penalty = penalty(m, rho))
     }
-
-    def bufferEncoder: Encoder[Buf] = ExpressionEncoder[Buf]()
-    def outputEncoder: Encoder[Result] = ExpressionEncoder[Result]()
   }
 
   /** The per-series results struct of `(key, tie, r)` rows, grouped by the
     * caller: `key` a long order key ([[orderKey]]), `tie` unique per row.
     */
   def apply(span: Span, rz: Double = Z05)(key: Column, tie: Column, r: Column): Column =
-    udaf(new Agg(span, rz)).apply(key, tie, r)
+    Bridge.column(Agg(span, rz, Bridge.expr(key.cast(LongType)), Bridge.expr(tie.cast(LongType)),
+      Bridge.expr(r.cast(DoubleType))).toAggregateExpression())
 }

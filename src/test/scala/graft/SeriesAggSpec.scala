@@ -162,6 +162,12 @@ class SeriesAggSpec extends SparkSpec {
 
   private val rz = -2.0
 
+  /** The walk's aggregate, its children unused: for calls on a buffer. */
+  private def walkAgg: SeriesAgg.Agg = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    SeriesAgg.Agg(SeriesAgg.Rows, rz, Literal(0L), Literal(0L), Literal(0.0))
+  }
+
   Seq((DateType, 1L, SeriesAgg.Days), (TimestampType, 86400L * 1000000L / 3, SeriesAgg.Micros))
     .foreach { case (axis, step, span) =>
       test(s"matches the serial reference on random ${axis.simpleString} series (nulls, -1, flat, ties)") {
@@ -402,8 +408,8 @@ class SeriesAggSpec extends SparkSpec {
   }
 
   test("an empty series gives nulls and zeros; an empty wide frame one row of them") {
-    val agg = new SeriesAgg.Agg(SeriesAgg.Rows, rz)
-    val zero = agg.finish(agg.zero)
+    val agg = walkAgg
+    val zero = agg.finish(agg.createAggregationBuffer())
     assert(zero.penalty.isNaN && SeriesAgg.Result.empty.penalty.isNaN)
     // NaN ≠ NaN: the rest compared with the penalty set aside
     assert(zero.copy(penalty = 0.0) == SeriesAgg.Result(0L, None, None, None, None, None, None, None,
@@ -436,18 +442,61 @@ class SeriesAggSpec extends SparkSpec {
 
   test("the ordered Stats metrics execute no Window and no Sort operator") {
     import graft.stats.Stats
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, ScalaAggregator}
     val calls: Seq[(String, DataFrame => DataFrame)] = Seq(
       "maxDrawdown" -> (Stats.maxDrawdown(_)),
       "serenityIndex" -> (Stats.serenityIndex(_)),
       "conditionalValueAtRisk" -> (Stats.conditionalValueAtRisk(_)),
       "consecutiveWins" -> (Stats.consecutiveWins(_)),
-      "longestDrawdownDays" -> (Stats.longestDrawdownDays(_)))
+      "longestDrawdownDays" -> (Stats.longestDrawdownDays(_)),
+      "GroupedStats.drawdownStats" -> (d => GroupedStats.drawdownStats(GroupedStats.fromWide(d, "date"))),
+      "Reports.metrics(full)" -> (graft.reports.Reports.metrics(_, mode = "full")))
     calls.foreach { case (name, f) =>
       val ops = Instrument.executedOperators(spark)(f(simpleDf).collect())
       assert(ops.exists(_.nodeName == "ObjectHashAggregate"), s"$name: ${ops.map(_.nodeName).distinct}")
       val bad = ops.filter(o => o.nodeName.contains("Window") || o.nodeName == "Sort")
       assert(bad.isEmpty, s"$name: ${bad.map(_.nodeName)}")
+      // the walk is a Catalyst aggregate of its own, not an Aggregator behind encoders
+      val wrapped = ops.collect { case a: ObjectHashAggregateExec => a.aggregateExpressions }.flatten
+        .map(_.aggregateFunction).filter(_.isInstanceOf[ScalaAggregator[_, _, _]])
+      assert(wrapped.isEmpty, s"$name: $wrapped")
     }
+  }
+
+  test("a partial buffer crosses a shuffle as 4 + 25·n bytes, every bit kept") {
+    import java.lang.Double.{doubleToRawLongBits, longBitsToDouble}
+    val agg = walkAgg
+    val rows: Seq[(Any, Long, Any)] = Seq(
+      (Long.MinValue, 3L, Double.NaN), (Long.MaxValue, -1L, -0.0), (null, Long.MinValue, 0.0),
+      (0L, Long.MaxValue, Double.PositiveInfinity), (-7L, 0L, Double.NegativeInfinity),
+      (42L, 5L, null), (null, 6L, null), (1L, 7L, longBitsToDouble(0x7ff8000000000abcL)),
+      (2L, 8L, Double.MinPositiveValue), (3L, 9L, -1.0))
+    val full = agg.createAggregationBuffer()
+    rows.foreach { case (k, t, r) => full.add(k, t, r) }
+    Seq(agg.createAggregationBuffer(), full).foreach { b =>
+      val bytes = agg.serialize(b)
+      assert(bytes.length == 4 + 25 * b.n)
+      // column by column, little-endian: n, keys, ties, return bits, flags
+      val le = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      val n = b.n
+      assert(le.getInt(0) == n)
+      (0 until n).foreach { i =>
+        assert(le.getLong(4 + 8 * i) == b.keys(i) && le.getLong(4 + 8 * (n + i)) == b.ties(i) &&
+          le.getLong(4 + 8 * (2 * n + i)) == doubleToRawLongBits(b.rs(i)) && bytes(4 + 24 * n + i) == b.nulls(i),
+          s"row $i")
+      }
+      val back = agg.deserialize(bytes)
+      assert(back.n == b.n)
+      assert(back.keys.take(b.n).toSeq == b.keys.take(b.n).toSeq)
+      assert(back.ties.take(b.n).toSeq == b.ties.take(b.n).toSeq)
+      assert(back.nulls.take(b.n).toSeq == b.nulls.take(b.n).toSeq)
+      assert(back.rs.take(b.n).map(doubleToRawLongBits).toSeq == b.rs.take(b.n).map(doubleToRawLongBits).toSeq)
+      // compared as text: NaN fields print alike
+      assert(agg.finish(back).toString == agg.finish(b).toString)
+    }
+    assert(full.n == rows.size)
+    assert(full.nulls.take(full.n).toSeq == rows.map { case (k, _, r) =>
+      ((if (k == null) 1 else 0) | (if (r == null) 2 else 0)).toByte })
   }
 
   test("the result does not depend on how rows are partitioned") {
