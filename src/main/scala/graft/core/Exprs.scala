@@ -1,7 +1,10 @@
 package graft.core
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 import graft.functions.GraftProduct.product
 
@@ -65,14 +68,23 @@ object Exprs {
   }
 
   /** IEEE-style division matching Polars float semantics regardless of the
-    * session's ANSI setting: x/0 → ±Inf, 0/0 → NaN, null propagates.
+    * session's ANSI setting: one Catalyst node, [[FDiv]], over `a` and `b`
+    * cast to double, that applies the scalar `fdiv` below to every row; a
+    * null on either side gives null. Each operand appears once in the tree,
+    * so a nested ratio does not copy its operands.
     */
-  def fdiv(a: Column, b: Column): Column =
-    when(b === 0.0,
-      when(a === 0.0, lit(Double.NaN))
-        .when(a > 0.0, lit(Double.PositiveInfinity))
-        .when(a < 0.0, lit(Double.NegativeInfinity)))
-      .otherwise(a / b)
+  def fdiv(a: Column, b: Column): Column = Bridge.column(FDiv(Bridge.expr(a), Bridge.expr(b)))
+
+  /** The one x/0 rule of the engine: b ≠ 0 gives a / b; b = ±0 gives NaN
+    * for a = ±0, −Inf for a < 0 and +Inf otherwise — a NaN `a` included, as
+    * Spark orders NaN above every double. `SeriesAgg` and `StreamOps` call
+    * it directly.
+    */
+  def fdiv(a: Double, b: Double): Double =
+    if (b != 0.0) a / b
+    else if (a == 0.0) Double.NaN
+    else if (a < 0.0) Double.NegativeInfinity
+    else Double.PositiveInfinity
 
   /** r − rf; rf == 0 means untouched (reference: alphastats/_utils.py:37-41). */
   def excess(r: Column, rf: Double): Column = if (rf == 0.0) r else r - lit(rf)
@@ -93,18 +105,22 @@ object Exprs {
   def expectedReturn(r: Column): Column =
     pow(product(r + lit(1.0)), lit(1.0) / count(r)) - lit(1.0)
 
-  /** `stddev_samp`, but exactly 0 for ≥ 2 non-null values that are all equal
-    * and finite. Spark merges per-partition partial moments, and the merged
-    * mean, (c/n)·n, can differ from c, which leaves a rounding residue in m2:
-    * a constant series spread over partitions reads σ ≈ 1e-19, and a ratio
-    * over it a huge finite number instead of ±Inf/NaN. n ≤ 1 stays null and
-    * NaN or infinite input NaN, as in `stddev_samp`.
+  /** Whether `x` has ≥ 2 non-null values that are all equal and finite.
+    * Spark merges per-partition partial moments, and the merged mean, (c/n)·n,
+    * can differ from c, which leaves a rounding residue in the second moments
+    * of such a constant series: spread over partitions it reads σ ≈ 1e-19,
+    * and a ratio over it a huge finite number instead of ±Inf/NaN. On one
+    * partition its second moments are exactly 0.
     */
-  def sampleStd(x: Column): Column = {
+  private def constant(x: Column): Column = {
     val lo = min(x)
-    when(count(x) > 1 && lo === max(x) && abs(lo) < lit(Double.PositiveInfinity), lit(0.0))
-      .otherwise(stddev_samp(x))
+    count(x) > 1 && lo === max(x) && abs(lo) < lit(Double.PositiveInfinity)
   }
+
+  /** `stddev_samp`, but exactly 0 for a [[constant]] `x`. n ≤ 1 stays null
+    * and NaN or infinite input NaN, as in `stddev_samp`.
+    */
+  def sampleStd(x: Column): Column = when(constant(x), lit(0.0)).otherwise(stddev_samp(x))
 
   def sharpe(r: Column, rf: Double, periods: Int, annualize: Boolean): Column = {
     val x = excess(r, rf)
@@ -143,14 +159,26 @@ object Exprs {
   // --- benchmark-relative (reference: alphastats/stats.py:419-579, 1398-1503) ---
   // `b` is the benchmark return aligned to `r` on the same row.
 
-  /** CAPM β = cov(r, b) / var(b). */
-  private[graft] def beta(r: Column, b: Column): Column = fdiv(covar_samp(r, b), var_samp(b))
+  /** CAPM β = cov(r, b) / var(b). A [[constant]] `b` gets the moments one
+    * partition gives it: var 0 and cov 0, so β = 0/0 = NaN (+Inf where a
+    * non-finite r makes cov NaN; null with fewer than two pairs).
+    */
+  private[graft] def beta(r: Column, b: Column): Column = {
+    val cov = covar_samp(r, b)
+    when(constant(b), fdiv(cov * lit(0.0), lit(0.0))).otherwise(fdiv(cov, var_samp(b)))
+  }
 
   /** CAPM α, annualized: (mean r − β · mean b) · periods. */
   private[graft] def alpha(r: Column, b: Column, periods: Int): Column =
     (avg(r) - beta(r, b) * avg(b)) * lit(periods)
 
-  private[graft] def correlation(r: Column, b: Column): Column = corr(r, b)
+  /** Pearson ρ. A [[constant]] `b` gets the null one partition gives it
+    * (Spark's 0 ÷ 0), or NaN where a non-finite r makes ρ NaN.
+    */
+  private[graft] def correlation(r: Column, b: Column): Column = {
+    val c = corr(r, b)
+    when(constant(b) && !isnan(c), lit(null)).otherwise(c)
+  }
 
   private[graft] def rSquared(r: Column, b: Column): Column = {
     val c = correlation(r, b)
@@ -261,4 +289,25 @@ object Exprs {
     val g2 = fdiv(m4, m2 * m2) - lit(3.0)
     fdiv(n - 1, (n - 2) * (n - 3)) * ((n + 1) * g2 + lit(6.0))
   }
+}
+
+/** [[Exprs.fdiv]] as a Catalyst expression: both eval paths call the scalar
+  * rule, and the analyzer casts a non-double operand to double.
+  */
+private[graft] final case class FDiv(left: Expression, right: Expression)
+    extends BinaryExpression with ImplicitCastInputTypes {
+
+  // inferred: the declared element type, AbstractDataType, is private to Spark
+  override def inputTypes = Seq(DoubleType, DoubleType)
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "graft_fdiv"
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    Exprs.fdiv(a.asInstanceOf[Double], b.asInstanceOf[Double])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.core.Exprs.fdiv($a, $b)")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): FDiv =
+    copy(left = l, right = r)
 }

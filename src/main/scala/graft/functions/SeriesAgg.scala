@@ -12,6 +12,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, Int
   ShortType, TimestampNTZType, TimestampType}
 
 import graft.core.Bridge
+import graft.core.Exprs.fdiv
 
 /** Every ordered per-series metric in ONE aggregate: one series' (order key,
   * return) rows are buffered, sorted, and walked once — the sequential loop
@@ -31,7 +32,7 @@ import graft.core.Bridge
   * ordering (NaN largest, −0 = 0), its update formulas for `avg`,
   * `stddev_samp` and `corr` applied in series order (so n ≤ 1 gives a null
   * σ and ρ, and zero variance a null ρ — Spark's x/0 — as there), and
-  * `Exprs.fdiv` division.
+  * division by `Exprs.fdiv`'s scalar rule, the one the column form evaluates.
   *
   * Order: the key ascending with null keys first, then the tie-break — the
   * order `orderBy(key, tie)` gives. The wide API and `Reports` pass a
@@ -222,12 +223,6 @@ object SeriesAgg {
 
   /** Spark's double order: NaN largest, −0 equal to 0. */
   private def cmp(x: Double, y: Double): Int = if (x == y) 0 else java.lang.Double.compare(x, y)
-
-  /** `Exprs.fdiv`: x/0 → ±Inf, 0/0 → NaN. */
-  private def fdiv(a: Double, b: Double): Double =
-    if (b == 0.0) { if (a == 0.0) Double.NaN else if (cmp(a, 0.0) > 0) Double.PositiveInfinity
-      else Double.NegativeInfinity }
-    else a / b
 
   /** Spark's `avg` and `stddev_samp` state, updated in input order. */
   private final class Moments {

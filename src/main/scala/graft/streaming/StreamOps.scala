@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.core.Exprs
+
 /** Structured Streaming operators over the `events` schema
   * (event_id, ts, user_id, event_type, value, props).
   *
@@ -921,18 +923,12 @@ object StreamOps {
                   "the feed must be per-asset chronological across batches")
             val w = s.wealth * (1.0 + row.r)
             val p = math.max(s.peak, w)
-            // batch twin: least(fdiv(wealth, peak) - 1, 0); peak can only be
-            // <= 0 if a return <= -100% drove wealth non-positive — fdiv's
-            // signed-infinity semantics reproduced for that degenerate case
-            val ratio =
-              if (p == 0.0) {
-                if (w == 0.0) Double.NaN
-                else if (w > 0.0) Double.PositiveInfinity
-                else Double.NegativeInfinity
-              } else w / p
+            // batch twin: least(fdiv(wealth, peak) - 1, 0), on the scalar
+            // rule the batch column evaluates; peak can only be <= 0 if a
+            // return <= -100% drove wealth non-positive.
             // Spark's least() orders NaN as the LARGEST double, so the batch
             // least(NaN, 0.0) = 0.0 — replicate, don't math.min (NaN-poisoning)
-            val x = ratio - 1.0
+            val x = Exprs.fdiv(w, p) - 1.0
             val dd = if (x.isNaN) 0.0 else math.min(x, 0.0)
             out += WealthOut(asset, row.d, row.r, w, p, dd)
             s = WealthState(w, p, row.d.getTime)

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+
 import graft.core.{AmbiguousBenchmarkReturnsError, NoReturnColumnError, ReturnsFrame}
 import graft.stats.Stats
 import graft.stats.Stats.scalar
@@ -56,28 +58,42 @@ class ApiSpec extends SparkSpec {
   test("wide benchmark calls agree with GroupedStats.benchmarked on equal dates") {
     // the same dates on both sides: the wide API's as-of join reduces to
     // GroupedStats' equi-join, so both paths aggregate the same (r, b) pairs
+    def agree(wide: DataFrame, bench: DataFrame, partitions: Option[Int], clue: String): Unit = {
+      val long = graft.api.GroupedStats.fromWide(wide, "date")
+      val spread = long.copy(df = partitions.fold(long.df)(n => long.df.repartition(n)))
+      val panel = graft.api.GroupedStats.benchmarked(spread, bench, "date", "benchmark")
+        .collect().map(r => r.getAs[String]("asset") -> r).toMap
+      val greeks = Stats.greeks(wide, bench).head()
+      val wideRows = Seq(
+        "information_ratio" -> Stats.informationRatio(wide, bench),
+        "correlation" -> Stats.correlation(wide, bench),
+        "r_squared" -> Stats.rSquared(wide, bench),
+        "treynor_ratio" -> Stats.treynorRatio(wide, bench)).map { case (k, df) => k -> df.head() }
+      def same(wideValue: Any, p: Row, k: String, c: String): Unit = {
+        val grouped = p.getAs[Any](k)
+        if (wideValue == null || grouped == null)
+          assert(wideValue == grouped, s"$clue $k $c: $wideValue vs $grouped")
+        else assertApprox(wideValue.asInstanceOf[Double], grouped.asInstanceOf[Double], 1e-12, s"$clue $k $c")
+      }
+      Seq("x", "y", "z").zipWithIndex.foreach { case (c, i) =>
+        val p = panel(c)
+        same(greeks.getStruct(i).get(0), p, "alpha", c)
+        same(greeks.getStruct(i).get(1), p, "beta", c)
+        wideRows.foreach { case (k, row) => same(row.get(i), p, k, c) }
+      }
+    }
     val rnd = new scala.util.Random(9)
     val ds = dates(60)
     val b = Seq.fill(60)(rnd.nextGaussian() * 0.01)
     val xs = Seq(0.5, 1.0, 1.5).map(beta => b.map(v => 0.0002 + beta * v + rnd.nextGaussian() * 0.005))
-    val wide = ds.indices.map(i => (ds(i), xs(0)(i), xs(1)(i), xs(2)(i))).toDF("date", "x", "y", "z")
-    val bench = ds.zip(b).toDF("date", "benchmark")
-    val panel = graft.api.GroupedStats.benchmarked(graft.api.GroupedStats.fromWide(wide, "date"),
-      bench, "date", "benchmark").collect().map(r => r.getAs[String]("asset") -> r).toMap
-    val greeks = Stats.greeks(wide, bench).head()
-    val wideRows = Seq(
-      "information_ratio" -> Stats.informationRatio(wide, bench),
-      "correlation" -> Stats.correlation(wide, bench),
-      "r_squared" -> Stats.rSquared(wide, bench),
-      "treynor_ratio" -> Stats.treynorRatio(wide, bench)).map { case (k, df) => k -> df.head() }
-    Seq("x", "y", "z").zipWithIndex.foreach { case (c, i) =>
-      val p = panel(c)
-      assertApprox(greeks.getStruct(i).getDouble(0), p.getAs[Double]("alpha"), 1e-12, s"alpha $c")
-      assertApprox(greeks.getStruct(i).getDouble(1), p.getAs[Double]("beta"), 1e-12, s"beta $c")
-      wideRows.foreach { case (k, row) =>
-        assertApprox(row.getDouble(i), p.getAs[Double](k), 1e-12, s"$k $c")
-      }
-    }
+    agree(ds.indices.map(i => (ds(i), xs(0)(i), xs(1)(i), xs(2)(i))).toDF("date", "x", "y", "z"),
+      ds.zip(b).toDF("date", "benchmark"), None, "random benchmark")
+    // a constant benchmark spread over partitions: merged partial moments
+    // must not leave a residue where one partition has exact zeros
+    val flat = dates(300)
+    val ys = Seq.fill(3)(Seq.fill(300)(rnd.nextGaussian() * 0.01))
+    agree(flat.indices.map(i => (flat(i), ys(0)(i), ys(1)(i), ys(2)(i))).toDF("date", "x", "y", "z"),
+      flat.map(d => (d, 0.0002)).toDF("date", "benchmark"), Some(3), "constant benchmark")
   }
 
   test("GroupedStats.calendarReturns output is a series every ordered op accepts") {

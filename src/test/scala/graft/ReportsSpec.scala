@@ -322,9 +322,9 @@ class ReportsSpec extends SparkSpec {
         matchDates = false, mode = "full").collect()
     }.map(_.collect { case node => node.expressions.map(_.collect {
       case a: AggregateExpression => a }.size).sum }.sum).sum
-    // measured: 444 without a benchmark, 483 with one — a change to a
+    // measured: 147 without a benchmark, 191 with one — a change to a
     // pass's expression list shows here before it shows in time
-    Seq(false -> 444, true -> 483).foreach { case (bench, measured) =>
+    Seq(false -> 147, true -> 191).foreach { case (bench, measured) =>
       val (a2, a10) = (aggExprs(2, bench), aggExprs(10, bench))
       info(s"aggregate expressions (benchmark=$bench): 2 columns -> $a2, 10 columns -> $a10")
       assert(a2 == a10, s"plan size grew with column count: $a2 -> $a10")

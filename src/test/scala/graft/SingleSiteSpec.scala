@@ -85,6 +85,16 @@ class SingleSiteSpec extends AnyFunSuite {
     assertOnlyIn(sites, "core/Exprs.scala")
   }
 
+  test("the x/0 rule is spelled only in core/Exprs") {
+    // Exprs.fdiv's scalar rule is the one IEEE division: the FDiv column,
+    // SeriesAgg's walk and StreamOps' wealth stream all call it; the only
+    // other +Inf is VectorExprs' initial nearest distance
+    val sites = sitesOf("""Double\.PositiveInfinity""").filter(_.startsWith("src/main/"))
+    assert(sites.exists(_.startsWith("src/main/scala/graft/core/Exprs.scala:")))
+    assert(sites.count(_.startsWith("src/main/scala/graft/functions/VectorExprs.scala:")) == 1, sites)
+    assertOnlyIn(sites, "core/Exprs.scala", "functions/VectorExprs.scala")
+  }
+
   test("wide frames are melted only by ReturnsFrame.long") {
     // the wide API, Reports and GroupedStats.fromWide share one long view,
     // so the NaN rule, the asset set and the row order cannot drift apart
